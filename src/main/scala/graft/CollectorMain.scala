@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{GraftConfig, JsonDecode, OffsetLedger}
@@ -16,8 +16,11 @@ import graft.streaming.IngestPipeline
   *  - `file` (default, and the only mode this container can run): a
   *    parquet directory at `GRAFT_SOURCE_DIR` stands in for the broker —
   *    the same downstream the reference's consumer feeds. The payload
-  *    schema is SAMPLED once per run ([[JsonDecode.inferSchema]], the
-  *    reference's one-shot per-topic detection `:172-220`), then the full
+  *    schema is SAMPLED once per run (the reference's one-shot per-topic
+  *    detection `:172-220`): a Kafka-envelope source is scanned once into
+  *    a persisted stride + per-(topic, partition) edge sample that both
+  *    codec detection and [[JsonDecode.inferSchemaOver]] read; a props
+  *    source goes through [[JsonDecode.inferSchemaSpread]]. Then the full
   *    stream decodes through codegen'd `from_json`.
   *  - `kafka`: `IngestPipeline.kafkaSource` with the config's brokers and
   *    fetch tuning; identical downstream. Needs a live broker.
@@ -28,6 +31,11 @@ import graft.streaming.IngestPipeline
   * ledger first and reports what a resume would skip;
   * `KAFKA_CLEANUP_ENABLED` is file-mode inert (documented — the KafkaTrim
   * binding needs a broker).
+  *
+  * After the drain, each table is counted once: the deferred audit's
+  * one `groupBy(keys).count` pass gives the lake's (rows, distinct keys),
+  * which validation reuses when the audit left the lake untouched, and
+  * the source takes one such pass too.
   *
   * Scale notes: every stage is a narrow map or a partitioned sink —
   * the only aggregates are the bounded ledger/validation summaries; the
@@ -54,12 +62,37 @@ object CollectorMain {
     finally spark.stop()
   }
 
+  /** Row count and distinct-key count of a table, from ONE
+    * `groupBy(keys).count` aggregation instead of a `count()` plus a
+    * `distinct().count()` pass. Grouping keeps `distinct()`'s null-key
+    * semantics: an all-null key is one group, where `count(DISTINCT …)`
+    * would skip it and report a lake holding one null-key row as a
+    * mismatch. */
+  private final case class KeyStats(rows: Long, groups: Long)
+
+  private def keyStats(df: DataFrame, keys: Seq[String]): KeyStats = {
+    require(keys.nonEmpty, "keyStats needs at least one key column")
+    val r = df.groupBy(keys.map(col): _*).count()
+      .agg(coalesce(sum(col("count")), lit(0L)), count(lit(1))).head()
+    KeyStats(r.getLong(0), r.getLong(1))
+  }
+
   /** Deferred (post-drain) dedup: one merge pass over the landed lake,
     * keep-first by (event_id, ts), stage-and-swap preserving the date
     * partitioning — the reference's staging+merge step; at scale this is
     * one key-partitioned shuffle of the NEW drain's partitions.
     *
-    * Two failure posures the swap must survive:
+    * Returns the lake's [[KeyStats]] when the lake was already clean and
+    * left untouched (validation reuses them instead of counting the
+    * unchanged lake again), None when it was rewritten.
+    *
+    * Three failure postures the swap must survive:
+    *  - A leftover `<dest>.old` from an earlier interrupted swap: Hadoop's
+    *    `rename(dest, old)` onto an existing non-empty directory moves the
+    *    lake INTO `old/lake` and returns true, after which the stale
+    *    `old/_schema` would replace this lake's lineage registry and the
+    *    delete of `old` would take the retained backup with it. The swap
+    *    refuses before any rename, with the lake untouched.
     *  - `FileSystem.rename` reports failure by RETURNING FALSE, not by
     *    throwing — every rename result is checked, and a failed second
     *    rename rolls the original lake back before aborting, so no
@@ -76,7 +109,7 @@ object CollectorMain {
     *    and subsequent drains both see the whole lake. */
   private def dedupLakeInPlace(spark: SparkSession, dest: String, compression: String,
                                keys: Seq[String] = Seq("event_id"),
-                               tsCol: String = "ts"): Unit = {
+                               tsCol: String = "ts"): Option[KeyStats] = {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -86,7 +119,13 @@ object CollectorMain {
     val cur = spark.read.parquet(dest)
     // skip the rewrite when the lake is already clean: the common resume
     // path then never touches the files or the sink metadata log
-    if (cur.count() == cur.select(keys.map(col): _*).distinct().count()) return
+    val stats = keyStats(cur, keys)
+    if (stats.rows == stats.groups) return Some(stats)
+    if (fs.exists(old))
+      throw new IllegalStateException(
+        s"dedup swap refused: $old exists (left by an earlier interrupted swap); " +
+          s"renaming $dest onto it would nest the lake inside it. Lake untouched; " +
+          s"inspect and remove $old, then re-run")
     // capture the sink log's latest batch id BEFORE the swap moves it
     val metaDir = new Path(destPath, "_spark_metadata")
     val latestBatch: Option[Long] =
@@ -131,6 +170,7 @@ object CollectorMain {
           s"$destPath/_schema returned false; backup retained at $old " +
           "(the swapped lake is intact and readable)")
     fs.delete(old, true)
+    None
   }
 
   /** The landed lake's payload-bearing schema, for the never-narrowing
@@ -196,70 +236,86 @@ object CollectorMain {
         Seq("kafka_topic", "kafka_partition", "kafka_offset", "kafka_timestamp",
           "kafka_key").forall(cols.contains)
     }
-    val usedPayloadSchema: org.apache.spark.sql.types.StructType = srcMode match {
+    // (payload schema, the deferred audit's key stats when it left the
+    // lake as it found it — the audit groups on the same keys validation
+    // uses, so validation reuses them instead of counting the unchanged
+    // lake again)
+    val (usedPayloadSchema, audited) = srcMode match {
       case "file" if isEnvelope(srcBatch.get) =>
         // KAFKA-ENVELOPE source: binary payloads under the 5-column
         // metadata envelope (the shape IngestPipeline.kafkaSource emits —
         // this file twin exercises the broker downstream byte-for-byte).
         // Per-topic codec detection runs ONCE over a deterministic
         // bounded sample, then the payload JSON schema is inferred from
-        // the SAME decoded sample — the reference's one-shot per-topic
+        // the SAME sample, decoded — the reference's one-shot per-topic
         // detection (:172-220) at Spark scale: bounded jobs before the
         // drain, zero per-row python-style try/except during it.
         //
-        // Sample coverage is GUARANTEED per (topic, partition): the
-        // offset stride alone (every 101st) misses topics whose live
-        // offset range contains no multiple of 101 — e.g. a
-        // retention-trimmed topic holding offsets 10050-10099 — which
-        // would mis-classify msgpack topics as JSON (full degrade to
-        // raw_value) and, on an empty global sample, crash the decode.
-        // So the stride unions with each (topic, partition)'s HEAD — the
-        // 64 rows at its min offset: one column-pruned map-side-combined
-        // aggregation plus a broadcast range join against it, both
-        // bounded by the topic-partition count, never the data. 64 rows
-        // per partition (not 1): a single-row sample also under-types the
-        // payload — msgpack renders the integral double 0.0 as "0", so a
-        // lone head row would infer a fractional field as long and every
-        // fractional row after it would degrade to raw_value.
+        // The sample is ONE scan of the source, persisted: every row on
+        // the offset stride (every 101st) or within 64 offsets of its
+        // (topic, partition)'s head or tail, tagged with which side(s) it
+        // is on. A message on both sides is one sample row (codec
+        // detection counts it once). Both consumers read the persisted
+        // rows, never the source again.
+        //
+        // Coverage is GUARANTEED per (topic, partition): the stride alone
+        // misses topics whose live offset range contains no multiple of
+        // 101 — e.g. a retention-trimmed topic holding offsets
+        // 10050-10099 — which would mis-classify msgpack topics as JSON
+        // (full degrade to raw_value) and, on an empty global sample,
+        // crash the decode. 64 rows per edge, not 1: a single-row sample
+        // under-types the payload (msgpack renders the integral double
+        // 0.0 as "0", so a lone head row would infer a fractional field
+        // as long and every fractional row after it would degrade to
+        // raw_value). Heads serve trimmed topics; tails see the NEWEST
+        // rows, where an evolved payload's new field first appears — a
+        // small incremental append can sit entirely between stride
+        // multiples. The offset bounds are one column-pruned
+        // map-side-combined aggregation, collected (O(topic-partitions)
+        // rows) so the sample plan joins a local relation instead of
+        // re-running the aggregate.
         val batch = srcBatch.get
-        val bounds = batch.groupBy(col("kafka_topic"), col("kafka_partition"))
+        val tp = Seq("kafka_topic", "kafka_partition")
+        val boundsAgg = batch.groupBy(tp.map(col): _*)
           .agg(min(col("kafka_offset")).as("_min_off"),
             max(col("kafka_offset")).as("_max_off"))
-        // heads AND tails (64 each): heads guarantee detection/typing for
-        // trimmed topics; tails see the NEWEST rows, where an evolved
-        // payload's new field first appears — a small incremental append
-        // can sit entirely between stride multiples
-        val edges = batch
-          .join(broadcast(bounds), Seq("kafka_topic", "kafka_partition"))
-          .where(col("kafka_offset") < col("_min_off") + 64 ||
-            col("kafka_offset") > col("_max_off") - 64)
-          .drop("_min_off", "_max_off")
-        val strided = batch.where(pmod(col("kafka_offset"), lit(101L)) === 0)
-        val sample = strided.unionByName(edges)
-        val formats = IngestPipeline.detectTopicFormats(sample)
-        println(s"[collector] detected topic formats: $formats")
+        val bounds = spark.createDataFrame(
+          java.util.Arrays.asList(boundsAgg.collect(): _*), boundsAgg.schema)
+        val sample = batch.join(broadcast(bounds), tp, "left")
+          .select(col("kafka_topic"), col("value"),
+            (pmod(col("kafka_offset"), lit(101L)) === 0).as("_stride"),
+            (col("kafka_offset") < col("_min_off") + 64 ||
+              col("kafka_offset") > col("_max_off") - 64).as("_edge"))
+          .where(col("_stride") || col("_edge"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val (formats, inferred) = try {
+          // codec detection sees the whole sample (one distributed
+          // aggregation; more evidence never hurts it) and materializes
+          // the persisted rows
+          val formats = IngestPipeline.detectTopicFormats(sample)
+          println(s"[collector] detected topic formats: $formats")
+          // Inference bounds the STRIDE side BEFORE the union (the
+          // inferSchemaSpread shape): a post-union limit fills from the
+          // union's first partitions — the stride — so on sources with
+          // ≥1000 stride hits the per-(topic, partition) head/tail rows
+          // would be starved out and a field first appearing in a recent
+          // high-offset append silently dropped forever. The edge side is
+          // already bounded by the topic-partition count. The limit
+          // applies to DECODED non-null payload texts, not raw envelope
+          // rows: a topic whose stride is mostly undecodable binary would
+          // otherwise spend the whole budget on rows inference's na.drop
+          // discards, shrinking the effective sample to the edges.
+          val strideTexts = IngestPipeline.envelopeJsonText(
+            sample.where(col("_stride")), formats).na.drop.limit(1000)
+          val edgeTexts = IngestPipeline.envelopeJsonText(
+            sample.where(col("_edge")), formats)
+          (formats, JsonDecode.inferSchemaOver(spark,
+            strideTexts.unionByName(edgeTexts), "_json"))
+        } finally sample.unpersist()
         // never-narrowing across incremental drains: widen this run's
         // inferred schema with every payload field the lake already
-        // landed (the envelope/derived columns are not payload).
-        // Inference bounds the STRIDE side BEFORE the union (the
-        // inferSchemaSpread shape): a post-union limit fills from the
-        // union's first partitions — the stride — so on sources with
-        // ≥1000 stride hits the per-(topic, partition) head/tail rows
-        // would be starved out and a field first appearing in a recent
-        // high-offset append silently dropped forever. The edge side is
-        // already bounded by the topic-partition count. The limit applies
-        // to DECODED non-null payload texts, not raw envelope rows: a
-        // topic whose stride is mostly undecodable binary would otherwise
-        // spend the whole budget on rows inference's na.drop discards,
-        // shrinking the effective sample to the edges. Codec detection
-        // above deliberately keeps the UNBOUNDED sample (one distributed
-        // aggregation; more evidence never hurts it).
-        val strideTexts = IngestPipeline.envelopeJsonText(strided, formats)
-          .na.drop.limit(1000)
-        val edgeTexts = IngestPipeline.envelopeJsonText(edges, formats)
-        val payloadSchema = JsonDecode.unionPayloadSchema(
-          JsonDecode.inferSchemaOver(spark,
-            strideTexts.unionByName(edgeTexts), "_json"),
+        // landed (the envelope/derived columns are not payload)
+        val payloadSchema = JsonDecode.unionPayloadSchema(inferred,
           landedSchema(spark, dest),
           batch.columns.toSet ++ Seq("date_path", "raw_value"))
         // the reference's dedup key for broker streams is the message
@@ -269,20 +325,20 @@ object CollectorMain {
         // events path below: false = inline keeper during the drain,
         // true = one deferred merge pass
         val envKeys = Seq("kafka_topic", "kafka_partition", "kafka_offset")
-        if (!cfg.skipDeduplication)
+        if (!cfg.skipDeduplication) {
           IngestPipeline.runFileIngestKeeper(spark, srcDir, batch.schema,
             payloadSchema, dest, checkpoint,
             compression = cfg.parquetCompression,
             keys = envKeys, tsCol = "kafka_timestamp",
             decode = Some(IngestPipeline.decodeEnvelope(_, formats, payloadSchema)))
-        else {
+          (payloadSchema, None)
+        } else {
           IngestPipeline.runFileIngest(spark, srcDir, batch.schema, payloadSchema,
             dest, checkpoint, compression = cfg.parquetCompression,
             decode = Some(IngestPipeline.decodeEnvelope(_, formats, payloadSchema)))
-          dedupLakeInPlace(spark, dest, cfg.parquetCompression,
-            envKeys, "kafka_timestamp")
+          (payloadSchema, dedupLakeInPlace(spark, dest, cfg.parquetCompression,
+            envKeys, "kafka_timestamp"))
         }
-        payloadSchema
       case "file" =>
         val batch = srcBatch.get
         // spread-sampled (a head-only sample misses fields that first
@@ -312,20 +368,22 @@ object CollectorMain {
         // actual failure mode) the modes are indistinguishable; when
         // producers may re-stamp retries ACROSS batches, run deferred
         // mode — it remains the keeper authority.
-        if (hasEventId && !cfg.skipDeduplication)
+        if (hasEventId && !cfg.skipDeduplication) {
           IngestPipeline.runFileIngestKeeper(spark, srcDir, batch.schema,
             payloadSchema, dest, checkpoint,
             compression = cfg.parquetCompression, keys = Seq("event_id"))
-        else {
+          (payloadSchema, None)
+        } else {
           // the writer option overrides the session conf, so the knob
           // must reach the sink explicitly — a session conf alone is
           // ignored
           IngestPipeline.runFileIngest(spark, srcDir, batch.schema, payloadSchema,
             dest, checkpoint, compression = cfg.parquetCompression)
-          if (hasEventId && cfg.skipDeduplication)
-            dedupLakeInPlace(spark, dest, cfg.parquetCompression)
+          (payloadSchema,
+            if (hasEventId && cfg.skipDeduplication)
+              dedupLakeInPlace(spark, dest, cfg.parquetCompression)
+            else None)
         }
-        payloadSchema
       case "kafka" =>
         // the source swap is IngestPipeline.kafkaSource(cfg.bootstrapServers,
         // GRAFT_TOPICS) with value.cast("string") as the payload column;
@@ -351,28 +409,35 @@ object CollectorMain {
       // the reference's post-run count validation (`q_count_validation`
       // shape): landed rows vs source rows, plus duplicate detection on
       // the event key when present
-      val landed = spark.read.parquet(dest)
-      val src = spark.read.parquet(srcDir)
-      val nLanded = landed.count()
-      val nSrc = src.count()
+      // the source frame read before the drain (the file listing the
+      // drain consumed); the lake is read only when the deferred audit's
+      // stats do not already describe it — the audit leaves a clean lake
+      // untouched, so its counts are the lake's counts
+      val src = srcBatch.getOrElse(spark.read.parquet(srcDir))
+      lazy val landed = spark.read.parquet(dest)
       // dedup runs in BOTH modes (inline or deferred), so the lake must
       // hold exactly the source's DISTINCT events and zero duplicate keys
       // — keyed on the message identity for Kafka-envelope SOURCES
       // (checked first: an envelope payload may itself carry an event_id
       // field, which lands hoisted in the lake but does not exist as a
-      // source column), on event_id for payload-keyed sources
+      // source column), on event_id for payload-keyed sources (an
+      // audited lake was grouped on event_id, so it has the column)
       val keyCols: Seq[String] =
         if (srcBatch.exists(isEnvelope))
           Seq("kafka_topic", "kafka_partition", "kafka_offset")
-        else if (landed.columns.contains("event_id") &&
-            src.columns.contains("event_id")) Seq("event_id")
+        else if (src.columns.contains("event_id") &&
+            (audited.nonEmpty || landed.columns.contains("event_id"))) Seq("event_id")
         else Nil
-      val hasKey = keyCols.nonEmpty
-      val expected =
-        if (hasKey) src.select(keyCols.map(col): _*).distinct().count() else nSrc
-      val dup =
-        if (hasKey) nLanded - landed.select(keyCols.map(col): _*).distinct().count()
-        else 0L
+      val (landedStats, srcStats) =
+        if (keyCols.isEmpty) {
+          val (l, s) = (landed.count(), src.count())
+          (KeyStats(l, l), KeyStats(s, s))
+        } else
+          (audited.getOrElse(keyStats(landed, keyCols)), keyStats(src, keyCols))
+      val nLanded = landedStats.rows
+      val nSrc = srcStats.rows
+      val expected = srcStats.groups
+      val dup = nLanded - landedStats.groups
       val status = if (nLanded == expected && dup == 0L) "OK" else "MISMATCH"
       println(s"[collector] validation: landed=$nLanded expected=$expected " +
         s"source_rows=$nSrc duplicates=$dup $status")

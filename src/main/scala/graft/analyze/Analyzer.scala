@@ -56,19 +56,6 @@ object Analyzer {
       })
   }
 
-  /** The replayer API (`R:491-542`): load several topics for one lake date
-    * in one call, keyed by topic. Missing topics are simply absent from the
-    * result (the reference logs-and-skips). */
-  def loadTopicsBatch(spark: org.apache.spark.sql.SparkSession, lakeDir: String,
-                      date: String, topics: Seq[String]): Map[String, DataFrame] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    topics.flatMap { t =>
-      val p = s"$lakeDir/$date/$t.parquet"
-      if (fs.exists(new org.apache.hadoop.fs.Path(p))) Some(t -> spark.read.parquet(p))
-      else None
-    }.toMap
-  }
-
   /** Column profile: one row per requested column with row/non-null/
     * distinct counts and min/max rendered as strings — the data-profiling
     * table a lake catalog shows per dataset. ONE aggregation pass over

@@ -39,9 +39,6 @@ object Exact {
     * non-null columns this equals the oracle's SUM/COUNT(*) exactly. */
   def davg(c: Column): Column = dsum(c) / count(c)
 
-  /** Exact sum of a product of two columns (e.g. revenue = price*(1-disc)). */
-  def dsumProd(a: Column, b: Column): Column = sum(dec(a) * dec(b)).cast(DoubleType)
-
   /** Sample stddev rebuilt from exact sums so both engines evaluate the
     * identical double expression: sqrt((Σx² − (Σx)²/n) / (n−1)). The
     * n−1 denominator goes through nullif so a 1-row group yields NULL

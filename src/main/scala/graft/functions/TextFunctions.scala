@@ -102,8 +102,4 @@ object TextFunctions {
     * filter-lambdas per document. */
   def simhashBits(hsCol: String, nCol: String): Column =
     graft.plans.VectorExpressions.simhash64(col(hsCol), col(nCol))
-
-  /** Hamming distance between two equal-length bit-string columns. */
-  def hammingDist(a: String, b: String): Column =
-    expr(s"size(filter(sequence(1, 64), i -> substring($a, i, 1) != substring($b, i, 1)))")
 }

@@ -37,11 +37,17 @@ object JsonDecode {
     * appears in a recent high-offset append would be silently dropped by
     * `from_json` — permanently, since the limit always fills from the
     * oldest files. Bound each sample component BEFORE the union instead
-    * (the [[inferSchemaSpread]] shape). */
+    * (the [[inferSchemaSpread]] shape).
+    *
+    * The bounded sample is collected once and inferred over as a local
+    * Dataset: `spark.read.json(Dataset)` runs its input plan once to infer
+    * and AGAIN to build the DataFrame it returns (under AQE that re-runs
+    * every shuffle stage of the sample plan), though only `.schema` is
+    * used here. */
   def inferSchemaOver(spark: SparkSession, df: DataFrame, column: String): StructType = {
-    val sample = df.select(col(column).cast(StringType)).na.drop
-      .as[String](Encoders.STRING)
-    StructType(spark.read.json(sample).schema
+    val texts = df.select(col(column).cast(StringType)).na.drop
+      .as[String](Encoders.STRING).collect()
+    StructType(spark.read.json(spark.createDataset(texts.toSeq)(Encoders.STRING)).schema
       .fields.filterNot(_.name == "_corrupt_record"))
   }
 
@@ -63,9 +69,7 @@ object JsonDecode {
       .where(pmod(xxhash64(col(column)), lit(101L)) === 0).limit(sampleSize)
     val head = df.select(col(column).cast(StringType)).na.drop
       .limit(math.max(64, sampleSize / 4))
-    val sample = strided.unionByName(head).as[String](Encoders.STRING)
-    StructType(spark.read.json(sample).schema
-      .fields.filterNot(_.name == "_corrupt_record"))
+    inferSchemaOver(spark, strided.unionByName(head), column)
   }
 
   /** Never-narrowing payload schema for an incremental drain: this run's

@@ -153,6 +153,103 @@ class CollectorMainSpec extends SparkSpec {
       "pre-swap rows must stay visible after the next incremental drain")
   }
 
+  test("deferred-dedup swap refuses a leftover <dest>.old instead of nesting the lake into it") {
+    // Hadoop's local rename(dest, old) onto an existing non-empty directory
+    // moves the lake INTO old/lake and returns true; the swap would then
+    // carry the stale old/_schema over and delete old — backup and lineage
+    // gone. It must refuse before any rename and leave both untouched.
+    val work = Files.createTempDirectory("collector6").toString
+    val src = s"$work/src"
+    val ev = Tables(spark, sf001, "events").orderBy("event_id").limit(50)
+    ev.unionAll(ev).write.parquet(src) // duplicates force the deferred rewrite
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val old = new org.apache.hadoop.fs.Path(s"$work/out/lake.old")
+    val staleSchema = new org.apache.hadoop.fs.Path(old, "_schema/v1_00000000.json")
+    fs.create(staleSchema).close()
+    val cfg = GraftConfig(outputDir = s"$work/out",
+      skipValidation = false, skipDeduplication = true)
+    val e = intercept[IllegalStateException] {
+      CollectorMain.run(spark, cfg, "file", src)
+    }
+    assert(e.getMessage.contains("lake.old") && e.getMessage.contains("Lake untouched"))
+    // the drained lake is where the drain left it, duplicates and all
+    assert(spark.read.parquet(s"$work/out/lake").count() == 100)
+    // the leftover is exactly as it was: nothing nested into it
+    assert(fs.exists(staleSchema))
+    assert(fs.listStatus(old).map(_.getPath.getName).toSeq == Seq("_schema"))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$work/out/lake.rewrite")))
+  }
+
+  test("null event_ids, duplicated, dedup to ONE null-key row and validate in deferred mode") {
+    // the fused (rows, distinct keys) count must keep distinct()'s
+    // null-key grouping: all null event_ids are ONE key. A count(DISTINCT)
+    // fusion skips nulls, expects one row fewer than the lake holds and
+    // fails validation.
+    import org.apache.spark.sql.functions._
+    val work = Files.createTempDirectory("collector7").toString
+    val src = s"$work/src"
+    spark.range(40).select(
+        when(col("id") % 10 === 0, lit(null).cast("long"))
+          .otherwise(col("id") % 20).as("event_id"),
+        timestamp_millis(lit(1709251200000L) + col("id") * 1000).as("ts"),
+        concat(lit("{\"k\": "), col("id"), lit("}")).as("props"))
+      .write.parquet(src) // 18 event_ids twice each, plus 4 null-id rows
+    val cfg = GraftConfig(outputDir = s"$work/out",
+      skipValidation = false, skipDeduplication = true)
+    CollectorMain.run(spark, cfg, "file", src)
+    val lake = spark.read.parquet(s"$work/out/lake")
+    assert(lake.count() == 19)
+    assert(lake.where(col("event_id").isNull).count() == 1)
+    // keep-first by ts: the null-key survivor is the earliest (id 0)
+    assert(lake.where(col("event_id").isNull).select("k").head().getLong(0) == 0L)
+  }
+
+  test("one deferred envelope drain stays within its Spark job budget") {
+    // the pre-drain sampling and the post-drain audit/validation each do
+    // their work once; a re-added count/collect round trip over the source
+    // or the lake shows up here as extra jobs
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val work = Files.createTempDirectory("collector8").toString
+    val src = s"$work/src"
+    val envSchema = StructType(Seq(
+      StructField("kafka_topic", StringType),
+      StructField("kafka_partition", LongType),
+      StructField("kafka_offset", LongType),
+      StructField("kafka_timestamp", TimestampType),
+      StructField("kafka_key", StringType),
+      StructField("value", BinaryType)))
+    val rows = (0 until 400).flatMap { i =>
+      val payload = s"""{"px": ${i * 1.5}, "qty": $i}"""
+      val ts = new java.sql.Timestamp(1709251200000L + i.toLong * 60000)
+      Seq(Row("ticks", (i % 2).toLong, i.toLong, ts, s"k$i",
+          graft.functions.Msgpack.encodeFlatJson(payload)),
+        Row("logs", 0L, i.toLong, ts, null, payload.getBytes("UTF-8")))
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), envSchema)
+      .write.parquet(src)
+    val cfg = GraftConfig(outputDir = s"$work/out", skipValidation = false)
+    val sc = spark.sparkContext
+    def quiesce(): Unit = {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    quiesce()
+    sc.addSparkListener(listener)
+    try {
+      CollectorMain.run(spark, cfg, "file", src)
+      quiesce()
+    } finally sc.removeSparkListener(listener)
+    assert(spark.read.parquet(s"$work/out/lake").count() == 800)
+    // 17 is what one such drain launches on this fixture
+    assert(jobs.get <= 17, s"${jobs.get} Spark jobs for one envelope drain")
+  }
+
   test("kafka mode refuses without a broker; bad mode refuses") {
     val cfg = GraftConfig()
     assert(intercept[IllegalStateException] {
