@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   - the app classes ship via `spark.jars` and load on executors
   *     (custom Catalyst expressions inside codegen included);
   *   - the custom SparkPlan (`plans/AsOfJoinPlan`), the codegen
-  *     expressions (`ZOrder2`, `MsgpackToJsonExpr`, vector/minhash
-  *     slots), and the multi-MB bloom plan-literals survive task
-  *     serialization and network transport;
+  *     expressions (`ZOrder2`, `MsgpackToJsonExpr`, `MinHashSlots`, the
+  *     `StaticInvoke` calls into `VectorOps`), and the multi-MB bloom
+  *     plan-literals survive task serialization and network transport;
   *   - the streaming protocols (inline keeper + near-dup admission)
   *     run their foreachBatch closures on remote executors.
   *

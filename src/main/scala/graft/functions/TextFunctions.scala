@@ -32,7 +32,7 @@ object TextFunctions {
     expr(s"regexp_extract_all($c, '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0)")
 
   /** Distinct word n-gram shingles joined with spaces — ONE native pass
-    * ([[graft.plans.ShinglesExpr]]) since r19: the former
+    * ([[graft.plans.VectorOps.shingles]]) since r19: the former
     * `array_distinct(transform(sequence(…), i -> array_join(slice(…))))`
     * chain is an interpreted higher-order lambda materializing a sliced
     * array per window, on every minhash/dedup query's corpus pass.
@@ -42,7 +42,7 @@ object TextFunctions {
     graft.plans.VectorExpressions.shingles(col(toksCol), n)
 
   /** Count of tokens that appear in `words` — ONE native hash-set probe
-    * per token ([[graft.plans.MarkerCount]]) since r19; was
+    * per token ([[graft.plans.VectorOps.markerCount]]) since r19; was
     * `size(filter(toks, x IN (…)))`, an interpreted lambda re-scanning
     * the literal list per token on every language/quality corpus pass
     * (VectorExprSpec pins the equivalence). */

@@ -63,7 +63,14 @@ object BpeOps {
 /** `graft_bpe_apply(array<string>) -> array<string>` with a literal merge
   * table — see [[BpeOps.applyMerges]]. The table is MODEL PARAMETERS
   * (configuration-bounded driver state), carried on the expression node
-  * like the k-means candidate descriptors, never a join input. */
+  * like the k-means candidate descriptors, never a join input.
+  *
+  * Hand-written rather than a `StaticInvoke`: the kernel takes the table
+  * as a raw `Array[Array[UTF8String]]`, which a `Literal` compares by
+  * reference, so two equal plans would stop comparing equal. This case
+  * class compares the `merges` Seq by value and builds the array once per
+  * node; any value-equal literal wrapper would need a kernel change or a
+  * per-row unwrap call. */
 case class BpeApply(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression {
   override def prettyName: String = "graft_bpe_apply"

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
@@ -343,40 +343,15 @@ case class NearestClusters(left: Expression, right: Expression, p: Int)
     copy(left = l, right = r)
 }
 
-/** `graft_latticed2(q array<bigint>, s array<bigint>, cn bigint) ->
-  * decimal(38,0)` — see [[KMeansOps.latticeD2]]. */
-case class LatticeD2(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression {
-  override def prettyName: String = "graft_latticed2"
-  override def dataType: DataType = DecimalType(38, 0)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_latticed2 requires (array<bigint>, array<bigint>, bigint), got ($a, $b, $c)")
-    }
-
-  override protected def nullSafeEval(q: Any, s: Any, cn: Any): Any =
-    KMeansOps.latticeD2(q.asInstanceOf[ArrayData], s.asInstanceOf[ArrayData],
-      cn.asInstanceOf[java.lang.Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, s, cn) =>
-      s"${ev.value} = graft.plans.KMeansOps.latticeD2($q, $s, (long) $cn);")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): LatticeD2 =
-    copy(first = f, second = s, third = t)
-}
-
 /** Column-level constructors. */
 object KMeansExpressions {
   def nearestClusters(q: Column, cands: Column, p: Int): Column =
     ExpressionUtils.column(NearestClusters(
       ExpressionUtils.expression(q), ExpressionUtils.expression(cands), p))
 
+  /** `(q array<bigint>, s array<bigint>, cn bigint) -> decimal(38,0)` — see
+    * [[KMeansOps.latticeD2]]. */
   def latticeD2(q: Column, s: Column, cn: Column): Column =
-    ExpressionUtils.column(LatticeD2(ExpressionUtils.expression(q),
-      ExpressionUtils.expression(s), ExpressionUtils.expression(cn)))
+    StaticKernel(KMeansOps, "latticeD2", DecimalType(38, 0),
+      Seq(q -> ArrayType(LongType), s -> ArrayType(LongType), cn -> LongType))
 }

@@ -29,9 +29,9 @@ case class MsgpackToJsonExpr(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "msgpack_to_json"
 
-  // analysis-time rejection beats a runtime ClassCastException (the
-  // VectorExpressions siblings all do the same; this is on the public
-  // SQL surface via GraftExtensions)
+  // analysis-time rejection beats a runtime ClassCastException (the other
+  // SQL-registered nodes — QuantizedDot, MinHashSlots, SimHash64, ZOrder2
+  // — do the same; this is on the public SQL surface via GraftExtensions)
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     if (child.dataType == BinaryType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
@@ -100,7 +100,9 @@ object GraftExtensions {
         throw new IllegalArgumentException("graft_minhash: k must be a literal")
       val k = cs(1).eval() match {
         case i: Int  => i
-        case l: Long => l.toInt
+        case l: Long if l.isValidInt => l.toInt
+        case l: Long =>
+          throw new IllegalArgumentException(s"graft_minhash: k $l is outside the int range")
         case other =>
           throw new IllegalArgumentException(s"graft_minhash: integer k expected, got $other")
       }

@@ -1,11 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.classic.{GraftExpressionBridge => ExpressionUtils}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types._
 
 /** Group-local SemDeDup pair summarization — the r18 replacement for
@@ -116,39 +114,18 @@ object SemDedupOps {
   }
 }
 
-/** `graft_semdedup_pairs(members array<struct<vec_id,q,nrm>>) ->
-  * array<struct<vid, keeper_id, n_near>>` — see [[SemDedupOps]]. */
-case class SemDedupPairs(child: Expression, tau: Double) extends UnaryExpression {
-  override def prettyName: String = "graft_semdedup_pairs"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(st: StructType, _)
-        if st.length == 3 && st(0).dataType == LongType &&
-          st(1).dataType.isInstanceOf[ArrayType] &&
-          st(1).dataType.asInstanceOf[ArrayType].elementType == LongType &&
-          st(2).dataType == DoubleType =>
-      TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_semdedup_pairs requires array<struct<bigint, array<bigint>, double>>, got $t")
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("vid", LongType, nullable = false),
-    StructField("keeper_id", LongType, nullable = false),
-    StructField("n_near", LongType, nullable = false))), containsNull = false)
-
-  override protected def nullSafeEval(members: Any): Any =
-    SemDedupOps.pairSummaries(members.asInstanceOf[ArrayData], tau)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, m =>
-      s"${ev.value} = graft.plans.SemDedupOps.pairSummaries($m, $tau);")
-
-  override protected def withNewChildInternal(newChild: Expression): SemDedupPairs =
-    copy(child = newChild)
-}
-
 object SemDedupExpressions {
+  /** `(members array<struct<vec_id, q, nrm>>) ->
+    * array<struct<vid, keeper_id, n_near>>` — see [[SemDedupOps]]. */
   def pairSummaries(members: Column, tau: Double): Column =
-    ExpressionUtils.column(SemDedupPairs(ExpressionUtils.expression(members), tau))
+    StaticKernel(SemDedupOps, "pairSummaries",
+      ArrayType(StructType(Seq(
+        StructField("vid", LongType, nullable = false),
+        StructField("keeper_id", LongType, nullable = false),
+        StructField("n_near", LongType, nullable = false))), containsNull = false),
+      Seq(members -> ArrayType(StructType(Seq(
+        StructField("vec_id", LongType),
+        StructField("q", ArrayType(LongType)),
+        StructField("nrm", DoubleType)))),
+        lit(tau) -> DoubleType))
 }

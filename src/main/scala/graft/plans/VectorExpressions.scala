@@ -1,12 +1,14 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.classic.{GraftExpressionBridge => ExpressionUtils}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType,
+  ObjectType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the vector/dedup hot paths.
@@ -18,11 +20,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * the JOIN CONDITION (BroadcastNestedLoopJoin), where conditions are
   * evaluated with interpreted `Expression.eval` — recursive descent plus a
   * boxed java.lang.Long per node, ~5µs per pair. At 1M candidate pairs
-  * that alone was ~8s of the round-2 bench. Each expression here is ONE
-  * node whose eval is a primitive loop (~100ns), and whose codegen is a
-  * static call into [[VectorOps]] — the same pattern as
-  * [[MsgpackToJsonExpr]], so both interpreted and codegen'd contexts get
-  * the native loop.
+  * that alone was ~8s of the round-2 bench. Each column built here is ONE
+  * node whose eval is a primitive loop (~100ns) in a [[VectorOps]]
+  * kernel, so both interpreted and codegen'd contexts get the native
+  * loop. Most constructors in [[VectorExpressions]] reach their kernel
+  * through Spark's `StaticInvoke` ([[StaticKernel]]). The hand-written
+  * nodes in this file are the ones `StaticInvoke` cannot stand in for:
+  * the SQL-registered names (`graft_qdot`, `graft_minhash`,
+  * `graft_simhash64`, `graft_zorder2`) keep their own arity and type
+  * error messages, and [[QuantizeVector]] picks its kernel flag from the
+  * child's element type instead of casting every row to array<double>.
   *
   * All arithmetic is exact int64 on pre-quantized values (see
   * [[graft.functions.VectorFunctions]] for the exactness contract with the
@@ -229,7 +236,7 @@ object VectorOps {
   /** max(|x_i|) over a bigint array — `array_max(transform(q, x ->
     * abs(x)))` as one native loop (r19). Null elements are skipped like
     * array_max does; empty/all-null yields NULL (boxed return). */
-  def maxAbs(v: ArrayData): Any = {
+  def maxAbs(v: ArrayData): java.lang.Long = {
     val n = v.numElements()
     var best = -1L
     var i = 0
@@ -518,29 +525,6 @@ case class QuantizedDot(left: Expression, right: Expression) extends BinaryExpre
     copy(left = l, right = r)
 }
 
-/** `graft_qdist2(array<bigint>, array<bigint>) -> bigint` — see
-  * [[VectorOps.qdist2]]. */
-case class QuantizedDist2(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_qdist2"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_qdist2 requires (array<bigint>, array<bigint>), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.qdist2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VectorOps.qdist2($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QuantizedDist2 =
-    copy(left = l, right = r)
-}
-
 /** `graft_minhash(array<bigint>) -> array<bigint>` of `k` slots — see
   * [[VectorOps.minhash]]. An EMPTY bases array yields NULL (there is no
   * minimum of nothing; shingle inputs are length-clamped so the engine's
@@ -602,282 +586,6 @@ case class SimHash64(left: Expression, right: Expression) extends BinaryExpressi
     copy(left = l, right = r)
 }
 
-/** `graft_agree(array<bigint>, array<bigint>) -> int` — see
-  * [[VectorOps.agree]]. Null-safe like the `size(filter(zip_with(…)))`
-  * fragment it replaces: a NULL array yields NULL (size(NULL) under
-  * non-legacy semantics), a null ELEMENT simply never counts. */
-case class AgreeCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_agree"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_agree requires (array<bigint>, array<bigint>), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.agree(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VectorOps.agree($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AgreeCount =
-    copy(left = l, right = r)
-}
-
-/** `graft_sse127(array<bigint>, array<bigint>, bigint) -> bigint` — see
-  * [[VectorOps.sse127]]. */
-case class Sse127(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_sse127"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _), LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (q, c, s) => TypeCheckResult.TypeCheckFailure(
-        s"graft_sse127 requires (array<bigint>, array<bigint>, bigint), got ($q, $c, $s)")
-    }
-
-  override protected def nullSafeEval(q: Any, c: Any, s: Any): Any =
-    VectorOps.sse127(q.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
-      s.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (q, c, s) => s"graft.plans.VectorOps.sse127($q, $c, $s)")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): Sse127 = copy(first = f, second = s, third = t)
-}
-
-/** `graft_qsub(array<bigint>, array<bigint>) -> array<bigint>` — see
-  * [[VectorOps.qsub]]. */
-case class QSubVector(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_qsub"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_qsub requires (array<bigint>, array<bigint>), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.qsub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VectorOps.qsub($a, $b)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): QSubVector =
-    copy(left = l, right = r)
-}
-
-/** `graft_maxabs(array<bigint>) -> bigint` — see [[VectorOps.maxAbs]]. */
-case class MaxAbs(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_maxabs"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_maxabs requires array<bigint>, got $t")
-  }
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.maxAbs(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""Object r = graft.plans.VectorOps.maxAbs($v);
-         |if (r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ((java.lang.Long) r).longValue(); }""".stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): MaxAbs =
-    copy(child = newChild)
-}
-
-/** `graft_sq8code(array<bigint>, bigint) -> array<bigint>` — see
-  * [[VectorOps.sq8code]]. */
-case class Sq8Code(left: Expression, right: Expression) extends BinaryExpression {
-  override def prettyName: String = "graft_sq8code"
-  // the transform lambda it replaces produced containsNull = true
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_sq8code requires (array<bigint>, bigint), got ($l, $r)")
-    }
-
-  override protected def nullSafeEval(v: Any, s: Any): Any =
-    VectorOps.sq8code(v.asInstanceOf[ArrayData], s.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (v, s) => s"graft.plans.VectorOps.sq8code($v, $s)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Sq8Code =
-    copy(left = l, right = r)
-}
-
-/** `graft_countabseq(array<bigint>, target) -> int` — see
-  * [[VectorOps.countAbsEq]]. */
-case class CountAbsEq(child: Expression, target: Long) extends UnaryExpression {
-  override def prettyName: String = "graft_countabseq"
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_countabseq requires array<bigint>, got $t")
-  }
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorOps.countAbsEq(v.asInstanceOf[ArrayData], target)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, v => s"graft.plans.VectorOps.countAbsEq($v, ${target}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): CountAbsEq =
-    copy(child = newChild)
-}
-
-/** `graft_sortedpairs(array<bigint>) -> array<struct<pa, pb>>` — see
-  * [[VectorOps.sortedPairs]]. */
-case class SortedPairs(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_sortedpairs"
-  override def dataType: DataType = ArrayType(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("pa", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("pb", LongType, nullable = false))),
-    containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_sortedpairs requires array<bigint>, got $t")
-  }
-
-  override protected def nullSafeEval(parts: Any): Any =
-    VectorOps.sortedPairs(parts.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, p =>
-      s"${ev.value} = graft.plans.VectorOps.sortedPairs($p);")
-
-  override protected def withNewChildInternal(newChild: Expression): SortedPairs =
-    copy(child = newChild)
-}
-
-/** `graft_shingles(array<string>, n) -> array<string>` — see
-  * [[VectorOps.shingles]]. */
-case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def prettyName: String = "graft_shingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if n >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles requires n >= 1, got $n")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles requires array<string> tokens, got $t")
-  }
-
-  override protected def nullSafeEval(toks: Any): Any =
-    VectorOps.shingles(toks.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.plans.VectorOps.shingles($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
-}
-
-/** `graft_md5base32(array<string>) -> array<bigint>` — see
-  * [[VectorOps.md5Base32]]. */
-case class Md5Base32(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "graft_md5base32"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_md5base32 requires array<string>, got $t")
-  }
-
-  override protected def nullSafeEval(sh: Any): Any =
-    VectorOps.md5Base32(sh.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, sh =>
-      s"${ev.value} = graft.plans.VectorOps.md5Base32($sh);")
-
-  override protected def withNewChildInternal(newChild: Expression): Md5Base32 =
-    copy(child = newChild)
-}
-
-/** `graft_markercount(array<string>) -> int` with a literal word set —
-  * see [[VectorOps.markerCount]]. */
-case class MarkerCount(child: Expression, words: Seq[String]) extends UnaryExpression {
-  override def prettyName: String = "graft_markercount"
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_markercount requires array<string> tokens, got $t")
-  }
-
-  @transient private lazy val wordSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](words.length * 2)
-    words.foreach(w => s.add(UTF8String.fromString(w)))
-    s
-  }
-
-  override protected def nullSafeEval(toks: Any): Any =
-    VectorOps.markerCount(toks.asInstanceOf[ArrayData], wordSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("markerWords", wordSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.plans.VectorOps.markerCount($t, $ref);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MarkerCount =
-    copy(child = newChild)
-}
-
-/** `graft_gramhash64(array<string>, n) -> array<bigint>` — see
-  * [[VectorOps.gramHash64]]. */
-case class GramHash64(child: Expression, n: Int) extends UnaryExpression {
-  override def prettyName: String = "graft_gramhash64"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) if n >= 1 => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckFailure(
-      s"graft_gramhash64 requires n >= 1, got $n")
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_gramhash64 requires array<string> tokens, got $t")
-  }
-
-  override protected def nullSafeEval(toks: Any): Any =
-    VectorOps.gramHash64(toks.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.plans.VectorOps.gramHash64($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): GramHash64 =
-    copy(child = newChild)
-}
-
 /** `graft_zorder2(bigint, bigint) -> bigint` — 32-bit Morton code
   * interleaving the LOW 16 BITS of each key (bit i of `a` lands at 2i, of
   * `b` at 2i+1; higher bits are ignored, which both engines and the
@@ -908,16 +616,22 @@ case class ZOrder2(left: Expression, right: Expression) extends BinaryExpression
     copy(left = l, right = r)
 }
 
-/** Column-level constructors (classic-session bridge). */
+/** Column-level constructors (classic-session bridge). The hand-written
+  * nodes above keep their own SQL-surface type checks; the rest are
+  * [[StaticKernel]] calls into [[VectorOps]]. */
 object VectorExpressions {
+  private val longs = ArrayType(LongType)
+  private val strings = ArrayType(StringType)
+  private def op(fn: String, dataType: DataType, args: (Column, DataType)*): Column =
+    StaticKernel(VectorOps, fn, dataType, args)
+
   def quantize(v: Column, scale: Double): Column =
     ExpressionUtils.column(QuantizeVector(ExpressionUtils.expression(v), scale))
 
   def qdot(a: Column, b: Column): Column =
     ExpressionUtils.column(QuantizedDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  def qdist2(a: Column, b: Column): Column =
-    ExpressionUtils.column(QuantizedDist2(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+  def qdist2(a: Column, b: Column): Column = op("qdist2", LongType, a -> longs, b -> longs)
 
   def minhashSlots(bases: Column, k: Int): Column =
     ExpressionUtils.column(MinHashSlots(ExpressionUtils.expression(bases), k))
@@ -928,37 +642,51 @@ object VectorExpressions {
   def zorder2(a: Column, b: Column): Column =
     ExpressionUtils.column(ZOrder2(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  def agree(a: Column, b: Column): Column =
-    ExpressionUtils.column(AgreeCount(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+  /** NULL for a NULL array; null elements never count. */
+  def agree(a: Column, b: Column): Column = op("agree", IntegerType, a -> longs, b -> longs)
 
   def sse127(q: Column, code: Column, s: Column): Column =
-    ExpressionUtils.column(Sse127(ExpressionUtils.expression(q),
-      ExpressionUtils.expression(code), ExpressionUtils.expression(s)))
+    op("sse127", LongType, q -> longs, code -> longs, s -> LongType)
 
   def qsub(a: Column, b: Column): Column =
-    ExpressionUtils.column(QSubVector(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
+    op("qsub", ArrayType(LongType, containsNull = false), a -> longs, b -> longs)
 
-  def gramHash64(toks: Column, n: Int): Column =
-    ExpressionUtils.column(GramHash64(ExpressionUtils.expression(toks), n))
+  def gramHash64(toks: Column, n: Int): Column = {
+    require(n >= 1, s"graft_gramhash64 requires n >= 1, got $n")
+    op("gramHash64", ArrayType(LongType, containsNull = false), toks -> strings, lit(n) -> IntegerType)
+  }
 
+  /** NULL for an empty or all-null array (the kernel's boxed return). */
   def maxAbs(v: Column): Column =
-    ExpressionUtils.column(MaxAbs(ExpressionUtils.expression(v)))
+    StaticKernel(VectorOps, "maxAbs", LongType, Seq(v -> longs), returnNullable = true)
 
+  // the transform lambda it replaces produced containsNull = true
   def sq8code(v: Column, s: Column): Column =
-    ExpressionUtils.column(Sq8Code(ExpressionUtils.expression(v), ExpressionUtils.expression(s)))
+    op("sq8code", ArrayType(LongType, containsNull = true), v -> longs, s -> LongType)
 
   def countAbsEq(v: Column, target: Long): Column =
-    ExpressionUtils.column(CountAbsEq(ExpressionUtils.expression(v), target))
+    op("countAbsEq", IntegerType, v -> longs, lit(target) -> LongType)
 
   def sortedPairs(parts: Column): Column =
-    ExpressionUtils.column(SortedPairs(ExpressionUtils.expression(parts)))
+    op("sortedPairs", ArrayType(StructType(Seq(
+      StructField("pa", LongType, nullable = false),
+      StructField("pb", LongType, nullable = false))), containsNull = false),
+      parts -> longs)
 
-  def shingles(toks: Column, n: Int): Column =
-    ExpressionUtils.column(ShinglesExpr(ExpressionUtils.expression(toks), n))
+  def shingles(toks: Column, n: Int): Column = {
+    require(n >= 1, s"graft_shingles requires n >= 1, got $n")
+    op("shingles", ArrayType(StringType, containsNull = false), toks -> strings, lit(n) -> IntegerType)
+  }
 
   def md5Base32(sh: Column): Column =
-    ExpressionUtils.column(Md5Base32(ExpressionUtils.expression(sh)))
+    op("md5Base32", ArrayType(LongType, containsNull = false), sh -> strings)
 
-  def markerCount(toks: Column, words: Seq[String]): Column =
-    ExpressionUtils.column(MarkerCount(ExpressionUtils.expression(toks), words))
+  /** The word set travels as one `HashSet` literal: value equality keeps
+    * equal plans equal, and codegen references it once per task. */
+  def markerCount(toks: Column, words: Seq[String]): Column = {
+    val set = new java.util.HashSet[UTF8String](words.length * 2)
+    words.foreach(w => set.add(UTF8String.fromString(w)))
+    val wordSet = ExpressionUtils.column(Literal.fromObject(set))
+    op("markerCount", IntegerType, toks -> strings, wordSet -> ObjectType(set.getClass))
+  }
 }

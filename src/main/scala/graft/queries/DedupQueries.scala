@@ -1227,7 +1227,7 @@ object DedupQueries {
       // exp-1.25 constant. Every pair decision is group-local and the
       // shard caps groups at 2000 members, so each vector now moves ONCE
       // into its (cl, sh) group and ONE native expression
-      // ([[graft.plans.SemDedupPairs]]) loops the pairs in primitive
+      // ([[graft.plans.SemDedupOps.pairSummaries]]) loops the pairs in primitive
       // arrays, emitting only the per-vid (keeper, count) survivors —
       // bit-identical cosine predicate, same keep-first semantics
       // (SemDedupPairsSpec pins native == join shape on real data).

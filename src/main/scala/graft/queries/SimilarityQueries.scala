@@ -1054,7 +1054,7 @@ object SimilarityQueries {
         e.select(col("label"), col("q")))
       val d = e.join(broadcast(cs), col("label") === col("cl"))
         // same exact integer lattice distance as KMeans, via the native
-        // codegen loop (graft.plans.LatticeD2): identical decimal(38,0)
+        // codegen loop (graft.plans.KMeansOps.latticeD2): identical decimal(38,0)
         // value and the identical loud 10^38 headroom, without the
         // per-dim interpreted decimal multiply the r17 GC-wall
         // measurement attributed the fit family's super-linearity to

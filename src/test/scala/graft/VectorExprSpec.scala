@@ -160,6 +160,12 @@ class VectorExprSpec extends SparkSpec {
     // bigint literal k is accepted
     assert(spark.sql("SELECT size(graft_minhash(array(7L), CAST(4 AS BIGINT)))")
       .as[Int].head() === 4)
+    // a bigint k outside the int range is rejected, not narrowed (2^32 + 4 → 4 slots)
+    val eK = intercept[Exception] {
+      spark.sql("SELECT graft_minhash(array(7L), 4294967300)").collect()
+    }
+    val kMsgs = Iterator.iterate[Throwable](eK)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(kMsgs.exists(m => m != null && m.contains("outside the int range")), eK.getMessage)
   }
 
   test("SQL-surface hardening: arity, type, and null-element errors are loud and clear") {
@@ -371,5 +377,99 @@ class VectorExprSpec extends SparkSpec {
     assert(d.filter(
       !(graft.plans.KMeansExpressions.latticeD2($"q", $"s", $"cn") <=> interp)).count() === 0)
     assert(d.count() > 0)
+  }
+
+  // The kernels behind StaticInvoke columns run through generated code by
+  // default and through reflective `eval` under NO_CODEGEN; both must
+  // match the fragments on the edge shapes (null arrays, null elements,
+  // empty and short arrays) and agree with each other. The checkpoint
+  // keeps the optimizer from pushing the kernels into the literal rows and
+  // constant-folding them (interpreted, while optimizing) in both modes.
+  test("StaticInvoke kernels match their fragments under codegen and NO_CODEGEN") {
+    // tolerant kernels: null elements and unequal lengths are legal input
+    val loose = spark.sql(
+      "SELECT array(1L, NULL, -9L) a, array(1L, 2L, -9L) b, array('the', NULL, 'x') t, 9L s " +
+        "UNION ALL SELECT CAST(array() AS ARRAY<BIGINT>), CAST(array() AS ARRAY<BIGINT>), " +
+        "CAST(array() AS ARRAY<STRING>), 3L " +
+        "UNION ALL SELECT CAST(NULL AS ARRAY<BIGINT>), array(1L), CAST(NULL AS ARRAY<STRING>), 2L " +
+        "UNION ALL SELECT array(3L), array(3L, 4L), array('a', 'b'), 2L").localCheckpoint()
+    val looseCases = Seq(
+      "agree" -> (VectorExpressions.agree($"a", $"b"),
+        expr("size(filter(zip_with(a, b, (x, y) -> x = y), v -> v))")),
+      "maxAbs" -> (VectorExpressions.maxAbs($"a"), expr("array_max(transform(a, x -> abs(x)))")),
+      "countAbsEq" -> (VectorExpressions.countAbsEq($"a", 9L),
+        expr("size(filter(a, x -> abs(x) = 9))")),
+      "sq8code" -> (VectorExpressions.sq8code($"a", $"s"),
+        expr("transform(a, x -> (2*127*(x + s) + s) DIV (2*s) - 127)")),
+      "markerCount" -> (VectorExpressions.markerCount($"t", Seq("the", "a")),
+        expr("size(filter(t, x -> x IN ('the', 'a')))")),
+      // greatest() skips a NULL size, so the shingle fragments need the
+      // explicit NULL guard the kernels get from null propagation
+      "shingles" -> (VectorExpressions.shingles($"t", 3), expr(
+        "if(t IS NULL, NULL, array_distinct(transform(sequence(1, greatest(size(t)-2, 1)), " +
+          "i -> array_join(slice(t, i, 3), ' '))))")),
+      "gramHash64" -> (VectorExpressions.gramHash64($"t", 5), expr(
+        "if(t IS NULL, NULL, array_sort(transform(array_distinct(transform(" +
+          "sequence(1, greatest(size(t)-4, 1)), i -> array_join(slice(t, i, 5), ' '))), " +
+          s"x -> ${md5Prefix64Sql("x")})))")))
+    // strict kernels: equal lengths and no null elements, else they throw
+    val strict = spark.sql(
+      "SELECT array(1L, -2L, 9L) a, array(4L, 5L, -6L) b, array('x', 'y z') t, 3L s " +
+        "UNION ALL SELECT CAST(array() AS ARRAY<BIGINT>), CAST(array() AS ARRAY<BIGINT>), " +
+        "CAST(array() AS ARRAY<STRING>), 1L " +
+        "UNION ALL SELECT CAST(NULL AS ARRAY<BIGINT>), array(1L), " +
+        "CAST(NULL AS ARRAY<STRING>), CAST(NULL AS BIGINT) " +
+        "UNION ALL SELECT array(7L), array(2L), array('a'), 2L").localCheckpoint()
+    val strictCases = Seq(
+      "qdist2" -> (VectorExpressions.qdist2($"a", $"b"), expr(
+        "aggregate(zip_with(a, b, (x, y) -> (x - y)*(x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)")),
+      "qsub" -> (VectorExpressions.qsub($"a", $"b"), expr("zip_with(a, b, (x, y) -> x - y)")),
+      "sse127" -> (VectorExpressions.sse127($"a", $"b", $"s"), expr(
+        "aggregate(zip_with(a, b, (x, c) -> (127*x - c*s)*(127*x - c*s)), " +
+          "CAST(0 AS BIGINT), (acc, v) -> acc + v)")),
+      "md5Base32" -> (VectorExpressions.md5Base32($"t"),
+        expr("transform(t, x -> CAST(conv(substring(md5(x), 1, 8), 16, 10) AS BIGINT))")),
+      "sortedPairs" -> (VectorExpressions.sortedPairs($"a"), expr(
+        "flatten(transform(a, (x, i) -> " +
+          "transform(slice(a, i + 2, size(a)), y -> struct(x AS pa, y AS pb))))")),
+      "latticeD2" -> (graft.plans.KMeansExpressions.latticeD2($"a", $"b", $"s"), expr(
+        "aggregate(zip_with(a, b, (x, y) -> CAST(s*x - y AS DECIMAL(38,0)) * (s*x - y)), " +
+          "CAST(0 AS DECIMAL(38,0)), (acc, v) -> CAST(acc + v AS DECIMAL(38,0)))")))
+    // pair summaries: a null group, a singleton and one hit pair (no fragment;
+    // the two modes must agree and the hit must show)
+    val groups = spark.sql(
+      "SELECT CAST(NULL AS ARRAY<STRUCT<vec_id: BIGINT, q: ARRAY<BIGINT>, nrm: DOUBLE>>) m " +
+        "UNION ALL SELECT array(named_struct('vec_id', 5L, 'q', array(1L, 0L), 'nrm', 1.0D)) " +
+        "UNION ALL SELECT array(named_struct('vec_id', 9L, 'q', array(1L, 0L), 'nrm', 1.0D), " +
+        "named_struct('vec_id', 4L, 'q', array(1L, 0L), 'nrm', 1.0D))").localCheckpoint()
+    val pairs = graft.plans.SemDedupExpressions.pairSummaries($"m", 0.35)
+
+    def run(): Seq[Seq[String]] = {
+      def check(df: org.apache.spark.sql.DataFrame,
+                cases: Seq[(String, (org.apache.spark.sql.Column, org.apache.spark.sql.Column))]) =
+        cases.map { case (name, (nat, frag)) =>
+          val got = df.select(nat.as("n"), frag.as("i"))
+          assert(got.filter(!($"n" <=> $"i")).count() === 0, name)
+          got.select($"n".cast("string")).as[String].collect().map(String.valueOf).toSeq.sorted
+        }
+      val summaries =
+        groups.select(pairs.cast("string")).as[String].collect().map(String.valueOf).toSeq.sorted
+      check(loose, looseCases) ++ check(strict, strictCases) :+ summaries
+    }
+
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val codegen = run()
+    val interpreted =
+      try {
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        run()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    assert(interpreted === codegen)
+    assert(codegen.last.exists(_.contains("{9, 4, 1}")), codegen.last)
   }
 }
