@@ -22,8 +22,9 @@ import graft.streaming.IngestPipeline
   *    codec detection and [[JsonDecode.inferSchemaOver]] read; a props
   *    source goes through [[JsonDecode.inferSchemaSpread]]. Then the full
   *    stream decodes through codegen'd `from_json`.
-  *  - `kafka`: `IngestPipeline.kafkaSource` with the config's brokers and
-  *    fetch tuning; identical downstream. Needs a live broker.
+  *  - `kafka`: `IngestPipeline.kafkaSource(spark, cfg, …)`, which applies
+  *    the config's brokers and fetch tuning (`GraftConfig.kafkaOptions`);
+  *    identical downstream. Needs a live broker.
   *
   * Knob wiring (see GraftConfig's scaladoc for the full table):
   * compression confs land on the session; `SKIP_VALIDATION` gates the
@@ -50,11 +51,8 @@ object CollectorMain {
     val srcMode = sys.env.getOrElse("GRAFT_SOURCE", "file")
     val srcDir = sys.env.getOrElse("GRAFT_SOURCE_DIR", "")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", cfg.maxWorkers.toString)
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = Sessions.builder(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus)
+    // after the shared defaults, so PARQUET_COMPRESSION overrides zstd
     cfg.sparkConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -385,8 +383,9 @@ object CollectorMain {
             else None)
         }
       case "kafka" =>
-        // the source swap is IngestPipeline.kafkaSource(cfg.bootstrapServers,
-        // GRAFT_TOPICS) with value.cast("string") as the payload column;
+        // the source swap is IngestPipeline.kafkaSource(spark, cfg,
+        // GRAFT_TOPICS), which applies cfg.kafkaOptions (brokers + fetch
+        // tuning), with value.cast("string") as the payload column;
         // downstream (decode → flatten → partitioned sink) is identical —
         // KafkaIntegrationSpec carries the live-broker recipe
         throw new IllegalStateException(

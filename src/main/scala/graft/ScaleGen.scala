@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up generator for the empirical scaling harness, with two growth
@@ -43,16 +43,11 @@ object ScaleGen {
     val densify = args.contains("--densify")
     val k = args.drop(2).filterNot(_.startsWith("--")).headOption.map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.compression.codec", "zstd")
+    val spark = Sessions.builder(s"local[$cpus]", cpus)
       // Spark's default timestamp output is INT96, which carries NO
       // logical-type annotation — Tables.sniffTsUnit refuses to guess on
       // it (by design). Write annotated micros like the driver testdata.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

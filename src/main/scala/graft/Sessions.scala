@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session defaults shared by the harness mains (Bench / Verify /
-  * ClusterGate) — ONE place, so a session-level fix cannot silently
-  * apply to the bench but not the gate. These are also the settings a
-  * cluster deployment of this library should carry. */
+/** Session defaults for every session in the repo, specs included (the
+  * harness mains, the collector, Explain, StreamBench, ScaleGen and the
+  * test `SparkSpec`; only `perfbench`'s drain session still sets its own
+  * confs) — ONE place, so a session-level fix cannot silently apply to
+  * the bench but not the gate or the plan pins. These are also the
+  * settings a cluster deployment of this library should carry. */
 object Sessions {
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =

@@ -59,7 +59,4 @@ object SkewJoin {
       .groupBy(col(key))
       .agg(sum(col("_s")).as(s"sum_$valueCol"), sum(col("_n")).as("n"))
   }
-
-  def unsaltedEquiJoin(left: DataFrame, right: DataFrame, key: String): DataFrame =
-    left.join(right, Seq(key))
 }

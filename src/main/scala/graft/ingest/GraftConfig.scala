@@ -9,7 +9,7 @@ package graft.ingest
   * each knob lands in the Spark engine.
   *
   * Knob → Spark mapping:
-  *  - `BOOTSTRAP_SERVERS`            → `IngestPipeline.kafkaSource(brokers=…)`
+  *  - `BOOTSTRAP_SERVERS`            → `kafka.bootstrap.servers` in [[kafkaOptions]]
   *  - `OUTPUT_DIR`                   → lake root passed to `LakeWriter` sinks
   *  - `MAX_MESSAGES`                 → `maxOffsetsPerTrigger`-style cap; None = drain
   *  - `BATCH_SIZE` / `MEMORY_BATCH_SIZE` → subsumed by Spark microbatching:
@@ -32,7 +32,8 @@ package graft.ingest
   *     deliberately NOT wired to a writer option (size row groups via
   *     `parquet.block.size` on the session when needed)
   *  - `FETCH_MIN_BYTES` / `MAX_PARTITION_FETCH_BYTES` → the `kafka.*` source
-  *     options `IngestPipeline.kafkaSource` already pins to the reference's values
+  *     options in [[kafkaOptions]], which `IngestPipeline.kafkaSource(spark, cfg, …)`
+  *     applies; the defaults are the reference's values
   *  - `LOG_DIR` / `PROGRESS_UPDATE_INTERVAL` / `KAFKA_CONTAINER_NAME` → no Spark
   *     equivalent (Spark's own logging/UI/metrics); parsed for round-trip parity
   */
@@ -64,7 +65,8 @@ final case class GraftConfig(
     "spark.sql.parquet.compression.codec" -> parquetCompression,
     "spark.io.compression.zstd.level" -> compressionLevel.toString)
 
-  /** The `kafka.*` reader options for `readStream.format("kafka")`. */
+  /** The `kafka.*` reader options `IngestPipeline.kafkaSource` applies to
+    * `readStream.format("kafka")`. */
   def kafkaOptions: Map[String, String] = Map(
     "kafka.bootstrap.servers" -> bootstrapServers,
     "kafka.fetch.min.bytes" -> fetchMinBytes.toString,

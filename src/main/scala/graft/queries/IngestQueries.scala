@@ -288,9 +288,9 @@ object IngestQueries {
     },
 
     // ---- Windowed keep-first dedup: one survivor per (user_id,
-    // event_type) per event-hour — the batch twin of
-    // `IngestPipeline.streamingDedupWithinWatermark` (bounded-state
-    // streaming dedup keyed the same way). The hour bucket is integer
+    // event_type) per event-hour — the batch twin of Spark's
+    // `dropDuplicatesWithinWatermark` (bounded-state streaming dedup
+    // keyed the same way). The hour bucket is integer
     // floor-division of the epoch (exact in both engines; Tables reads the
     // ns-epoch losslessly); survivor = earliest (ts, event_id). Shape at
     // 100 TB: ONE window shuffle keyed on the composite (user, type, hour)

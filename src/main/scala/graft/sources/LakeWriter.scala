@@ -184,13 +184,6 @@ object LakeWriter {
       .reduceLeft(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** S10: fast-append staging write (deferred-dedup phase 1, `:652-686`). */
-  def writeStaging(df: DataFrame, stagingDir: String, topic: String, sessionId: String): String = {
-    val path = s"$stagingDir/${topic}_$sessionId"
-    df.write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(path)
-    path
-  }
-
   /** S13: backup a lake path before a destructive rewrite (`R:620-651`). */
   def backup(spark: SparkSession, src: String, backupRoot: String, stamp: String): String = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)

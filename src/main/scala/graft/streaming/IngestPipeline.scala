@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.ingest.GraftConfig
 
 /** Structured-Streaming ingest: the idiomatic replacement for the
   * reference's run-to-completion Kafka drain (SURVEY §2.8).
@@ -18,30 +20,31 @@ import org.apache.spark.sql.types.StructType
   * by other tools).
   *
   * Source here is a file stream over the testdata shape (no broker in the
-  * container); the Kafka variant swaps `readStream.format("kafka")` with
-  * the reference's fetch tuning (`kafka.fetch.min.bytes=10485760` etc.,
-  * collector `:332-337`) — everything downstream is identical because both
-  * sources produce the same (metadata + payload) columns.
+  * container); the Kafka variant swaps in `readStream.format("kafka")` with
+  * the config's fetch tuning ([[GraftConfig.kafkaOptions]], defaulting to
+  * the reference's collector `:332-337` values) — everything downstream is
+  * identical because both sources produce the same (metadata + payload)
+  * columns.
   */
 object IngestPipeline {
 
-  /** Kafka source with the reference's consumer tuning (collector
-    * `:332-337`: 10MB min fetch, 50MB per partition) and the 5-column
+  /** Kafka source with the config's brokers and consumer tuning
+    * ([[GraftConfig.kafkaOptions]]: `BOOTSTRAP_SERVERS`, `FETCH_MIN_BYTES`,
+    * `MAX_PARTITION_FETCH_BYTES`, defaulting to the reference's collector
+    * `:332-337` 10MB min fetch / 50MB per partition) and the 5-column
     * metadata envelope the collector emits (`:388-399`). `.format("kafka")`
     * is a runtime string lookup, so this compiles with NO connector on the
     * classpath; actually running it needs the `spark-sql-kafka-0-10`
-    * connector jars (not present in `/opt/spark/jars`) AND a live broker —
-    * this container has neither, and the file-source twin below exercises
-    * the identical downstream pipeline. */
-  def kafkaSource(spark: SparkSession, brokers: String, topics: String,
+    * connector jars (not present in the Spark distribution's jars) AND a
+    * live broker — the file-source twin below exercises the identical
+    * downstream pipeline without either. */
+  def kafkaSource(spark: SparkSession, cfg: GraftConfig, topics: String,
                   startingOffsets: String = "earliest"): DataFrame =
     spark.readStream
       .format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
+      .options(cfg.kafkaOptions)
       .option("subscribe", topics)
       .option("startingOffsets", startingOffsets)
-      .option("kafka.fetch.min.bytes", "10485760")
-      .option("kafka.max.partition.fetch.bytes", "52428800")
       .load()
       .select(
         col("topic").as("kafka_topic"),
@@ -57,8 +60,9 @@ object IngestPipeline {
     * `dedupKeys` non-empty = INLINE source-borne dedup during the drain
     * (`dropDuplicates` without a watermark — state grows with distinct
     * keys, which is bounded for a run-once drain the way the reference's
-    * in-memory ledger is; a forever-running stream should use
-    * [[streamingDedupWithinWatermark]] instead). */
+    * in-memory ledger is; a forever-running stream should bound its state
+    * with a watermark and Spark's `dropDuplicatesWithinWatermark`
+    * instead). */
   def runFileIngest(spark: SparkSession, srcDir: String, schema: StructType,
                     payloadSchema: StructType, dest: String, checkpoint: String,
                     compression: String = "zstd",
@@ -656,260 +660,16 @@ object IngestPipeline {
       .findFirstMatchIn(IdBloom.readSmall(fs, p)).map(_.group(1))
   }
 
-  /** Streaming key-dedup with a watermark — the streaming twin of the
-    * anti-join dedup (J1): `dropDuplicates` keeps per-key state only
-    * within the watermark horizon, so state is bounded (the batch
-    * anti-join against the whole lake is the unbounded-history variant). */
-  def streamingDedup(events: DataFrame, keys: Seq[String],
-                     watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark).dropDuplicates(keys :+ "ts")
-
-  /** Streaming key-dedup where DUPLICATES MAY DISAGREE ON EVENT TIME
-    * (redelivered records re-stamped by a producer retry — the case
-    * `dropDuplicates(keys :+ "ts")` misses because the new timestamp makes
-    * the row look distinct). `dropDuplicatesWithinWatermark` keys state on
-    * the business key alone and expires each entry once the watermark
-    * passes its first-seen event time, so state stays bounded while
-    * catching re-stamped duplicates inside the horizon. */
-  def streamingDedupWithinWatermark(events: DataFrame, keys: Seq[String],
-                                    watermark: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-  /** Stream-static enrichment: join each micro-batch against a SMALL
-    * static dimension, broadcast to every executor — no streaming state at
-    * all (unlike stream-stream joins), no shuffle of the stream side, and
-    * the dimension is re-resolvable per batch (a lake-backed dim picks up
-    * slowly-changing updates). This is the shape for attaching topic
-    * configs / source weights / allowlists to a 100 TB/day stream. */
-  def enrichWithDim(stream: DataFrame, dim: DataFrame,
-                    streamKey: String, dimKey: String): DataFrame =
-    stream.join(broadcast(dim), stream(streamKey) === dim(dimKey), "left")
-      .drop(dim(dimKey))
-
-  /** Event-time tumbling aggregation with a watermark: the streaming twin
-    * of `q_window_tumbling`. Late rows beyond the watermark are dropped;
-    * state size stays bounded at any scale because closed windows age out. */
-  def windowedCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-
-  /** Stream-stream INTERVAL JOIN with watermarks on both sides: enrich an
-    * event stream with the matching record from a second stream whose
-    * event time falls in the hour before the event. Both watermarks bound
-    * the join state (each side buffers only rows inside its horizon), so
-    * state stays O(rate × window) at any scale — the streaming twin of
-    * the batch range join (`q_range_join`). */
-  def enrichStream(events: DataFrame, other: DataFrame,
-                   eventsKey: String = "user_id", otherKey: String = "o_user",
-                   eventsTime: String = "ts", otherTime: String = "ots",
-                   window: String = "1 HOUR",
-                   eventsWatermark: String = "1 hour",
-                   otherWatermark: String = "1 hour"): DataFrame =
-    events.withWatermark(eventsTime, eventsWatermark)
-      .join(other.withWatermark(otherTime, otherWatermark),
-        expr(s"$eventsKey = $otherKey AND $otherTime BETWEEN " +
-          s"$eventsTime - INTERVAL $window AND $eventsTime"),
-        "inner")
-
-  /** Per-user session state: custom stateful operator via
-    * flatMapGroupsWithState — emits a session row whenever a user is idle
-    * past `gapMinutes`. State per key is O(1); the shuffle is on user_id. */
+  /** Per-user gap sessionization, the streaming twin of
+    * `q_session_window`: a custom stateful operator via
+    * flatMapGroupsWithState that emits a session row whenever a user is
+    * idle past `gapMinutes`. State per key is O(1); the shuffle is on
+    * user_id. An event-time timeout closes a key's final session once
+    * the watermark passes its idle deadline. Runs on the default state
+    * store provider. */
   case class Evt(user_id: Long, ts: java.sql.Timestamp, value: Double)
   case class SessionState(start: Long, last: Long, n: Long, sum: Double)
   case class SessionOut(user_id: Long, start_ms: Long, end_ms: Long, n_events: Long, sum_value: Double)
-
-  /** The same sessionization on Spark 4's `transformWithState` — the
-    * current-generation arbitrary-state API (successor to
-    * flatMapGroupsWithState): typed per-key [[ValueState]] from a state
-    * store handle, plus real EVENT-TIME TIMERS, so an idle session closes
-    * when the watermark passes `last + gap` even if its key never
-    * receives another row — the case the fMGWS variant can only handle
-    * via its coarser per-key timeout. State stays O(1) per key; the only
-    * shuffle is the groupByKey on user_id. Requires the RocksDB state
-    * store provider (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`) — the default HDFS-backed
-    * store lacks the multi-column-family layout timers need. */
-  class SessionProcessor(gapMs: Long) extends StatefulProcessor[Long, Evt, SessionOut] {
-    @transient private var state: ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[SessionState](
-        "session", Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Evt],
-                                 tv: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var cur = if (state.exists()) Some(state.get()) else None
-      val out = Seq.newBuilder[SessionOut]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last <= gapMs =>
-            // min/max merge: late-but-in-watermark rows from earlier
-            // micro-batches must never move the session end backwards
-            cur = Some(s.copy(start = math.min(s.start, t),
-              last = math.max(s.last, t), n = s.n + 1, sum = s.sum + e.value))
-          case Some(s) =>
-            out += SessionOut(userId, s.start, s.last, s.n, s.sum)
-            cur = Some(SessionState(t, t, 1, e.value))
-          case None =>
-            cur = Some(SessionState(t, t, 1, e.value))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        // re-arm the close timer at the session's current idle deadline
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(s.last + gapMs)
-      }
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[SessionOut] =
-      if (state.exists()) {
-        val s = state.get()
-        // only close if genuinely idle (a newer row may have re-armed)
-        if (info.getExpiryTimeInMs >= s.last + gapMs) {
-          state.clear()
-          Iterator.single(SessionOut(userId, s.start, s.last, s.n, s.sum))
-        } else Iterator.empty
-      } else Iterator.empty
-  }
-
-  def sessionizeTws(events: Dataset[Evt], gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMinutes * 60000L),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Continuous heavy hitters: per-shard Misra–Gries summaries maintained
-    * in stream state ([[graft.functions.Sketches.MisraGries]] — the same
-    * mergeable summary the batch path uses), keyed by a hash shard so no
-    * single task owns the whole vocabulary. Each trigger emits every
-    * touched shard's current sketch; a reader merges the ≤ `shards`
-    * k-entry maps with `MisraGries.merge` (associative, guarantee-
-    * preserving — SketchProps) to get corpus-wide candidates at any point
-    * in the stream's life. Each emission carries a per-shard update
-    * sequence number so readers can pick the LATEST sketch per shard
-    * without relying on sink row order. State is bounded at shards × k
-    * entries regardless of vocabulary size — the streaming analog of
-    * `q_heavy_hitters_sketch`'s no-token-shuffle contract. Null tokens
-    * shard to 0 and are dropped by the MG reduce (matching the batch
-    * path's null tolerance). */
-  def streamingHeavyHitters(tokens: Dataset[String], k: Int = 64,
-                            shards: Int = 8): Dataset[(Int, Long, Map[String, Long])] = {
-    import tokens.sparkSession.implicits._
-    val mg = graft.functions.Sketches.MisraGries(k)
-    tokens
-      .groupByKey(t => math.floorMod(if (t == null) 0 else t.##, shards))
-      .mapGroupsWithState[(Long, Map[String, Long]), (Int, Long, Map[String, Long])](
-        GroupStateTimeout.NoTimeout()) {
-        (shard: Int, rows: Iterator[String],
-         state: GroupState[(Long, Map[String, Long])]) =>
-          val (seq, prev) = state.getOption.getOrElse((0L, mg.zero))
-          val cur = rows.foldLeft(prev)(mg.reduce)
-          state.update((seq + 1, cur))
-          (shard, seq + 1, cur)
-      }
-  }
-
-  /** Continuous quantiles: per-shard [[graft.functions.Sketches
-    * .QuantileSketch]] compactor states maintained in stream state — the
-    * streaming twin of `q_percentile_sketch`, same shape as
-    * [[streamingHeavyHitters]]. Values shard by hash so no single task
-    * owns the whole stream; each trigger emits every touched shard's
-    * current sketch state with an update sequence number, and a reader
-    * merges the latest ≤ `shards` states with `QuantileSketch.merge`
-    * (associative — SketchProps) then `finish`es for corpus-lifetime
-    * quantiles at any point in the stream's life. State is bounded at
-    * shards × O(k·log n) doubles regardless of stream length. */
-  def streamingQuantiles(values: Dataset[Double], k: Int = 256, shards: Int = 8)
-      : Dataset[(Int, Long, graft.functions.Sketches.QSketchState)] = {
-    import values.sparkSession.implicits._
-    val qsk = graft.functions.Sketches.QuantileSketch(k, Seq(0.5))
-    values
-      .groupByKey(v => math.floorMod(java.lang.Double.hashCode(v), shards))
-      .mapGroupsWithState[(Long, graft.functions.Sketches.QSketchState),
-        (Int, Long, graft.functions.Sketches.QSketchState)](
-        GroupStateTimeout.NoTimeout()) {
-        (shard: Int, rows: Iterator[Double],
-         state: GroupState[(Long, graft.functions.Sketches.QSketchState)]) =>
-          val (seq, prev) = state.getOption.getOrElse((0L, qsk.zero))
-          val cur = rows.foldLeft(prev)((st, v) => qsk.reduce(st, v))
-          state.update((seq + 1, cur))
-          (shard, seq + 1, cur)
-      }
-  }
-
-  case class RateAlarm(hr: Long, n: Long, w_hours: Long, anomaly: Boolean)
-
-  /** Continuous ingest-rate anomaly alarms — the streaming twin of
-    * `q_rate_anomaly`: hourly event counts (watermarked tumbling window)
-    * feed a stateful trailing-24h z-score fence, emitting one alarm row
-    * per CLOSED hour with the batch query's exact integer rule —
-    * (n·w − s)² > 9·(w·ssq − s²), warm-up (< 12 trailing hours) = false.
-    *
-    * State shape: ONE key (the stream of closed hours is already reduced
-    * to ≤ 24·365 rows/year by the windowed aggregate — a global key over
-    * hourly rows is bounded by construction, unlike a global key over
-    * events), holding the 25 most recent PRESENT hours; older entries are
-    * dropped on every update, so state never grows. The fence frame is
-    * the previous 24 PRESENT hours — the batch twin's ROWS frame, not
-    * hour slots, so gappy streams (outages) agree with the batch query
-    * instead of suppressing the recovery-spike alarm. Closed windows can
-    * arrive out of order across triggers — each hour's fence reads the
-    * trailing hours PRESENT at emission, so a straggler affects only
-    * alarms emitted after it (the documented divergence from the batch
-    * twin, which always sees the complete history). */
-  def streamingRateAnomaly(events: DataFrame, watermark: String = "2 hours"): Dataset[RateAlarm] = {
-    import events.sparkSession.implicits._
-    val hourly = events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      // window.start is hour-floored, so integer DIV is exact for
-      // pre-1970 hours too (a double divide + cast truncates toward
-      // zero and would split negative epochs from the batch twin)
-      .select(expr("unix_timestamp(window.start) DIV 3600").as("hr"),
-        col("n").as("n"))
-      .as[(Long, Long)]
-    hourly
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[Map[Long, Long], RateAlarm](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Int, rows: Iterator[(Long, Long)], state: GroupState[Map[Long, Long]]) =>
-          var seen = state.getOption.getOrElse(Map.empty[Long, Long])
-          val out = rows.toSeq.sortBy(_._1).map { case (hr, n) =>
-            // the previous 24 PRESENT hours, exactly like the batch
-            // twin's ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING — hour
-            // SLOTS would silently disagree on gappy streams (an outage
-            // empties the slot window and suppresses the alarm on the
-            // recovery spike, the one the alarm exists for)
-            val win = seen.keys.filter(_ < hr).toSeq.sorted.takeRight(24).map(seen)
-            val w = win.size.toLong
-            // BigInt fence: the batch twin widens the squared terms to
-            // decimal(38,0) for exactly this wrap (raw int64 overflows
-            // silently above ~1.3e8 events/hour); 25 values per update,
-            // so the arbitrary-precision cost is nil
-            val s = win.map(BigInt(_)).sum
-            val ssq = win.map(x => BigInt(x) * x).sum
-            val d = BigInt(n) * w - s
-            val anomaly = w >= 12 && d * d > 9 * (w * ssq - s * s)
-            // state = the 25 most recent PRESENT hours (covers the next
-            // hour's 24-row frame); an hour straggling in below that
-            // horizon is dropped — the documented divergence
-            seen = (seen + (hr -> n)).toSeq.sortBy(-_._1).take(25).toMap
-            RateAlarm(hr, n, w, anomaly)
-          }
-          state.update(seen)
-          out.iterator
-      }
-  }
 
   def sessionize(events: Dataset[Evt], gapMinutes: Int = 30): Dataset[SessionOut] = {
     import events.sparkSession.implicits._

@@ -10,8 +10,8 @@ import org.apache.spark.util.sketch.BloomFilter
 import graft.functions.TextFunctions._
 
 /** Streaming NEAR-dup admission control — the Structured-Streaming twin of
-  * `q_dedup_incremental_lsh` (and the near-dup complement of
-  * [[IngestPipeline.streamingDedup]]'s exact-key dedup): each micro-batch
+  * `q_dedup_incremental_lsh` (and the near-dup complement of Spark's
+  * exact-key `dropDuplicatesWithinWatermark`): each micro-batch
   * of documents is MinHash-banded, joined batch-bands ⋈ lake-bands (never
   * lake × lake), candidate pairs verified with exact shingle Jaccard, and
   * only novel documents are admitted to the lake together with their band

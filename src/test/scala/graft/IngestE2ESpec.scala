@@ -102,24 +102,4 @@ class IngestE2ESpec extends SparkSpec {
       .collect().head
     assert(v.getAs[Long]("n") == 90 && v.getAs[Long]("lo") == 1 && v.getAs[Long]("hi") == 90)
   }
-
-  test("streaming dedup drops in-horizon duplicates") {
-    import graft.streaming.IngestPipeline
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val mem = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val df = mem.toDF().toDF("ts", "event_id", "value")
-    val q = IngestPipeline.streamingDedup(df, Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$m%02d:00")
-    mem.addData((t(0), 1L, 1.0), (t(1), 1L, 2.0), (t(2), 2L, 3.0))
-    q.processAllAvailable()
-    mem.addData((t(1), 1L, 9.9)) // exact duplicate key+ts within horizon
-    q.processAllAvailable()
-    val n = spark.table("dedup_out").count()
-    q.stop()
-    assert(n == 3)
-  }
 }

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.Tag
 
+import graft.ingest.GraftConfig
 import graft.streaming.IngestPipeline
 
 /** Live-broker integration recipe for the one runtime seam the sandbox
@@ -37,8 +38,9 @@ class KafkaIntegrationSpec extends SparkSpec {
     val topic = sys.env.getOrElse("SPARK_GRAFT_KAFKA_TOPIC", "graft-it")
     val out = Files.createTempDirectory("kafka_it_out").toString
     val ckpt = Files.createTempDirectory("kafka_it_ckpt").toString
+    val cfg = GraftConfig(bootstrapServers = brokers.get)
 
-    val q = IngestPipeline.kafkaSource(spark, brokers.get, topic)
+    val q = IngestPipeline.kafkaSource(spark, cfg, topic)
       .writeStream
       .format("parquet")
       .option("path", out)
@@ -55,7 +57,7 @@ class KafkaIntegrationSpec extends SparkSpec {
 
     // exactly-once across a resume: a second AvailableNow pass from the
     // same checkpoint must add nothing when the topic hasn't moved
-    val q2 = IngestPipeline.kafkaSource(spark, brokers.get, topic)
+    val q2 = IngestPipeline.kafkaSource(spark, cfg, topic)
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()

@@ -58,8 +58,10 @@ class LakeWriterSpec extends SparkSpec {
     val lake = s"$work/lake"
     ev.filter($"event_id" < 500).write.parquet(lake)
     // phase 1: fast-append the (overlapping) fresh batch to staging
-    val staged = LakeWriter.writeStaging(
-      ev.filter($"event_id" >= 300), s"$work/.staging", "events", "sess1")
+    // (reference deferred-dedup phase 1, `:652-686`)
+    val staged = s"$work/.staging/events_sess1"
+    ev.filter($"event_id" >= 300).write.mode("overwrite").option("compression", "zstd")
+      .parquet(staged)
     // phase 2: merge — anti-join staged vs lake, append the remainder
     val fresh = Dedup.antiJoinNew(
       spark.read.parquet(staged), spark.read.parquet(lake), Seq("user_id", "event_id"))

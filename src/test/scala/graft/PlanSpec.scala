@@ -13,6 +13,14 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  test("the spec session carries the Sessions policy the bench and collector run under") {
+    // every pin below is only as honest as the session it plans under:
+    // cached-plan repartitioning changes where AQE may coalesce, and the
+    // codec changes every parquet write a spec makes
+    assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(spark.conf.get("spark.sql.parquet.compression.codec") == "zstd")
+  }
+
   test("q_filter_project pushes predicates and prunes columns at the scan") {
     val p = plan("q_filter_project")
     assert(p.contains("PushedFilters: ["), p)

@@ -14,7 +14,7 @@ class SkewJoinSpec extends SparkSpec {
     val right = (0L to 60L).map(k => (k, s"dim$k")).toDF("k", "name")
     val salted = SkewJoin.saltedEquiJoin(left, right, "k", saltBuckets = 8)
       .orderBy("k", "v")
-    val plain = SkewJoin.unsaltedEquiJoin(left, right, "k")
+    val plain = left.join(right, Seq("k"))
       .select(salted.columns.map(col): _*).orderBy("k", "v")
     assert(salted.collect().toSeq == plain.collect().toSeq)
   }

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -26,81 +25,6 @@ class StreamingSpec extends SparkSpec {
     // run-once again with same checkpoint: no new files, still exactly-once
     IngestPipeline.runFileIngest(spark, src, ev.schema, payloadSchema, dest, ckpt)
     assert(spark.read.parquet(dest).count() == ev.count())
-  }
-
-  test("streaming rate anomaly flags a spike hour with the batch fence rule") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = mem.toDF().toDF("ts", "event_type", "value")
-    val alarms = IngestPipeline.streamingRateAnomaly(df, watermark = "0 seconds")
-    val q = alarms.writeStream.format("memory").queryName("rate_out")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    def t(hour: Int, minute: Int) =
-      new java.sql.Timestamp(hour * 3600000L + minute * 60000L)
-    // 20 steady hours at 3 events, then a 30-event spike hour, then quiet
-    val steady = for (h <- 0 until 20; m <- Seq(1, 2, 3)) yield (t(h, m), "a", 1.0)
-    val spike = for (m <- 1 to 30) yield (t(20, m), "a", 1.0)
-    mem.addData(steady ++ spike: _*)
-    q.processAllAvailable()
-    mem.addData((t(30, 0), "a", 1.0)) // advance watermark → closes all hours ≤ 29
-    q.processAllAvailable()
-    val rows = spark.table("rate_out")
-      .select($"hr", $"n", $"w_hours", $"anomaly")
-      .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1)
-    q.stop()
-    val byHour = rows.map(r => r._1 -> r).toMap
-    assert(rows.map(_._1).toSeq == (0L until 21L), rows.mkString(","))
-    assert(byHour(20L)._2 == 30 && byHour(20L)._4, "the spike hour must alarm")
-    assert(rows.filter(_._1 < 20).forall(!_._4), "steady hours must not alarm")
-    assert(byHour(5L)._3 == 5, "trailing window counts only prior hours")
-  }
-
-  test("streaming rate anomaly alarms the recovery spike after an outage gap") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = mem.toDF().toDF("ts", "event_type", "value")
-    val alarms = IngestPipeline.streamingRateAnomaly(df, watermark = "0 seconds")
-    val q = alarms.writeStream.format("memory").queryName("rate_gap_out")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
-    def t(hour: Int, minute: Int) =
-      new java.sql.Timestamp(hour * 3600000L + minute * 60000L)
-    // 20 steady hours, a 30-hour total outage (no rows at all), then a spike
-    val steady = for (h <- 0 until 20; m <- Seq(1, 2, 3)) yield (t(h, m), "a", 1.0)
-    val spike = for (m <- 1 to 30) yield (t(50, m), "a", 1.0)
-    mem.addData(steady ++ spike: _*)
-    q.processAllAvailable()
-    mem.addData((t(60, 0), "a", 1.0)) // advance watermark → closes hour 50
-    q.processAllAvailable()
-    val rows = spark.table("rate_gap_out")
-      .select($"hr", $"n", $"w_hours", $"anomaly")
-      .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1)
-    q.stop()
-    val spikeRow = rows.find(_._1 == 50L).get
-    // the batch-twin frame is the previous 24 PRESENT hours (0-19), not
-    // empty slot indices 26-49 — an hour-slot window would report w=0
-    // and stay silent on exactly this recovery spike
-    assert(spikeRow._3 == 20, s"frame must hold the 20 present hours, got $spikeRow")
-    assert(spikeRow._4, "the post-outage spike must alarm")
-  }
-
-  test("watermarked windowed aggregation over a memory stream") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = mem.toDF().toDF("ts", "event_type", "value")
-    val agg = IngestPipeline.windowedCounts(df, watermark = "0 seconds")
-    val q = agg.writeStream.format("memory").queryName("win_out")
-      .outputMode(OutputMode.Append()).start()
-    def t(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    mem.addData((t(1, 0), "a", 1.0), (t(1, 30), "a", 2.0), (t(1, 45), "b", 5.0))
-    q.processAllAvailable()
-    mem.addData((t(3, 0), "a", 9.0)) // advances watermark past hour 1 → emits hour-1 windows
-    q.processAllAvailable()
-    val rows = spark.table("win_out")
-      .select($"window.start".cast("string"), $"event_type", $"n", $"sum_value")
-      .as[(String, String, Long, Double)].collect().toSet
-    q.stop()
-    assert(rows.contains(("2024-01-01 01:00:00", "a", 2L, 3.0)))
-    assert(rows.contains(("2024-01-01 01:00:00", "b", 1L, 5.0)))
   }
 
   test("foreachBatch dedup-merge sink is idempotent (two-phase deferred dedup twin)") {
@@ -132,104 +56,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows === Set((1L, 1L, 1.0), (1L, 2L, 2.0), (2L, 1L, 3.0)))
   }
 
-  test("stream-stream interval join matches within the hour window, drops outside it") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(h: Int, m: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$m%02d:00")
-    val evMem = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val otMem = MemoryStream[(java.sql.Timestamp, Long, Double)]
-    val joined = IngestPipeline.enrichStream(
-      evMem.toDF().toDF("ts", "user_id", "event_type"),
-      otMem.toDF().toDF("ots", "o_user", "o_value"))
-    val q = joined.writeStream.format("memory").queryName("ss_join")
-      .outputMode(OutputMode.Append()).start()
-    // user 1: order 35 min before the event (inside window); user 2: order
-    // 2h before (outside); user 3: order AFTER the event (outside)
-    otMem.addData((t(1, 0), 1L, 10.0), (t(0, 0), 2L, 20.0), (t(3, 0), 3L, 30.0))
-    evMem.addData((t(1, 35), 1L, "click"), (t(2, 0), 2L, "click"), (t(2, 0), 3L, "click"))
-    q.processAllAvailable()
-    val rows = spark.table("ss_join").select($"user_id", $"o_value")
-      .as[(Long, Double)].collect().toSet
-    q.stop()
-    assert(rows === Set((1L, 10.0)))
-  }
-
-  test("dropDuplicatesWithinWatermark catches re-stamped duplicates; ts-keyed dedup misses them") {
-    implicit val sqlCtx = spark.sqlContext
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val df = mem.toDF().toDF("event_id", "ts", "value")
-    val q = IngestPipeline.streamingDedupWithinWatermark(df, Seq("event_id"), "1 hour")
-      .writeStream.format("memory").queryName("wm_dedup")
-      .outputMode(OutputMode.Append()).start()
-    // event 1 redelivered with a DIFFERENT timestamp (producer retry
-    // re-stamp) inside the watermark horizon — must be dropped
-    mem.addData((1L, t("2024-01-01 01:00:00"), 1.0),
-      (1L, t("2024-01-01 01:05:00"), 1.0),
-      (2L, t("2024-01-01 01:10:00"), 2.0))
-    q.processAllAvailable()
-    mem.addData((1L, t("2024-01-01 01:20:00"), 1.0)) // still within horizon
-    q.processAllAvailable()
-    val ids = spark.table("wm_dedup").select($"event_id")
-      .as[Long].collect().toSeq.sorted
-    q.stop()
-    assert(ids === Seq(1L, 2L))
-    // contrast: the ts-keyed variant would have passed all three copies of
-    // event 1 (each (event_id, ts) pair is distinct)
-  }
-
-  test("stream-static dim enrichment broadcasts the dim and keeps stream rows stateless") {
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq(("purchase", 3L), ("view", 1L)).toDF("etype", "weight")
-    val mem = MemoryStream[(Long, String)]
-    val enriched = IngestPipeline.enrichWithDim(
-      mem.toDF().toDF("event_id", "event_type"), dim, "event_type", "etype")
-    val q = enriched.writeStream.format("memory").queryName("dim_join")
-      .outputMode(OutputMode.Append()).start()
-    mem.addData((1L, "purchase"), (2L, "view"), (3L, "click"))
-    q.processAllAvailable()
-    val rows = spark.table("dim_join")
-      .select($"event_id", $"weight")
-      .as[(Long, Option[Long])].collect().toSet
-    q.stop()
-    // left join: unmatched stream rows survive with null weight
-    assert(rows === Set((1L, Some(3L)), (2L, Some(1L)), (3L, None)))
-  }
-
-  test("transformWithState sessionization closes idle sessions via event-time timers") {
-    import IngestPipeline._
-    implicit val sqlCtx = spark.sqlContext
-    val base = 3600000L
-    def ts(ms: Long) = new java.sql.Timestamp(base + ms)
-    // transformWithState needs multi-column-family state → RocksDB provider
-    // (scoped to this query's session clone via the conf pair below)
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[Evt]
-    val out = sessionizeTws(
-      mem.toDS().withWatermark("ts", "0 seconds").as[Evt], gapMinutes = 30)
-    val q = out.writeStream.format("memory").queryName("tws_out")
-      .outputMode(OutputMode.Append()).start()
-    // user 1's session: two events, then silence; user 2 keeps the
-    // watermark advancing — user 1's TIMER must close the session even
-    // though user 1 never gets another row (the fMGWS variant needs a
-    // same-key event or a timeout tick for this)
-    mem.addData(Evt(1, ts(0), 1.0), Evt(1, ts(60000), 2.0))
-    q.processAllAvailable()
-    mem.addData(Evt(2, ts(10 * 60 * 60000), 9.0)) // watermark → +10h
-    q.processAllAvailable()
-    mem.addData(Evt(2, ts(11 * 60 * 60000), 1.0)) // one more batch so timers fire
-    q.processAllAvailable()
-    val sessions = spark.table("tws_out").as[SessionOut].collect().toSet
-    q.stop()
-    prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-    assert(sessions.contains(SessionOut(1, base, base + 60000, 2, 3.0)),
-      s"idle session not closed by timer: $sessions")
-  }
-
   test("sessionization emits closed sessions with correct bounds (batch-mode check)") {
     import IngestPipeline._
     // batch Dataset run of the same per-group logic via groupByKey+flatMapGroups
@@ -253,67 +79,5 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     // the 10h-later event closes session A; session B and user 2 stay open in state
     assert(sessions.contains(SessionOut(1, base, base + 60000, 2, 3.0)))
-  }
-
-  test("streaming heavy hitters: sharded MG state accumulates across batches, merge recovers the heavies") {
-    import graft.functions.Sketches.MisraGries
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val out = IngestPipeline.streamingHeavyHitters(mem.toDS(), k = 8, shards = 4)
-    val q = out.writeStream.format("memory").queryName("mg_out")
-      .outputMode(OutputMode.Update()).start()
-    // batch 1: 'hot' dominates; batch 2 continues the stream — state must
-    // carry counts over, not restart per trigger
-    val b1 = Seq.fill(30)("hot") ++ (1 to 10).map("t" + _)
-    val b2 = Seq.fill(20)("hot") ++ Seq.fill(15)("warm") ++ (11 to 20).map("t" + _)
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    // latest sketch per shard by the emitted sequence number (sink row
-    // order is not a contract)
-    val latest = spark.table("mg_out").as[(Int, Long, Map[String, Long])].collect()
-      .groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2)._3 }
-    val mg = MisraGries(8)
-    val merged = latest.reduce(mg.merge)
-    q.stop()
-    val n = (b1 ++ b2).size.toLong
-    val truth = (b1 ++ b2).groupBy(identity).map { case (t, v) => t -> v.size.toLong }
-    // guarantee carries over the whole stream: heavies present, no overshoot
-    assert(merged.contains("hot") && merged.contains("warm"))
-    merged.foreach { case (t, est) => assert(est <= truth(t), s"$t overshoots") }
-    assert(merged("hot") >= truth("hot") - n / 9 - 1)
-  }
-
-  test("continuous quantiles: sharded compactor states merge to the stream-lifetime answer") {
-    import graft.functions.Sketches.{QSketchState, QuantileSketch}
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Double]
-    val out = IngestPipeline.streamingQuantiles(mem.toDS(), k = 64, shards = 4)
-    val q = out.writeStream.format("memory").queryName("qsk_out")
-      .outputMode(OutputMode.Update()).start()
-    // two triggers — state must carry the sketch across triggers, not
-    // restart per batch
-    val rnd = new scala.util.Random(7)
-    val b1 = Vector.fill(800)(rnd.nextInt(500).toDouble)
-    val b2 = Vector.fill(1200)(rnd.nextInt(500).toDouble + 250.0)
-    mem.addData(b1: _*); q.processAllAvailable()
-    mem.addData(b2: _*); q.processAllAvailable()
-    val latest = spark.table("qsk_out").as[(Int, Long, QSketchState)].collect()
-      .groupBy(_._1).map { case (_, rs) => rs.maxBy(_._2)._3 }
-    q.stop()
-    val agg = QuantileSketch(64, Seq(0.25, 0.5, 0.9))
-    val merged = latest.reduce(agg.merge)
-    val est = agg.finish(merged)
-    val all = (b1 ++ b2).sorted
-    val n = all.length
-    // total weight across shards must be the exact stream length
-    val weight = merged.levels.zipWithIndex.map { case (l, i) => l.length.toLong << i }.sum
-    assert(weight == n.toLong)
-    Seq(0.25, 0.5, 0.9).zip(est).foreach { case (p, e) =>
-      val lo = all.count(_ < e)
-      val hi = all.count(_ <= e)
-      val t = math.max(1, math.ceil(p * n).toInt)
-      val err = if (t < lo + 1) lo + 1 - t else if (t > hi) t - hi else 0
-      assert(err <= 0.04 * n, s"p=$p est=$e rank err $err of $n")
-    }
   }
 }
