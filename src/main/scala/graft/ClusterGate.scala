@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *     expressions (`ZOrder2`, `MsgpackToJsonExpr`, `MinHashSlots`, the
   *     `StaticInvoke` calls into `VectorOps`), and the multi-MB bloom
   *     plan-literals survive task serialization and network transport;
-  *   - the streaming protocols (inline keeper + near-dup admission)
-  *     run their foreachBatch closures on remote executors.
+  *   - the inline keeper's streaming protocol runs its foreachBatch
+  *     closure on remote executors.
   *
   * Usage: `sbt package && sbt "runMain graft.ClusterGate"`. Prints a
   * markdown row per item plus one JSON line; exits non-zero on any
@@ -194,48 +194,6 @@ object ClusterGate {
         lake.where(col("raw_value").isNull).count() == 800 &&
         lake.columns.contains("px"),
         "envelope drain diverged under local-cluster")
-    }
-    item("neardup_batch") {
-      import spark.implicits._
-      val base = "the quick brown fox jumps over the lazy dog near the quiet river bank today"
-      val nd = "the quick brown fox jumps over the lazy dog near the quiet river bank tonight"
-      val other = "completely different subject matter entirely about compiler design and type systems theory"
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      Seq((10L, base), (11L, nd), (12L, other)).toDF("doc_id", "text")
-        .write.parquet(s"$work/nd/src")
-      graft.streaming.NearDupStream.run(spark, s"$work/nd/src", schema,
-        s"$work/nd/lake", s"$work/nd/ckpt")
-      val ids = spark.read.parquet(s"$work/nd/lake/docs")
-        .select("doc_id").as[Long].collect().toSet
-      require(ids == Set(10L, 12L), s"near-dup admission diverged: $ids")
-    }
-    item("neardup_sharded_bloom") {
-      import spark.implicits._
-      // force the RANGE-SHARDED guard layout (tiny per-shard capacity):
-      // the admission rebuild writes per-shard generation chains, and
-      // the redelivery batch probes shard-routed bloom literals — each a
-      // distinct plan literal shipped to the executors. Unique texts so
-      // every doc clears the LSH gate; ids spread across a wide range so
-      // the split produces several shards.
-      def doc(i: Long) = (i * 1000000L,
-        s"standalone document $i covering an entirely distinct area " +
-          s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i")
-      val lake = s"$work/ndsh/lake"
-      graft.streaming.NearDupStream.processBatch(
-        (1L to 40L).map(doc).toDF("doc_id", "text"), lake, batchId = 0,
-        bloomItems = 16L, shardMaxItems = 32L)
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      val sizing = graft.streaming.IdBloom.readSizing(fs, lake)
-      require(sizing.exists(_.sharded), s"expected a sharded guard, got $sizing")
-      // redeliver everything + 5 new docs: sharded probes must drop the
-      // 40, admit the 5
-      graft.streaming.NearDupStream.processBatch(
-        (1L to 45L).map(doc).toDF("doc_id", "text"), lake, batchId = 1,
-        bloomItems = 16L, shardMaxItems = 32L)
-      val n = spark.read.parquet(s"$lake/docs").count()
-      val ndst = spark.read.parquet(s"$lake/docs").select("doc_id").distinct().count()
-      require(n == 45 && ndst == 45, s"sharded admission diverged: n=$n distinct=$ndst")
     }
 
     // 4. EXECUTOR LOSS: on a 1000-executor cluster executors die hourly;

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session defaults for every session in the repo, specs included (the
-  * harness mains, the collector, Explain, StreamBench, ScaleGen and the
+  * harness mains, the collector, Explain, ScaleGen and the
   * test `SparkSpec`; only `perfbench`'s drain session still sets its own
   * confs) — ONE place, so a session-level fix cannot silently apply to
   * the bench but not the gate or the plan pins. These are also the

@@ -22,8 +22,11 @@ package graft.ingest
   *     WHEN dedup happens, not IF (reference `:87` comment)
   *  - `SKIP_VALIDATION`              → skip the post-run count validation
   *     (`q_count_validation` shape)
-  *  - `KAFKA_CLEANUP_ENABLED`/`_MODE` → `KafkaTrim` (after_write | manual | none)
-  *  - `STAGING_RETENTION_DAYS`       → retention horizon for staging backups
+  *  - `KAFKA_CLEANUP_ENABLED`        → `KafkaTrim` (broker-side trim after a
+  *     validated drain); parsed, but no drain calls the trim yet
+  *  - `KAFKA_CLEANUP_MODE` / `STAGING_RETENTION_DAYS` → not parsed: `KafkaTrim`
+  *     has one mode (after the drain validates), and the staging GC the
+  *     retention horizon fed is dead code in the reference itself (SURVEY S15)
   *  - `PARQUET_COMPRESSION` / `COMPRESSION_LEVEL` →
   *     `spark.sql.parquet.compression.codec` (+ zstd level conf)
   *  - `ROW_GROUP_SIZE`               → parsed for round-trip parity only: the
@@ -48,9 +51,7 @@ final case class GraftConfig(
     skipDeduplication: Boolean = true,
     skipValidation: Boolean = false,
     kafkaCleanupEnabled: Boolean = false,
-    kafkaCleanupMode: String = "after_write",
     kafkaContainerName: String = "redpanda-1",
-    stagingRetentionDays: Int = 7,
     parquetCompression: String = "zstd",
     compressionLevel: Int = 3,
     rowGroupSize: Long = 1000000L,
@@ -102,9 +103,7 @@ object GraftConfig {
       skipDeduplication = b("SKIP_DEDUPLICATION", d = true),
       skipValidation = b("SKIP_VALIDATION", d = false),
       kafkaCleanupEnabled = b("KAFKA_CLEANUP_ENABLED", d = false),
-      kafkaCleanupMode = s("KAFKA_CLEANUP_MODE", "after_write"),
       kafkaContainerName = s("KAFKA_CONTAINER_NAME", "redpanda-1"),
-      stagingRetentionDays = i("STAGING_RETENTION_DAYS", 7),
       parquetCompression = s("PARQUET_COMPRESSION", "zstd"),
       compressionLevel = i("COMPRESSION_LEVEL", 3),
       rowGroupSize = l("ROW_GROUP_SIZE", 1000000L),

@@ -10,9 +10,8 @@ import org.apache.spark.util.sketch.BloomFilter
 /** Bloom-filter membership probe over a BROADCAST VARIABLE instead of a
   * plan literal.
   *
-  * Why: the streaming admission guards ([[graft.streaming.IdBloom]] —
-  * the inline keeper's id guard and NearDupStream's doc_id guard) probe
-  * a persisted bloom on every micro-batch. Spark's own
+  * Why: the inline keeper's id guard ([[graft.streaming.IdBloom]])
+  * probes a persisted bloom on every micro-batch. Spark's own
   * `BloomFilterMightContain` takes the serialized filter as a CHILD
   * EXPRESSION, so the guard used to embed the whole filter as a binary
   * `Literal` in the plan: ClusterGate measured 7.2–21.7 MiB task
@@ -30,10 +29,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * `mightContainLong` on the value — the same put/probe hash pair
   * `df.stat.bloomFilter` uses to build the filter.
   *
-  * Lifecycle: one broadcast per (bloom generation, batch) — dropped by
-  * the ContextCleaner once the batch's plan is garbage-collected, the
-  * same lifecycle as a broadcast-hash-join's table. No explicit destroy:
-  * cached micro-batch plans may outlive the probe call that built them.
+  * Lifecycle: one broadcast per bloom generation — [[graft.streaming.IdBloom]]
+  * caches it across batches and `unpersist`es it once a newer generation
+  * replaces it. No explicit destroy: cached micro-batch plans may outlive
+  * the probe call that built them.
   */
 case class BroadcastBloomMightContain(child: Expression,
     bloom: Broadcast[BloomFilter]) extends UnaryExpression {

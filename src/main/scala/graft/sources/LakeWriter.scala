@@ -193,47 +193,12 @@ object LakeWriter {
     dst.toString
   }
 
-  /** Small-file compaction — the lake-maintenance op a long-running
-    * incremental ingest needs: every micro-batch/run appends files, and a
-    * 100 TB lake that accretes thousands of KB-sized parquet files per
-    * partition pays for them on every scan (task-per-file scheduling,
-    * footer reads, no effective row-group pruning). Rewrites a path to
-    * `ceil(rows / targetRowsPerFile)` files. With `clusterBy`, files are
-    * RANGE-partitioned on the cluster keys and sorted within, so each file
-    * tiles a narrow key range and parquet min/max stats actually prune
-    * point/range scans (a round-robin shuffle would hand every file a
-    * uniform sample of the whole domain — full-span stats, no pruning).
-    * A row-unique tiebreaker (uniquified temp name, so it can never
-    * collide with a user column) is appended to the range keys so a HOT
-    * key (more rows than targetRowsPerFile) can still split across files
-    * and the file-size contract holds even for constant/low-cardinality
-    * cluster keys — adjacent files then share only that boundary key.
-    * Caveat: the tiebreaker is `monotonically_increasing_id`, which is
-    * NOT stable under task retry — a retried stage can land rows on the
-    * other side of a sampled range boundary, skewing file BALANCE (never
-    * content: every row still lands in exactly one file).
-    * Same stage-and-swap as [[rewriteInPlace]] (atomic, crash-leaves-old). */
-  def compact(spark: SparkSession, path: String, targetRowsPerFile: Long,
-              clusterBy: Seq[String] = Nil): Unit = {
-    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
-    val rows = spark.read.parquet(path).count()
-    val nFiles = math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-    val tiebreak = s"_rr_tiebreak_${java.util.UUID.randomUUID().toString.take(8)}"
-    rewriteInPlace(spark, path) { df =>
-      if (clusterBy.isEmpty) df.repartition(nFiles)
-      else df.withColumn(tiebreak, monotonically_increasing_id())
-        .repartitionByRange(nFiles, (clusterBy.map(col) :+ col(tiebreak)): _*)
-        .sortWithinPartitions(clusterBy.map(col): _*)
-        .drop(tiebreak)
-    }
-  }
-
   /** Z-ordered layout: range-partition AND sort by the Morton interleave
     * of two keys ([[graft.plans.ZOrder2]], native codegen), so rows close
     * in EITHER dimension land in the same files and parquet min/max stats
     * prune scans filtered on either column — multi-dimensional clustering
-    * a single-column sort cannot give. `nFiles` plays the
-    * targetRowsPerFile role of [[compact]]. */
+    * a single-column sort cannot give. `nFiles` sets the output file
+    * count. */
   def writeZOrdered(df: DataFrame, dest: String, keyA: String, keyB: String,
                     nFiles: Int): Unit = {
     import org.apache.spark.sql.functions.col

@@ -2,43 +2,29 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Persisted first-write-wins id guard shared by the streaming admission
-  * paths ([[NearDupStream]]'s doc_id guard, [[IngestPipeline]]'s inline
-  * keeper): a generation'd Bloom filter lake (`<lake>/_idbloom/...`) with
-  * a single sizing ledger, optionally RANGE-SHARDED by id once a monolith
-  * bloom would grow past `shardMaxItems`.
+/** Persisted first-write-wins id guard of [[IngestPipeline]]'s inline
+  * keeper: a generation'd Bloom filter over the lake's hashed keys
+  * (`<lake>/_idbloom/...`) with a single sizing ledger.
   *
-  * Contract (identical to the unsharded original): a bloom MISS is
-  * definitely-new (no false negatives — every admitted id is in its
-  * shard's latest generation); only hits pay an exact confirm against the
-  * lake. A false positive can never drop a new row; the degradation mode
-  * of any sizing/shard imbalance is extra exact confirms, never a dropped
-  * or duplicated row.
-  *
-  * Sharding, when active (`Sizing.width` > 0): ids map to shards by
-  * ARITHMETIC RIGHT SHIFT — `shard = id >> log2(width)` with `width` a
-  * power of two, which is exact floor division for every long (including
-  * negatives, where `floor(x / w) != x DIV w`). Each shard keeps its own
-  * generation chain under `_idbloom/s<shard>/<batchId>`; a batch loads
-  * ONLY the shards its own ids touch, so with locality-bearing ids
-  * (monotonic producer ids, time-prefixed ids) per-batch probe I/O stays
-  * constant as the lake grows — the monolith's plan-literal probe grows
-  * with lake size and gets heavy past a few hundred MB. Ids without
-  * locality still work (every batch touches every shard); the win is
-  * then only that no single literal exceeds the per-shard capacity.
+  * Contract: a bloom MISS is definitely-new (no false negatives — every
+  * admitted id is in the latest generation); only hits pay an exact
+  * confirm against the lake. A false positive can never drop a new row;
+  * the degradation mode of any sizing imbalance is extra exact confirms,
+  * never a dropped or duplicated row.
   *
   * Layout:
-  *   - `_idbloom/_sizing` — `items fpp count width` (one line; `items` is
-  *     the PER-SHARD capacity, `count` the lake-wide admitted ids,
-  *     `width` the shard width, 0 = unsharded). Legacy 3-field ledgers
-  *     read as width 0.
-  *   - unsharded generations: `_idbloom/<batchId>` (the original layout).
-  *   - sharded generations: `_idbloom/s<shard>/<batchId>`.
+  *   - `_idbloom/_sizing` — `items fpp count 0` (one line; `items` is the
+  *     bloom capacity, `count` the admitted ids). The trailing field is a
+  *     range-shard width that only a sharded writer ever set; a legacy
+  *     3-field ledger reads the same, and a nonzero width is rejected
+  *     ([[readSizing]]).
+  *   - generations: `_idbloom/<batchId>`, newest = highest batchId.
   *
   * All small files land via tmp+rename ([[atomicWrite]]) — atomic on
   * HDFS/POSIX; a torn newest generation on a filesystem without atomic
@@ -48,21 +34,12 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object IdBloom {
 
-  /** Sizing ledger row. `items` = per-shard bloom capacity; `count` =
-    * admitted ids lake-wide; `width` = range-shard width (power of two;
-    * 0 = unsharded monolith). */
-  case class Sizing(items: Long, fpp: Double, count: Long, width: Long) {
-    def sharded: Boolean = width > 0
-    def shardBits: Int = if (width <= 0) 0 else java.lang.Long.numberOfTrailingZeros(width)
-  }
+  /** Sizing ledger row. `items` = bloom capacity; `count` = admitted ids. */
+  case class Sizing(items: Long, fpp: Double, count: Long)
 
-  def shardOf(id: Long, width: Long): Long =
-    if (width <= 0) 0L
-    else id >> java.lang.Long.numberOfTrailingZeros(width)
+  private def genDir(lakeDir: String): Path = new Path(s"$lakeDir/_idbloom")
 
-  private def genDir(lakeDir: String, shard: Long, width: Long): Path =
-    if (width <= 0) new Path(s"$lakeDir/_idbloom")
-    else new Path(s"$lakeDir/_idbloom/s$shard")
+  private def sizingPath(lakeDir: String): Path = new Path(genDir(lakeDir), "_sizing")
 
   // ---- tiny-file IO ----------------------------------------------------
 
@@ -97,30 +74,28 @@ object IdBloom {
 
   // ---- sizing ledger ---------------------------------------------------
 
+  /** The ledger, or None on a fresh lake. Accepts the 3-field and the
+    * 4-field form; a nonzero 4th field (a range-shard width) means the
+    * guard was written by a sharded writer whose per-shard generations
+    * this layout cannot see, so reading it as a monolith would probe an
+    * empty guard and admit duplicates — refuse instead. */
   def readSizing(fs: FileSystem, lakeDir: String): Option[Sizing] = {
-    val p = new Path(s"$lakeDir/_idbloom/_sizing")
+    val p = sizingPath(lakeDir)
     if (!fs.exists(p)) None
     else {
       val parts = readSmall(fs, p).trim.split("\\s+")
-      Some(Sizing(parts(0).toLong, parts(1).toDouble, parts(2).toLong,
-        if (parts.length > 3) parts(3).toLong else 0L))
+      val width = if (parts.length > 3) parts(3).toLong else 0L
+      if (width != 0L) throw new IllegalStateException(
+        s"$p records a range-shard width of $width: this id guard was written " +
+          "by a sharded writer, and the keeper reads only the unsharded layout")
+      Some(Sizing(parts(0).toLong, parts(1).toDouble, parts(2).toLong))
     }
   }
 
-  def writeSizing(fs: FileSystem, lakeDir: String, s: Sizing): Unit = {
-    require(s.width == 0 || java.lang.Long.bitCount(s.width) == 1,
-      s"shard width must be a power of two (got ${s.width}) — shardOf is an arithmetic shift")
-    atomicWrite(fs, new Path(s"$lakeDir/_idbloom/_sizing"),
-      s"${s.items} ${s.fpp} ${s.count} ${s.width}".getBytes(UTF_8))
-  }
+  def writeSizing(fs: FileSystem, lakeDir: String, s: Sizing): Unit =
+    atomicWrite(fs, sizingPath(lakeDir), s"${s.items} ${s.fpp} ${s.count} 0".getBytes(UTF_8))
 
   // ---- generations -----------------------------------------------------
-
-  /** Latest READABLE generation for one shard (highest batchId file), or
-    * None on a fresh shard. Torn newest generations are skipped — see the
-    * object scaladoc for why that is sound. */
-  def latestGen(fs: FileSystem, lakeDir: String, shard: Long, width: Long): Option[BloomFilter] =
-    latestGenWithStamp(fs, lakeDir, shard, width).map(_._2)
 
   /** Identity of one on-disk generation file — the broadcast cache's
     * freshness key. (path, length, mtime) changes whenever [[writeGen]]
@@ -128,71 +103,79 @@ object IdBloom {
     * place, so even an identical payload gets a new mtime). */
   private case class GenStamp(path: String, len: Long, mtime: Long)
 
-  private def genCandidates(fs: FileSystem, lakeDir: String, shard: Long,
-                            width: Long): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val dir = genDir(lakeDir, shard, width)
+  /** Generation files, newest first. The one name rule of the layout: a
+    * generation is a file named by its batchId's digits (`_sizing` and
+    * atomicWrite's `.tmp-*` files never match). */
+  private def genFiles(fs: FileSystem, lakeDir: String): Seq[FileStatus] = {
+    val dir = genDir(lakeDir)
     if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).filter(_.isFile)
-      .filter { st =>
+    else fs.listStatus(dir).toSeq.filter(_.isFile)
+      .flatMap { st =>
         val n = st.getPath.getName
-        n.nonEmpty && n.forall(c => c.isDigit || c == '-')
+        if (n.nonEmpty && n.forall(_.isDigit)) n.toLongOption.map(_ -> st) else None
       }
-      .sortBy(-_.getPath.getName.toLong).toSeq
+      .sortBy(-_._1).map(_._2)
   }
 
-  private def stampOf(st: org.apache.hadoop.fs.FileStatus): GenStamp =
+  private def stampOf(st: FileStatus): GenStamp =
     GenStamp(st.getPath.toString, st.getLen, st.getModificationTime)
 
-  private def latestGenWithStamp(fs: FileSystem, lakeDir: String, shard: Long,
-                                 width: Long): Option[(GenStamp, BloomFilter)] =
-    genCandidates(fs, lakeDir, shard, width).iterator.map { st =>
+  /** Latest READABLE generation with its stamp, or None on a fresh lake.
+    * Torn newest generations are skipped — see the object scaladoc for
+    * why that is sound. */
+  private def latestGen(fs: FileSystem, lakeDir: String): Option[(GenStamp, BloomFilter)] =
+    genFiles(fs, lakeDir).iterator.map { st =>
       try {
         val in = fs.open(st.getPath)
         try Some(stampOf(st) -> BloomFilter.readFrom(in)) finally in.close()
       } catch { case scala.util.control.NonFatal(_) => None } // torn — fall back
     }.collectFirst { case Some(r) => r }
 
-  /** Driver-side cache of generation BROADCASTS, keyed by (lake, shard)
-    * and fingerprinted by the generation file's [[GenStamp]]: a
-    * micro-batch probing an UNCHANGED guard generation reuses the
-    * broadcast already sitting in every executor's block manager instead
-    * of re-reading and re-pushing up to ~30 MB (the 2^24 keeper clamp)
-    * per batch — without the cache each [[probe]] call minted a fresh
-    * `sc.broadcast`, so long-running streams re-fetched the identical
-    * filter every batch and stale copies lingered until the
-    * ContextCleaner noticed (round-16 review finding). A changed
+  def writeGen(fs: FileSystem, lakeDir: String, batchId: Long, bf: BloomFilter): Unit =
+    atomicWrite(fs, new Path(genDir(lakeDir), batchId.toString), bloomBytes(bf))
+
+  /** Delete all but the newest `keep` generations. Only the newest (the
+    * probe) and its predecessor (the torn-newest fallback for the one
+    * batch that can ever replay) are readable state — older files are
+    * dead weight at a full bloom's size each, so a forever-running drain
+    * would otherwise accumulate them without bound. */
+  def pruneGens(fs: FileSystem, lakeDir: String, keep: Int = 2): Unit =
+    genFiles(fs, lakeDir).drop(keep).foreach(st => fs.delete(st.getPath, false))
+
+  /** Delete the whole guard (generations and ledger). Absence is always
+    * safe: the next keeper batch re-adopts the lake with an exact
+    * anti-join and builds a fresh generation from every landed key. */
+  def invalidate(fs: FileSystem, lakeDir: String): Unit = {
+    val dir = genDir(lakeDir)
+    if (fs.exists(dir)) fs.delete(dir, true)
+  }
+
+  // ---- broadcast cache -------------------------------------------------
+
+  /** Driver-side cache of generation BROADCASTS, keyed by lake and
+    * fingerprinted by the generation file's [[GenStamp]]: a micro-batch
+    * probing an UNCHANGED guard generation reuses the broadcast already
+    * sitting in every executor's block manager instead of re-reading and
+    * re-pushing up to ~30 MB (the 2^24 keeper clamp) per batch. A changed
     * generation broadcasts the new filter and `unpersist(false)`es the
     * stale handle — executor copies drop eagerly; the driver value stays
     * re-broadcastable in case a straggling prior stage re-runs (destroy()
-    * would fail such a stage instead). */
+    * would fail such a stage instead).
+    *
+    * Entries beyond [[bcCacheCap]] drop least-recently-used first, which
+    * bounds a driver serving many lakes. Eviction `unpersist(false)`es and
+    * releases the cache's strong reference, so the ContextCleaner can
+    * reclaim the driver-side filter once no stage references survive. */
   private case class CachedBc(stamp: GenStamp, owner: org.apache.spark.SparkContext,
-                              bc: org.apache.spark.broadcast.Broadcast[BloomFilter],
+                              bc: Broadcast[BloomFilter],
                               lastUse: java.util.concurrent.atomic.AtomicLong)
-  private val bcCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), CachedBc]
-  // Eviction state (round-16 review: the cache never dropped driver-side
-  // filters — ~30 MB each at the 2^24 clamp — so a keeper resharding
-  // 1→2→4 or a service-lifetime driver serving many lakes accumulated
-  // heap forever). Two rules:
-  //   1. WIDTH CHANGE: shard numbers are id-range prefixes (id >>
-  //      log2(width)), so a reshard renumbers every shard — all of the
-  //      lake's cached entries are keys that will never be probed again.
-  //      Tracked per lake; a mismatch drops the whole lake's entries.
-  //   2. LRU CAP: entries beyond [[bcCacheCap]] drop least-recently-used
-  //      first, bounding a many-lake driver regardless of rule 1.
-  // Eviction `unpersist(false)`es (executor copies drop; the driver value
-  // stays re-broadcastable for any straggling prior stage) and releases
-  // the cache's strong reference, so the ContextCleaner can reclaim the
-  // driver-side filter once no stage references survive.
-  private val lakeWidth = scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val bcCache = scala.collection.concurrent.TrieMap.empty[String, CachedBc]
   private val useTick = new java.util.concurrent.atomic.AtomicLong(0L)
   @volatile private[graft] var bcCacheCap: Int = 64
-  private[graft] def cachedKeys: Set[(String, Long)] = bcCache.keySet.toSet
-  private[graft] def clearBcCache(): Unit = {
-    bcCache.keys.foreach(evict); lakeWidth.clear()
-  }
-  private def evict(key: (String, Long)): Unit =
-    bcCache.remove(key).foreach { c =>
+  private[graft] def cachedKeys: Set[String] = bcCache.keySet.toSet
+  private[graft] def clearBcCache(): Unit = bcCache.keys.foreach(evict)
+  private def evict(lakeDir: String): Unit =
+    bcCache.remove(lakeDir).foreach { c =>
       try if (!c.owner.isStopped) c.bc.unpersist(false)
       catch { case scala.util.control.NonFatal(_) => () }
     }
@@ -200,80 +183,58 @@ object IdBloom {
     if (bcCache.size > bcCacheCap)
       bcCache.toSeq.sortBy(_._2.lastUse.get())
         .dropRight(bcCacheCap).foreach { case (k, _) => evict(k) }
-  private def noteUse(lakeDir: String, width: Long, key: (String, Long)): Unit = {
-    val prev = lakeWidth.put(lakeDir, width)
-    if (prev.exists(_ != width))
-      bcCache.keys.filter(_._1 == lakeDir).foreach(evict)
-    // bump the about-to-be-served key BEFORE the LRU pass: at exactly cap
-    // occupancy the pass could otherwise evict the key this very call is
-    // fetching (its lastUse was only refreshed after the get), turning a
-    // guaranteed hit into a re-read + re-broadcast (r17 advice)
-    bcCache.get(key).foreach(_.lastUse.set(useTick.incrementAndGet()))
-    trimLru()
-  }
 
-  /** Cached-broadcast twin of [[latestGen]]. The fast path compares the
-    * NEWEST candidate file's stamp against the cache without reading it;
-    * only a stamp change (or a torn newest forcing the fallback walk)
-    * pays the read. The returned handle's `.value` is safe to use
-    * driver-side as a read-only view (nothing in this object mutates a
-    * prev generation — [[mergeOrRebuild]] merges INTO the fresh side). */
-  def genBroadcast(fs: FileSystem, lakeDir: String, shard: Long,
-                   width: Long): Option[org.apache.spark.broadcast.Broadcast[BloomFilter]] = {
+  /** The latest readable generation as a cached broadcast handle, or None
+    * on a fresh lake. The fast path compares the NEWEST candidate file's
+    * stamp against the cache without reading it; only a stamp change (or
+    * a torn newest forcing the fallback walk) pays the read. The returned
+    * handle's `.value` is safe to use driver-side as a read-only view
+    * (nothing in this object mutates a prev generation — [[mergeOrRebuild]]
+    * merges INTO the fresh side). */
+  def genBroadcast(fs: FileSystem, lakeDir: String): Option[Broadcast[BloomFilter]] = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-    val key = (lakeDir, shard)
-    noteUse(lakeDir, width, key)
+    // bump the about-to-be-served entry BEFORE the LRU pass: at exactly
+    // cap occupancy the pass could otherwise evict the entry this very
+    // call is fetching, turning a guaranteed hit into a re-read +
+    // re-broadcast
+    bcCache.get(lakeDir).foreach(_.lastUse.set(useTick.incrementAndGet()))
+    trimLru()
     // an entry minted under a since-stopped SparkContext is dead (its
     // broadcast blocks died with the context) — treat as a miss; crash
     // harnesses restart sessions against the same lake dir
-    val cached = bcCache.get(key).filter(c => c.owner.eq(sc) && !c.owner.isStopped)
-    cached.foreach(_.lastUse.set(useTick.incrementAndGet()))
-    val newest = genCandidates(fs, lakeDir, shard, width).headOption.map(stampOf)
+    val cached = bcCache.get(lakeDir).filter(c => c.owner.eq(sc) && !c.owner.isStopped)
+    val newest = genFiles(fs, lakeDir).headOption.map(stampOf)
     (cached, newest) match {
       case (Some(c), Some(head)) if c.stamp == head => Some(c.bc)
-      case (_, None) => None // fresh shard: no generation, nothing to probe
+      case (_, None) => None // fresh lake: no generation, nothing to probe
       case _ =>
-        latestGenWithStamp(fs, lakeDir, shard, width).map { case (st, bf) =>
+        latestGen(fs, lakeDir).map { case (st, bf) =>
           cached match {
             case Some(c) if c.stamp == st => c.bc // torn newest; fallback unchanged
             case _ =>
               val bc = sc.broadcast(bf)
-              bcCache.put(key,
+              bcCache.put(lakeDir,
                 CachedBc(st, sc, bc,
                   new java.util.concurrent.atomic.AtomicLong(useTick.incrementAndGet())))
               cached.foreach(c => c.bc.unpersist(false))
-              trimLru() // noteUse ran before the put; enforce the cap now
+              trimLru() // the put may have grown the cache past the cap
               bc
           }
         }
     }
   }
 
-  def writeGen(fs: FileSystem, lakeDir: String, shard: Long, width: Long,
-               batchId: Long, bf: BloomFilter): Unit =
-    atomicWrite(fs, new Path(genDir(lakeDir, shard, width), batchId.toString), bloomBytes(bf))
-
-  /** Test seam for [[rebuild]]: fired after the generation writes and
-    * BEFORE the sizing write — the torn gen/sizing window
-    * [[mergeOrRebuild]] heals. Crash-point specs install a throwing
-    * hook keyed by lakeDir; no-op in production. */
-  @volatile private[graft] var rebuildStepHook: (String, String) => Unit = (_, _) => ()
+  // ---- merge / probe ---------------------------------------------------
 
   /** Merge `fresh` into `prev` when their geometries agree; on a TORN
     * GEN/SIZING PAIR fall back to `rebuildAll`. The torn pair: a
     * capacity rebuild writes the new generation, then crashes before the
     * sizing write — the newest generation now has a geometry the ledger
-    * no longer describes. In [[NearDupStream]] the crash REPLAY's
-    * survivor set is empty, so its `newCount` stays at the ledger's
-    * stale count and the rebuild trigger does NOT re-fire — every later
-    * small batch then lands in the merge branch, where a ledger-sized
-    * `mergeInPlace` against the torn generation would throw
-    * IncompatibleMergeException FOREVER: a permanently wedged stream,
-    * not a transient failure. Rebuilding from the authoritative id frame
-    * is always safe (the absence-is-safe rule applied to geometry
-    * drift); wedging never is. (The inline keeper self-heals this window
-    * — its replay recomputes the exact landed count, re-firing the
-    * rebuild — so its use of this helper is defense in depth.) */
+    * no longer describes, and a ledger-sized `mergeInPlace` against it
+    * would throw IncompatibleMergeException on every later batch.
+    * Rebuilding from the authoritative lake is always safe. (The keeper's
+    * replay recomputes the exact landed count, which re-fires its own
+    * rebuild, so this is defense in depth.) */
   def mergeOrRebuild(fresh: BloomFilter, prev: Option[BloomFilter])
                     (rebuildAll: => BloomFilter): BloomFilter = prev match {
     case Some(p) if fresh.isCompatible(p) => fresh.mergeInPlace(p); fresh
@@ -281,144 +242,22 @@ object IdBloom {
     case None                             => fresh
   }
 
-  /** Shard indices with an existing generation directory (sharded layout
-    * only) — the implicit capacity multiplier for the resize trigger. */
-  def presentShards(fs: FileSystem, lakeDir: String): Seq[Long] = {
-    val dir = new Path(s"$lakeDir/_idbloom")
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(n => n.startsWith("s") && n.drop(1).nonEmpty
-        && n.drop(1).forall(c => c.isDigit || c == '-'))
-      .map(_.drop(1).toLong).toSeq.sorted
-  }
-
-  // ---- probing ---------------------------------------------------------
-
-  /** Distinct shards the frame's id column touches — ONE tiny job over
-    * what is always a micro-batch-sized frame (callers persist it first).
-    * Null ids map to no shard (they probe false — definitely-new — the
-    * same tolerance the unsharded path's coalesce gives them). */
-  def touchedShards(ids: DataFrame, idCol: String, sizing: Sizing): Seq[Long] =
-    if (!sizing.sharded) Seq(0L)
-    else ids.filter(col(idCol).isNotNull)
-      .select(shiftright(col(idCol), sizing.shardBits).as("s"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-
-  /** Load the latest generation for each touched shard, as cached
-    * broadcast handles ([[genBroadcast]] — unchanged generations reuse
-    * the executor-resident copy). */
-  def loadTouched(fs: FileSystem, lakeDir: String, shards: Seq[Long],
-                  sizing: Sizing): Map[Long, org.apache.spark.broadcast.Broadcast[BloomFilter]] =
-    shards.flatMap(s => genBroadcast(fs, lakeDir, s, sizing.width).map(s -> _)).toMap
-
-  /** Might-contain column over the loaded per-shard blooms. A row whose
-    * shard carries no generation is definitely-new (false) — every
-    * admitted id is in its shard's latest generation by construction.
+  /** Might-contain column over one generation's broadcast handle; a null
+    * id reads as false (definitely new).
     *
-    * Each filter ships as a BROADCAST VARIABLE consumed by the codegen
+    * The filter ships as a BROADCAST VARIABLE consumed by the codegen
     * probe expression ([[graft.plans.BroadcastBloomMightContain]]), NOT
     * as a plan literal: a literal re-serializes the whole filter into
     * every stage's task binary (7.2–21.7 MiB per probe stage measured
     * cross-JVM at 2^22 items; ~30 MB at the keeper's 2^24 clamp) and
     * hex-renders it in full into every explain string — the broadcast
     * handle is bytes in both places and the payload moves once per
-    * executor. Callers pass the handles from [[genBroadcast]]/
-    * [[loadTouched]], so an unchanged generation is broadcast ONCE per
-    * rebuild, not once per batch. Same probe hash as before
-    * (`mightContainLong`, the `df.stat.bloomFilter` family). */
-  def probe(blooms: Map[Long, org.apache.spark.broadcast.Broadcast[BloomFilter]],
-            idCol: Column, sizing: Sizing): Column = {
+    * executor. Callers pass the handle from [[genBroadcast]], so an
+    * unchanged generation is broadcast ONCE, not once per batch. Same
+    * probe hash as `df.stat.bloomFilter` (`mightContainLong`). */
+  def probe(bc: Broadcast[BloomFilter], idCol: Column): Column = {
     import org.apache.spark.sql.classic.{GraftExpressionBridge => Bridge}
-    def mc(bc: org.apache.spark.broadcast.Broadcast[BloomFilter]): Column =
-      coalesce(Bridge.column(
-        graft.plans.BroadcastBloomMightContain(
-          Bridge.expression(idCol), bc)), lit(false))
-    if (!sizing.sharded) blooms.get(0L).map(mc).getOrElse(lit(false))
-    else {
-      val shardCol = shiftright(idCol, sizing.shardBits)
-      // outer coalesce: a NULL id makes `shardCol === s` null, and a
-      // null probe would drop the row from BOTH filter(mc) and
-      // filter(!mc) — null ids must read as false (definitely new),
-      // matching the unsharded path's coalesce
-      coalesce(blooms.foldLeft(lit(false)) { case (acc, (s, bf)) =>
-        acc || (shardCol === lit(s) && mc(bf))
-      }, lit(false))
-    }
-  }
-
-  // ---- capacity rebuild / split -----------------------------------------
-
-  /** Rebuild the whole guard from the authoritative id frame (the lake's
-    * id column — which at call time already includes the current batch's
-    * admissions): a 4× monolith while that stays under `shardMaxItems`,
-    * otherwise a RANGE-SHARDED layout (split, or re-split at half the
-    * width when already sharded). Writes every shard's generation at
-    * `batchId` plus the new sizing, and returns it. Deterministic and
-    * atomic per file, so a crash replay re-runs the identical rebuild.
-    *
-    * Cost: one column-pruned id scan (cached) + one bloom build per
-    * present shard — amortized O(log n) full scans over the lake's
-    * lifetime, same as the monolith doubling schedule. Shard count is
-    * derived from the OBSERVED id span, so per-shard fill lands near
-    * `items/4` for uniform-in-span ids; skewed ids overfill some shards,
-    * which degrades their fpp (more exact confirms), never correctness. */
-  def rebuild(fs: FileSystem, lakeDir: String, ids: DataFrame, idCol: String,
-              batchId: Long, cur: Sizing, newCount: Long,
-              shardMaxItems: Long): Sizing = {
-    val targetItems = 4L * math.max(cur.items, newCount)
-    if (!cur.sharded && targetItems <= shardMaxItems) {
-      val bf = ids.stat.bloomFilter(idCol, targetItems, cur.fpp)
-      val s = Sizing(targetItems, cur.fpp, newCount, 0L)
-      writeGen(fs, lakeDir, 0L, 0L, batchId, bf)
-      rebuildStepHook(lakeDir, "rebuild-gens-written")
-      writeSizing(fs, lakeDir, s)
-      s
-    } else {
-      val perShard = math.min(math.max(cur.items, 1L << 10), shardMaxItems)
-      val cached = ids.persist()
-      try {
-        val mm = cached.agg(min(col(idCol)).as("lo"), max(col(idCol)).as("hi")).head()
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        // span as BigInt: hi - lo overflows long when ids straddle the
-        // full range (hashed ids)
-        val span = BigInt(hi) - BigInt(lo) + 1
-        val wantShards = math.max(2L, (4L * newCount + perShard - 1) / perShard)
-        // smallest power-of-two width giving at least wantShards over the span
-        var width = java.lang.Long.highestOneBit(math.max(1L,
-          (span / wantShards).min(BigInt(Long.MaxValue / 2)).toLong))
-        if (width < 1L) width = 1L
-        val sNew = Sizing(perShard, cur.fpp, newCount, width)
-        val bits = sNew.shardBits
-        val shards = cached.filter(col(idCol).isNotNull)
-          .select(shiftright(col(idCol), bits).as("s"))
-          .distinct().collect().map(_.getLong(0))
-        shards.foreach { sh =>
-          val bf = cached.filter(shiftright(col(idCol), bits) === lit(sh))
-            .stat.bloomFilter(idCol, perShard, cur.fpp)
-          writeGen(fs, lakeDir, sh, width, batchId, bf)
-        }
-        rebuildStepHook(lakeDir, "rebuild-gens-written")
-        writeSizing(fs, lakeDir, sNew)
-        // retire layouts this rebuild replaced: shard dirs from an older
-        // width (their indices are not in `shards`) would inflate
-        // presentShards — overstating capacity and delaying the next
-        // rebuild — and dead flat generations would linger forever.
-        // Runs AFTER the sizing write: a crash mid-deletion leaves only
-        // stale-but-unread state (probes already resolve via the new
-        // width), and the batch replay re-runs the same deletion.
-        val live = shards.toSet
-        val dir = new Path(s"$lakeDir/_idbloom")
-        fs.listStatus(dir).foreach { st =>
-          val n = st.getPath.getName
-          val staleDir = st.isDirectory && n.startsWith("s") &&
-            n.drop(1).nonEmpty && n.drop(1).forall(c => c.isDigit || c == '-') &&
-            !live.contains(n.drop(1).toLong)
-          val staleFlat = st.isFile && n.nonEmpty &&
-            n.forall(c => c.isDigit || c == '-')
-          if (staleDir || staleFlat) fs.delete(st.getPath, true)
-        }
-        sNew
-      } finally cached.unpersist()
-    }
+    coalesce(Bridge.column(
+      graft.plans.BroadcastBloomMightContain(Bridge.expression(idCol), bc)), lit(false))
   }
 }

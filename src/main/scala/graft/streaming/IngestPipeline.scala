@@ -195,8 +195,7 @@ object IngestPipeline {
     // admit duplicates, so invalidate it up front — bloom ABSENCE is
     // always safe (the next keeper drain re-adopts the lake exactly), a
     // stale bloom never is
-    val bloomDir = new org.apache.hadoop.fs.Path(s"$dest/_idbloom")
-    if (fs.exists(bloomDir)) fs.delete(bloomDir, true)
+    IdBloom.invalidate(fs, dest)
     val raw = spark.readStream.schema(schema).parquet(srcDir)
     val stream = if (dedupKeys.isEmpty) raw else raw.dropDuplicates(dedupKeys)
     val decoded = decode.getOrElse(decodeAndDatePartition(_: DataFrame, payloadSchema))(stream)
@@ -364,8 +363,7 @@ object IngestPipeline {
     * land). So this variant trades the FileStreamSink's metadata log
     * for foreachBatch + the [[IdBloom]] guard.
     *
-    * SCALE SHAPE (the NearDupStream bloom-guard pattern, shared via
-    * [[IdBloom]]): the lake keeps a generation'd bloom over
+    * SCALE SHAPE ([[IdBloom]]): the lake keeps a generation'd bloom over
     * `xxhash64(keys)` under `<dest>/_idbloom`. A bloom MISS is
     * definitely-new and skips every lake read — the normal all-new
     * batch touches NO lake-proportional state, so a forever-running
@@ -374,14 +372,13 @@ object IngestPipeline {
     * anti-join against the landed keys. Capacity rides the `_sizing`
     * ledger with the 4× half-full rebuild.
     *
-    * IDEMPOTENCE is batchId-keyed through the same `_batches` marker
-    * ledger as [[NearDupStream.processBatch]] (done marker → replay
-    * no-ops; started-without-done → crash replay runs the EXACT
-    * anti-join against landed keys, read with the batch's own decoded
-    * schema so a dest holding only uncommitted `_temporary` litter can
-    * never wedge the drain on schema inference), and a `_writer` stamp
-    * makes a reset/foreign checkpoint fail loudly instead of silently
-    * no-opping against stale done markers.
+    * IDEMPOTENCE is batchId-keyed through a `_batches` marker ledger
+    * (done marker → replay no-ops; started-without-done → crash replay
+    * runs the EXACT anti-join against landed keys, read with the batch's
+    * own decoded schema so a dest holding only uncommitted `_temporary`
+    * litter can never wedge the drain on schema inference), and a
+    * `_writer` stamp makes a reset/foreign checkpoint fail loudly
+    * instead of silently no-opping against stale done markers.
     *
     * MIXED-MODE: keeper appends land OUTSIDE any FileStreamSink
     * `_spark_metadata` log a previous deferred drain created — readers
@@ -509,12 +506,12 @@ object IngestPipeline {
     def landedKeys: Option[DataFrame] = lakeDf().map(_.select(keys.map(col): _*))
     val kh = xxhash64(keys.map(col): _*)
     val sizing = IdBloom.readSizing(fs, dest)
-      .getOrElse(IdBloom.Sizing(bloomItems, bloomFpp, 0L, 0L))
+      .getOrElse(IdBloom.Sizing(bloomItems, bloomFpp, 0L))
     // cached broadcast handle: an unchanged guard generation is already
     // resident in every executor's block manager from the previous batch;
     // `.value` doubles as the read-only driver view for the sizing/merge
     // logic below (mergeOrRebuild merges INTO the fresh side, never prev)
-    val prevBloomBc = IdBloom.genBroadcast(fs, dest, 0L, 0L)
+    val prevBloomBc = IdBloom.genBroadcast(fs, dest)
     val prevBloom = prevBloomBc.map(_.value)
     val novel0 =
       if (crashReplay)
@@ -523,7 +520,7 @@ object IngestPipeline {
         landedKeys.map(lk => keep.join(lk, keys, "left_anti")).getOrElse(keep)
       else prevBloomBc match {
         case Some(bc) =>
-          val mc = IdBloom.probe(Map(0L -> bc), kh, sizing.copy(width = 0L))
+          val mc = IdBloom.probe(bc, kh)
           val hits = keep.filter(mc)
           if (hits.isEmpty) keep // all-new batch: zero lake reads
           else landedKeys match {
@@ -548,9 +545,8 @@ object IngestPipeline {
       keeperStepHook(dest, "appended")
       // guard update AFTER the append, BEFORE the done marker: a crash
       // in between replays the batch through the exact anti-join (no-op
-      // appends) and rewrites the generation — same protocol as
-      // NearDupStream. Keeper blooms stay UNSHARDED (hashed keys carry
-      // no range locality to exploit): monolith 4× growth only.
+      // appends) and rewrites the generation. The bloom is one monolith
+      // (hashed keys carry no range locality to shard on): 4× growth only.
       val lakeIds = () => lakeDf().getOrElse(throw new IllegalStateException(
           s"$dest has no data files but the guard update expected landed keys"))
         .select(kh.as("_kh"))
@@ -564,9 +560,9 @@ object IngestPipeline {
             math.max(sizing.items, if (cnt * 2 >= sizing.items) 4L * cnt else 0L),
             math.max(keeperMaxBloomItems, sizing.items))
           val bf = lakeIds().stat.bloomFilter("_kh", items, sizing.fpp)
-          IdBloom.writeGen(fs, dest, 0L, 0L, batchId, bf)
+          IdBloom.writeGen(fs, dest, batchId, bf)
           keeperStepHook(dest, "gen-written")
-          IdBloom.writeSizing(fs, dest, IdBloom.Sizing(items, sizing.fpp, cnt, 0L))
+          IdBloom.writeSizing(fs, dest, IdBloom.Sizing(items, sizing.fpp, cnt))
           // hooks fire only when the step actually WROTE something, so a
           // scheduled kill always reconstructs the crash window it names
           keeperStepHook(dest, "sizing-written")
@@ -584,10 +580,7 @@ object IngestPipeline {
           if (crashReplay) landedKeys.map(_.count()).getOrElse(0L)
           else sizing.count + nNovel
         if (newCount * 2 >= sizing.items && sizing.items < keeperMaxBloomItems) {
-          // clamped monolith rebuild (keeper blooms never shard — the
-          // hashed key space has no range locality, so every shard
-          // would load on every batch and the aggregate plan-literal
-          // size wouldn't drop). At the clamp the bloom saturates and
+          // clamped monolith rebuild. At the clamp the bloom saturates and
           // fpp degrades gracefully: more bloom hits, each paying the
           // exact column-pruned anti-join — performance, never
           // correctness. Lakes past ~16M keys should drain through
@@ -597,18 +590,16 @@ object IngestPipeline {
           // but a pre-fix mixed-mode lake may carry an undercount) — the
           // rebuild already scans every landed key for the bloom, so one
           // extra count() over the same column-pruned read corrects the
-          // ledger exactly (keys are unique in the lake by construction),
-          // the keeper's analog of NearDupStream.maintain()'s backfill
+          // ledger exactly (keys are unique in the lake by construction)
           val ids = lakeIds()
           val exact = ids.count()
           val targetItems = math.min(
             4L * math.max(sizing.items, math.max(newCount, exact)),
             math.max(keeperMaxBloomItems, sizing.items))
           val bf = ids.stat.bloomFilter("_kh", targetItems, sizing.fpp)
-          IdBloom.writeGen(fs, dest, 0L, 0L, batchId, bf)
+          IdBloom.writeGen(fs, dest, batchId, bf)
           keeperStepHook(dest, "gen-written")
-          IdBloom.writeSizing(fs, dest,
-            IdBloom.Sizing(targetItems, sizing.fpp, exact, 0L))
+          IdBloom.writeSizing(fs, dest, IdBloom.Sizing(targetItems, sizing.fpp, exact))
           keeperStepHook(dest, "sizing-written")
         } else {
           val guardRows = if (crashReplay) keep else novel
@@ -616,30 +607,17 @@ object IngestPipeline {
             val b = guardRows.select(kh.as("_kh"))
               .stat.bloomFilter("_kh", sizing.items, sizing.fpp)
             // torn gen/sizing pair → rebuild from the lake (IdBloom
-            // .mergeOrRebuild's scaladoc has the crash window; the
-            // keeper's replay re-fires its rebuild so this is defense
-            // in depth here, load-bearing in NearDupStream)
+            // .mergeOrRebuild's scaladoc has the crash window)
             val merged = IdBloom.mergeOrRebuild(b, prevBloom)(
               lakeIds().stat.bloomFilter("_kh", sizing.items, sizing.fpp))
-            IdBloom.writeGen(fs, dest, 0L, 0L, batchId, merged)
+            IdBloom.writeGen(fs, dest, batchId, merged)
             keeperStepHook(dest, "gen-written")
           }
           IdBloom.writeSizing(fs, dest, sizing.copy(count = newCount))
           keeperStepHook(dest, "sizing-written")
         }
       }
-      // generation pruning, inline (the keeper has no maintain() pass):
-      // only the newest generation (the probe) and its predecessor (the
-      // torn-newest fallback for the one batch that can ever replay) are
-      // readable state — older files are dead weight at a full bloom's
-      // size each, so a forever-running drain would otherwise accumulate
-      // them without bound
-      val genDir = new Path(s"$dest/_idbloom")
-      if (fs.exists(genDir))
-        fs.listStatus(genDir).filter(_.isFile).map(_.getPath)
-          .filter(p => p.getName.nonEmpty && p.getName.forall(_.isDigit))
-          .sortBy(-_.getName.toLong).drop(2)
-          .foreach(fs.delete(_, false))
+      IdBloom.pruneGens(fs, dest)
       keeperStepHook(dest, "pruned")
       fs.create(done, true).close()
       true

@@ -3,43 +3,17 @@ package graft
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.util.sketch.BloomFilter
 import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.propBoolean
 
 import graft.streaming.IdBloom
 
-/** ScalaCheck properties for the shared id-bloom guard's load-bearing
-  * arithmetic: the shard mapping must be EXACT floor division for every
-  * long (the scala-side `shardOf` and the plan-side `shiftright` both
-  * reduce to an arithmetic right shift — any divergence would route a
-  * probe to the wrong shard and silently void the no-false-negative
-  * contract), and the sizing ledger must round-trip including the
-  * legacy 3-field form. */
+/** ScalaCheck properties for the keeper's id-bloom guard: the sizing
+  * ledger must round-trip, including the legacy 3-field form, and must
+  * refuse a sharded writer's ledger; a generation merge must never throw
+  * on a geometry mismatch — it rebuilds instead. */
 object IdBloomProps extends Properties("graft.idbloom") {
-
-  private val widthGen: Gen[Long] = Gen.chooseNum(0, 62).map(1L << _)
-  private val idGen: Gen[Long] = Gen.oneOf(
-    Gen.chooseNum(Long.MinValue, Long.MaxValue),
-    Gen.chooseNum(-1000000L, 1000000L),
-    Gen.oneOf(0L, -1L, 1L, Long.MinValue, Long.MaxValue))
-
-  property("shardOf == exact floor division for every long and power-of-two width") =
-    Prop.forAll(idGen, widthGen) { (id, width) =>
-      val expected = BigInt(id) / width match {
-        // BigInt division truncates toward zero; floor rounds toward -∞
-        case q if BigInt(id) - q * width < 0 => q - 1
-        case q => q
-      }
-      BigInt(IdBloom.shardOf(id, width)) == expected
-    }
-
-  property("shardOf is monotone in id (range sharding preserves id order)") =
-    Prop.forAll(idGen, idGen, widthGen) { (a, b, width) =>
-      val (lo, hi) = if (a <= b) (a, b) else (b, a)
-      IdBloom.shardOf(lo, width) <= IdBloom.shardOf(hi, width)
-    }
-
-  property("width 0 (unsharded) maps every id to shard 0") =
-    Prop.forAll(idGen) { id => IdBloom.shardOf(id, 0L) == 0L }
 
   private lazy val fs =
     FileSystem.get(new org.apache.hadoop.conf.Configuration())
@@ -48,22 +22,57 @@ object IdBloomProps extends Properties("graft.idbloom") {
     Prop.forAll(
       Gen.chooseNum(1L, Long.MaxValue / 8),
       Gen.chooseNum(1, 6).map(math.pow(10, _)).map(1.0 / _),
-      Gen.chooseNum(0L, Long.MaxValue / 8),
-      Gen.oneOf(Gen.const(0L), Gen.chooseNum(0, 62).map(b => 1L << b))) {
-      (items, fpp, count, width) =>
+      Gen.chooseNum(0L, Long.MaxValue / 8)) {
+      (items, fpp, count) =>
       val dir = Files.createTempDirectory("idbloomprops").toString
-      val s = IdBloom.Sizing(items, fpp, count, width)
+      val s = IdBloom.Sizing(items, fpp, count)
       IdBloom.writeSizing(fs, dir, s)
       IdBloom.readSizing(fs, dir).contains(s)
     }
 
+  // no shrinking: shrunk values leave the generators' ranges (a width
+  // shrinks to 0, a capacity to one the geometry cases never use)
   property("legacy 3-field sizing parses as unsharded (width 0)") =
-    Prop.forAll(Gen.chooseNum(1L, 1L << 40), Gen.chooseNum(0L, 1L << 40)) {
-      (items, count) =>
-        val dir = Files.createTempDirectory("idbloomlegacy").toString
-        IdBloom.atomicWrite(fs, new Path(s"$dir/_idbloom/_sizing"),
-          s"$items 0.001 $count".getBytes("UTF-8"))
-        IdBloom.readSizing(fs, dir).contains(
-          IdBloom.Sizing(items, 0.001, count, 0L))
+    Prop.forAllNoShrink(Gen.chooseNum(1L, 1L << 40), Gen.chooseNum(0L, 1L << 40),
+      Gen.chooseNum(0, 62).map(1L << _)) {
+      (items, count, width) =>
+        def ledger(text: String): String = {
+          val dir = Files.createTempDirectory("idbloomlegacy").toString
+          IdBloom.atomicWrite(fs, new Path(s"$dir/_idbloom/_sizing"), text.getBytes("UTF-8"))
+          dir
+        }
+        val expected = IdBloom.Sizing(items, 0.001, count)
+        // a nonzero 4th field is a sharded writer's range-shard width:
+        // the unsharded guard must refuse it, not read it as a monolith
+        val sharded = ledger(s"$items 0.001 $count $width")
+        val refused =
+          try { IdBloom.readSizing(fs, sharded); false }
+          catch { case e: IllegalStateException => e.getMessage.contains("range-shard width") }
+        (IdBloom.readSizing(fs, ledger(s"$items 0.001 $count")).contains(expected) :| "3-field") &&
+          (IdBloom.readSizing(fs, ledger(s"$items 0.001 $count 0")).contains(expected) :| "width 0") &&
+          (refused :| s"width $width must be rejected")
+    }
+
+  property("mergeOrRebuild merges compatible geometries and rebuilds incompatible ones") =
+    Prop.forAllNoShrink(Gen.oneOf(1000L, 4000L), Gen.oneOf(1000L, 4000L),
+      Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue)),
+      Gen.listOf(Gen.chooseNum(Long.MinValue, Long.MaxValue))) {
+      (freshItems, prevItems, freshIds, prevIds) =>
+        def bf(items: Long, ids: Seq[Long]): BloomFilter = {
+          val b = BloomFilter.create(items, 0.01); ids.foreach(b.putLong); b
+        }
+        val rebuilt = bf(16L, Nil)
+        var rebuilds = 0
+        val out = IdBloom.mergeOrRebuild(bf(freshItems, freshIds),
+          Some(bf(prevItems, prevIds))) { rebuilds += 1; rebuilt }
+        val mergeOk =
+          if (freshItems == prevItems)
+            rebuilds == 0 && (freshIds ++ prevIds).forall(out.mightContainLong)
+          else rebuilds == 1 && (out eq rebuilt)
+        // no previous generation: the fresh filter passes through as is
+        val alone = bf(freshItems, freshIds)
+        val first = IdBloom.mergeOrRebuild(alone, None)(rebuilt)
+        (mergeOk :| s"fresh=$freshItems prev=$prevItems rebuilds=$rebuilds") &&
+          ((first eq alone) :| "no previous generation")
     }
 }

@@ -320,25 +320,33 @@ class KeeperGuardSpec extends SparkSpec {
     import graft.streaming.IdBloom
     val dir = Files.createTempDirectory("idbloom-bc").toString
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(IdBloom.genBroadcast(fs, dir, 0L, 0L).isEmpty, "fresh shard must yield no handle")
+    assert(IdBloom.genBroadcast(fs, dir).isEmpty, "fresh lake must yield no handle")
     val bf1 = BloomFilter.create(1000, 0.01); bf1.putLong(1L)
-    IdBloom.writeGen(fs, dir, 0L, 0L, 1L, bf1)
-    val b1 = IdBloom.genBroadcast(fs, dir, 0L, 0L).get
+    IdBloom.writeGen(fs, dir, 1L, bf1)
+    val b1 = IdBloom.genBroadcast(fs, dir).get
     // unchanged generation: the SAME broadcast comes back (no re-read,
-    // no re-push — the round-16 per-batch-rebroadcast fix)
-    assert(IdBloom.genBroadcast(fs, dir, 0L, 0L).get eq b1)
+    // no re-push)
+    assert(IdBloom.genBroadcast(fs, dir).get eq b1)
     assert(b1.value.mightContainLong(1L) && !b1.value.mightContainLong(2L))
     // a new generation invalidates the entry and mints a fresh handle
     val bf2 = BloomFilter.create(1000, 0.01); bf2.putLong(2L)
-    IdBloom.writeGen(fs, dir, 0L, 0L, 2L, bf2)
-    val b2 = IdBloom.genBroadcast(fs, dir, 0L, 0L).get
+    IdBloom.writeGen(fs, dir, 2L, bf2)
+    val b2 = IdBloom.genBroadcast(fs, dir).get
     assert(!(b2 eq b1) && b2.value.mightContainLong(2L) && !b2.value.mightContainLong(1L))
     // the probe column consumes the cached handle end-to-end
     import spark.implicits._
     val hits = Seq(1L, 2L, 3L).toDF("id")
-      .filter(IdBloom.probe(Map(0L -> b2), col("id"), IdBloom.Sizing(1000, 0.01, 1, 0)))
+      .filter(IdBloom.probe(b2, col("id")))
       .as[Long].collect().toSet
     assert(hits.contains(2L) && !hits.contains(1L), s"probe off the cached handle broke: $hits")
+    // a torn newest generation (gen 2 overwritten with junk bytes, what a
+    // crash on a filesystem without atomic rename leaves) falls back to
+    // the previous readable one: gen 1's filter comes back
+    val torn = new java.io.FileOutputStream(s"$dir/_idbloom/2")
+    torn.write("torn bloom bytes".getBytes); torn.close()
+    val back = IdBloom.genBroadcast(fs, dir)
+    assert(back.exists(b => b.value.mightContainLong(1L) && !b.value.mightContainLong(2L)),
+      s"a torn newest generation must fall back to gen 1's filter, got $back")
   }
 
   test("genBroadcast cache eviction: resharding drops stale shard keys; the LRU cap bounds many-lake drivers") {
@@ -349,41 +357,21 @@ class KeeperGuardSpec extends SparkSpec {
     def bf(x: Long) = { val b = BloomFilter.create(1000, 0.01); b.putLong(x); b }
     val oldCap = IdBloom.bcCacheCap
     try {
-      IdBloom.clearBcCache()
-      // width 0 (unsharded monolith) → one cached entry
-      val dir = Files.createTempDirectory("idbloom-evict").toString
-      IdBloom.writeGen(fs, dir, 0L, 0L, 1L, bf(1))
-      assert(IdBloom.genBroadcast(fs, dir, 0L, 0L).isDefined)
-      assert(IdBloom.cachedKeys.filter(_._1 == dir) == Set((dir, 0L)))
-      // reshard to width 2: shard numbers renumber (id >> log2(width)), so
-      // the monolith entry is a key that can never be probed again — the
-      // first access under the new width must drop it
-      IdBloom.writeGen(fs, dir, 5L, 2L, 1L, bf(10))
-      IdBloom.writeGen(fs, dir, 7L, 2L, 1L, bf(14))
-      assert(IdBloom.genBroadcast(fs, dir, 5L, 2L).isDefined)
-      assert(IdBloom.genBroadcast(fs, dir, 7L, 2L).isDefined)
-      assert(IdBloom.cachedKeys.filter(_._1 == dir) == Set((dir, 5L), (dir, 7L)),
-        "width-0 entry must be evicted; width-2 live shards retained")
-      // reshard again to width 4: both width-2 keys are stale
-      IdBloom.writeGen(fs, dir, 2L, 4L, 1L, bf(9))
-      assert(IdBloom.genBroadcast(fs, dir, 2L, 4L).isDefined)
-      assert(IdBloom.cachedKeys.filter(_._1 == dir) == Set((dir, 2L)),
-        "only the current-width live shard may remain after reshard 2 -> 4")
       // LRU cap: with cap 2, a third LAKE evicts the least-recently-used
       // entry, not the freshest one
       IdBloom.clearBcCache()
       IdBloom.bcCacheCap = 2
       val lakes = (1 to 3).map(_ => Files.createTempDirectory("idbloom-lru").toString)
       lakes.foreach { d =>
-        IdBloom.writeGen(fs, d, 0L, 0L, 1L, bf(1))
-        assert(IdBloom.genBroadcast(fs, d, 0L, 0L).isDefined)
+        IdBloom.writeGen(fs, d, 1L, bf(1))
+        assert(IdBloom.genBroadcast(fs, d).isDefined)
       }
       val keys = IdBloom.cachedKeys
-      assert(keys.size <= 2 && !keys.contains((lakes(0), 0L)) &&
-        keys.contains((lakes(2), 0L)), s"LRU cap broke: $keys")
+      assert(keys.size <= 2 && !keys.contains(lakes(0)) &&
+        keys.contains(lakes(2)), s"LRU cap broke: $keys")
       // an evicted entry is a plain cache miss — the next probe re-reads
       // and re-broadcasts the generation, values intact
-      val back = IdBloom.genBroadcast(fs, lakes(0), 0L, 0L)
+      val back = IdBloom.genBroadcast(fs, lakes(0))
       assert(back.isDefined && back.get.value.mightContainLong(1L))
     } finally { IdBloom.bcCacheCap = oldCap; IdBloom.clearBcCache() }
   }

@@ -112,57 +112,6 @@ class LakeWriterSpec extends SparkSpec {
     assert(spark.read.parquet(s"$work/z").count() == grid.count())
   }
 
-  test("compaction merges a fragmented path to sized, cluster-sorted files, rows intact") {
-    import org.apache.spark.sql.functions.col
-    val dest = java.nio.file.Files.createTempDirectory("compact").toString + "/events"
-    val ev = Tables(spark, sf001, "events")
-    // fragment: 50 files for a tiny table (the accreted-micro-batches shape)
-    ev.repartition(50).write.parquet(dest)
-    def dataFiles = new java.io.File(dest).listFiles
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(dataFiles == 50)
-    LakeWriter.compact(spark, dest, targetRowsPerFile = ev.count() / 2 + 1,
-      clusterBy = Seq("user_id", "ts"))
-    assert(dataFiles == 2, s"expected 2 compacted files, got $dataFiles")
-    val back = spark.read.parquet(dest)
-    assert(back.count() == ev.count())
-    // cluster-sort holds within each file
-    import spark.implicits._
-    val byFile = back
-      .select(input_file_name().as("f"), col("user_id"), col("ts").cast("long").as("t"))
-      .as[(String, Long, Long)].collect().groupBy(_._1).values.toSeq
-    byFile.foreach { rows =>
-      val keys = rows.map(r => (r._2, r._3)).toSeq
-      assert(keys == keys.sorted, "rows not cluster-sorted within a file")
-    }
-    // files tile the lead-key domain (repartitionByRange), so per-file
-    // min/max stats can prune — a round-robin shuffle would give every file
-    // the full domain. Ranges may TOUCH at one boundary value (the range
-    // key is the composite (user_id, ts), so one user_id can straddle a
-    // split) but must never interleave.
-    val ranges = byFile.map { rows => (rows.map(_._2).min, rows.map(_._2).max) }
-      .sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Seq((_, aMax), (bMin, _)) =>
-        assert(aMax <= bMin, s"file user_id ranges interleave: max $aMax vs next min $bMin")
-      case _ =>
-    }
-  }
-
-  test("compaction honors the file-size contract even when one cluster key owns every row") {
-    import org.apache.spark.sql.functions.lit
-    val dest = java.nio.file.Files.createTempDirectory("compacthot").toString + "/hot"
-    val ev = Tables(spark, sf001, "events").withColumn("hot_key", lit(42L))
-    ev.repartition(20).write.parquet(dest)
-    // a pure repartitionByRange(clusterBy) would put ALL rows in one file;
-    // the row-unique tiebreaker must still split the hot key into 4 files
-    LakeWriter.compact(spark, dest, targetRowsPerFile = ev.count() / 4 + 1,
-      clusterBy = Seq("hot_key"))
-    val files = new java.io.File(dest).listFiles.count(_.getName.endsWith(".parquet"))
-    assert(files == 4, s"hot key collapsed the size contract: $files files")
-    assert(spark.read.parquet(dest).count() == ev.count())
-  }
-
   test("bloom sink writes a probe-able bloom filter; plain write has none") {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
