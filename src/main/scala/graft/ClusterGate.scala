@@ -26,7 +26,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Usage: `sbt package && sbt "runMain graft.ClusterGate"`. Prints a
   * markdown row per item plus one JSON line; exits non-zero on any
   * failure. SPARK_GRAFT_SF_DIR picks the lake (default sf0.1);
-  * SPARK_GRAFT_ONLY filters items for debugging.
+  * SPARK_GRAFT_ONLY (comma-separated item names, query names included)
+  * runs only those items, for debugging.
   */
 object ClusterGate {
 
@@ -73,8 +74,9 @@ object ClusterGate {
       .getOrCreate()
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
 
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Option[Double], String)]
-    def item(name: String)(body: => Unit): Unit = {
+    def item(name: String)(body: => Unit): Unit = if (only.forall(_.contains(name))) {
       val t0 = System.nanoTime()
       try { body; results += ((name, Some((System.nanoTime() - t0) / 1e9), "")) }
       catch { case e: Throwable =>
@@ -126,9 +128,8 @@ object ClusterGate {
 
     // 2. The expensive set + the custom-operator risk set, full plans to
     // the noop sink (same execution discipline as Bench).
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val queries = SparkEntry.queries
-    val names = (expensive ++ customRisk).filter(n => only.forall(_.contains(n)))
+    val names = expensive ++ customRisk
     val unknown = names.filterNot(queries.contains)
     require(unknown.isEmpty, s"unknown gate queries: $unknown")
     names.foreach { name =>
@@ -240,7 +241,7 @@ object ClusterGate {
     }
 
     // ---- report
-    val pad = results.map(_._1.length).max
+    val pad = results.map(_._1.length).maxOption.getOrElse(0)
     println(s"\n| item | sec | status |\n|---|---|---|")
     results.foreach { case (n, t, err) =>
       println(s"| ${n.padTo(pad, ' ')} | ${t.fold("-")(x => f"$x%.2f")} | " +

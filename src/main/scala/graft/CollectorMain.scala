@@ -33,10 +33,15 @@ import graft.streaming.IngestPipeline
   * `KAFKA_CLEANUP_ENABLED` is file-mode inert (documented — the KafkaTrim
   * binding needs a broker).
   *
-  * After the drain, each table is counted once: the deferred audit's
-  * one `groupBy(keys).count` pass gives the lake's (rows, distinct keys),
-  * which validation reuses when the audit left the lake untouched, and
-  * the source takes one such pass too.
+  * Each table is counted once. An envelope source's one
+  * [[identityStats]] aggregation, before the drain, gives both the
+  * sample's per-(topic, partition) offset bounds and validation's source
+  * (rows, distinct identities); validation reads the same file listing,
+  * so it reuses them. After the drain, the deferred audit's one pass
+  * gives the lake's (rows, distinct keys), which validation reuses when
+  * the audit left the lake untouched; an envelope lake is counted by
+  * [[identityStats]] over its three key columns alone. A props source
+  * and lake take one [[keyStats]] pass each.
   *
   * Scale notes: every stage is a narrow map or a partitioned sink —
   * the only aggregates are the bounded ledger/validation summaries; the
@@ -66,14 +71,65 @@ object CollectorMain {
     * semantics: an all-null key is one group, where `count(DISTINCT …)`
     * would skip it and report a lake holding one null-key row as a
     * mismatch. */
-  private final case class KeyStats(rows: Long, groups: Long)
+  private[graft] final case class KeyStats(rows: Long, groups: Long)
 
-  private def keyStats(df: DataFrame, keys: Seq[String]): KeyStats = {
+  private[graft] def keyStats(df: DataFrame, keys: Seq[String]): KeyStats = {
     require(keys.nonEmpty, "keyStats needs at least one key column")
     val r = df.groupBy(keys.map(col): _*).count()
       .agg(coalesce(sum(col("count")), lit(0L)), count(lit(1))).head()
     KeyStats(r.getLong(0), r.getLong(1))
   }
+
+  /** The Kafka message identity: offsets scoped per topic AND partition. */
+  private val envKeys = Seq("kafka_topic", "kafka_partition", "kafka_offset")
+
+  /** [[KeyStats]] over [[envKeys]] plus the per-(topic, partition) offset
+    * bounds `(kafka_topic, kafka_partition, _min_off, _max_off)`, from ONE
+    * single-level aggregation, collected. It groups by (topic, partition,
+    * `bitmap_bucket_number(offset)`) and counts each group's distinct
+    * offsets with `bitmap_count(bitmap_construct_agg(bitmap_bit_position))`:
+    * bucket and bit position map every long to a unique pair, so the sum
+    * is exact, with no second shuffle of the keys as in [[keyStats]].
+    * Null offsets form one identity per (topic, partition) (their bucket
+    * is null and their bitmap empty), which is `keyStats`' `groupBy` null
+    * semantics; null topics and partitions group as in `groupBy`.
+    *
+    * The collected result has one row per (topic, partition, 32768-offset
+    * bucket) holding a 4 KB bitmap. Broker offsets are dense per
+    * partition, so that is O(partitions + offsets / 32768) rows. The
+    * worst case is a compacted topic whose few surviving offsets are
+    * each ≥ 32768 apart: one row (and one 4 KB buffer) per message. This
+    * is why payload keys (`event_id`, arbitrary longs or strings) keep
+    * [[keyStats]]. */
+  private[graft] def identityStats(df: DataFrame): (KeyStats, DataFrame) = {
+    val off = col("kafka_offset").cast("long")
+    val agg = df
+      .groupBy(col("kafka_topic"), col("kafka_partition"),
+        bitmap_bucket_number(off).as("_bucket"))
+      .agg(min(off).as("_min_off"), max(off).as("_max_off"), count(lit(1)).as("_rows"),
+        bitmap_count(bitmap_construct_agg(bitmap_bit_position(off))).as("_ids"))
+    val buckets = agg.collect()
+    val stats = KeyStats(buckets.map(_.getLong(5)).sum,
+      buckets.map(r => if (r.isNullAt(2)) 1L else r.getLong(6)).sum)
+    // min/max over a (topic, partition)'s buckets skip the null-offset
+    // bucket, as min()/max() skip null offsets
+    val bounds = buckets.groupBy(r => (r.get(0), r.get(1))).toSeq.map { case ((t, p), rs) =>
+      val offs = rs.filterNot(_.isNullAt(3))
+      org.apache.spark.sql.Row(t, p,
+        if (offs.isEmpty) null else offs.map(_.getLong(3)).min,
+        if (offs.isEmpty) null else offs.map(_.getLong(4)).max)
+    }
+    val boundsSchema = org.apache.spark.sql.types.StructType(
+      agg.schema.fields.take(2) ++ agg.schema.fields.slice(3, 5))
+    (stats, df.sparkSession.createDataFrame(java.util.Arrays.asList(bounds: _*), boundsSchema))
+  }
+
+  /** An envelope lake's [[KeyStats]]: read by the source's three key
+    * fields alone, which skips the footer-inference job, and counted by
+    * [[identityStats]]. */
+  private def envelopeLakeStats(spark: SparkSession, dest: String, src: DataFrame): KeyStats =
+    identityStats(spark.read.schema(
+      org.apache.spark.sql.types.StructType(envKeys.map(src.schema(_)))).parquet(dest))._1
 
   /** Deferred (post-drain) dedup: one merge pass over the landed lake,
     * keep-first by (event_id, ts), stage-and-swap preserving the date
@@ -107,17 +163,19 @@ object CollectorMain {
     *    and subsequent drains both see the whole lake. */
   private def dedupLakeInPlace(spark: SparkSession, dest: String, compression: String,
                                keys: Seq[String] = Seq("event_id"),
-                               tsCol: String = "ts"): Option[KeyStats] = {
+                               tsCol: String = "ts",
+                               envelopeSrc: Option[DataFrame] = None): Option[KeyStats] = {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.execution.streaming.sinks.FileStreamSinkLog
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val destPath = new Path(dest)
     val tmp = new Path(dest + ".rewrite")
     val old = new Path(dest + ".old")
-    val cur = spark.read.parquet(dest)
+    lazy val cur = spark.read.parquet(dest)
     // skip the rewrite when the lake is already clean: the common resume
-    // path then never touches the files or the sink metadata log
-    val stats = keyStats(cur, keys)
+    // path then never touches the files or the sink metadata log, and an
+    // envelope lake is read only for its key columns
+    val stats = envelopeSrc.fold(keyStats(cur, keys))(envelopeLakeStats(spark, dest, _))
     if (stats.rows == stats.groups) return Some(stats)
     if (fs.exists(old))
       throw new IllegalStateException(
@@ -237,8 +295,9 @@ object CollectorMain {
     // (payload schema, the deferred audit's key stats when it left the
     // lake as it found it — the audit groups on the same keys validation
     // uses, so validation reuses them instead of counting the unchanged
-    // lake again)
-    val (usedPayloadSchema, audited) = srcMode match {
+    // lake again, the source's key stats when the pre-drain pass counted
+    // them)
+    val (usedPayloadSchema, audited, srcCounted) = srcMode match {
       case "file" if isEnvelope(srcBatch.get) =>
         // KAFKA-ENVELOPE source: binary payloads under the 5-column
         // metadata envelope (the shape IngestPipeline.kafkaSource emits —
@@ -268,18 +327,14 @@ object CollectorMain {
         // raw_value). Heads serve trimmed topics; tails see the NEWEST
         // rows, where an evolved payload's new field first appears — a
         // small incremental append can sit entirely between stride
-        // multiples. The offset bounds are one column-pruned
-        // map-side-combined aggregation, collected (O(topic-partitions)
-        // rows) so the sample plan joins a local relation instead of
-        // re-running the aggregate.
+        // multiples. The offset bounds come from the source's one
+        // identityStats aggregation, collected, so the sample plan joins
+        // a local relation instead of re-running the aggregate; the same
+        // pass gives validation its source counts.
         val batch = srcBatch.get
-        val tp = Seq("kafka_topic", "kafka_partition")
-        val boundsAgg = batch.groupBy(tp.map(col): _*)
-          .agg(min(col("kafka_offset")).as("_min_off"),
-            max(col("kafka_offset")).as("_max_off"))
-        val bounds = spark.createDataFrame(
-          java.util.Arrays.asList(boundsAgg.collect(): _*), boundsAgg.schema)
-        val sample = batch.join(broadcast(bounds), tp, "left")
+        val (srcStats, bounds) = identityStats(batch)
+        val sample = batch.join(broadcast(bounds),
+            Seq("kafka_topic", "kafka_partition"), "left")
           .select(col("kafka_topic"), col("value"),
             (pmod(col("kafka_offset"), lit(101L)) === 0).as("_stride"),
             (col("kafka_offset") < col("_min_off") + 64 ||
@@ -322,20 +377,19 @@ object CollectorMain {
         // collides across topics); same WHEN-not-IF contract as the
         // events path below: false = inline keeper during the drain,
         // true = one deferred merge pass
-        val envKeys = Seq("kafka_topic", "kafka_partition", "kafka_offset")
         if (!cfg.skipDeduplication) {
           IngestPipeline.runFileIngestKeeper(spark, srcDir, batch.schema,
             payloadSchema, dest, checkpoint,
             compression = cfg.parquetCompression,
             keys = envKeys, tsCol = "kafka_timestamp",
             decode = Some(IngestPipeline.decodeEnvelope(_, formats, payloadSchema)))
-          (payloadSchema, None)
+          (payloadSchema, None, Some(srcStats))
         } else {
           IngestPipeline.runFileIngest(spark, srcDir, batch.schema, payloadSchema,
             dest, checkpoint, compression = cfg.parquetCompression,
             decode = Some(IngestPipeline.decodeEnvelope(_, formats, payloadSchema)))
           (payloadSchema, dedupLakeInPlace(spark, dest, cfg.parquetCompression,
-            envKeys, "kafka_timestamp"))
+            envKeys, "kafka_timestamp", Some(batch)), Some(srcStats))
         }
       case "file" =>
         val batch = srcBatch.get
@@ -370,7 +424,7 @@ object CollectorMain {
           IngestPipeline.runFileIngestKeeper(spark, srcDir, batch.schema,
             payloadSchema, dest, checkpoint,
             compression = cfg.parquetCompression, keys = Seq("event_id"))
-          (payloadSchema, None)
+          (payloadSchema, None, None)
         } else {
           // the writer option overrides the session conf, so the knob
           // must reach the sink explicitly — a session conf alone is
@@ -380,7 +434,8 @@ object CollectorMain {
           (payloadSchema,
             if (hasEventId && cfg.skipDeduplication)
               dedupLakeInPlace(spark, dest, cfg.parquetCompression)
-            else None)
+            else None,
+            None)
         }
       case "kafka" =>
         // the source swap is IngestPipeline.kafkaSource(spark, cfg,
@@ -409,9 +464,10 @@ object CollectorMain {
       // shape): landed rows vs source rows, plus duplicate detection on
       // the event key when present
       // the source frame read before the drain (the file listing the
-      // drain consumed); the lake is read only when the deferred audit's
-      // stats do not already describe it — the audit leaves a clean lake
-      // untouched, so its counts are the lake's counts
+      // drain consumed), counted already when the envelope sampling's
+      // identityStats pass covered it; the lake is read only when the
+      // deferred audit's stats do not already describe it — the audit
+      // leaves a clean lake untouched, so its counts are the lake's counts
       val src = srcBatch.getOrElse(spark.read.parquet(srcDir))
       lazy val landed = spark.read.parquet(dest)
       // dedup runs in BOTH modes (inline or deferred), so the lake must
@@ -421,9 +477,9 @@ object CollectorMain {
       // field, which lands hoisted in the lake but does not exist as a
       // source column), on event_id for payload-keyed sources (an
       // audited lake was grouped on event_id, so it has the column)
+      val envelope = srcBatch.filter(isEnvelope)
       val keyCols: Seq[String] =
-        if (srcBatch.exists(isEnvelope))
-          Seq("kafka_topic", "kafka_partition", "kafka_offset")
+        if (envelope.nonEmpty) envKeys
         else if (src.columns.contains("event_id") &&
             (audited.nonEmpty || landed.columns.contains("event_id"))) Seq("event_id")
         else Nil
@@ -432,7 +488,9 @@ object CollectorMain {
           val (l, s) = (landed.count(), src.count())
           (KeyStats(l, l), KeyStats(s, s))
         } else
-          (audited.getOrElse(keyStats(landed, keyCols)), keyStats(src, keyCols))
+          (audited.getOrElse(
+              envelope.fold(keyStats(landed, keyCols))(envelopeLakeStats(spark, dest, _))),
+            srcCounted.getOrElse(keyStats(src, keyCols)))
       val nLanded = landedStats.rows
       val nSrc = srcStats.rows
       val expected = srcStats.groups

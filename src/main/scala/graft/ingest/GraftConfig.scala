@@ -28,7 +28,10 @@ package graft.ingest
   *     has one mode (after the drain validates), and the staging GC the
   *     retention horizon fed is dead code in the reference itself (SURVEY S15)
   *  - `PARQUET_COMPRESSION` / `COMPRESSION_LEVEL` →
-  *     `spark.sql.parquet.compression.codec` (+ zstd level conf)
+  *     `spark.sql.parquet.compression.codec` and parquet-mr's
+  *     `parquet.compression.codec.zstd.level` (the session conf reaches
+  *     every parquet writer's Hadoop conf; `spark.io.compression.zstd.level`
+  *     would set the shuffle codec's level instead)
   *  - `ROW_GROUP_SIZE`               → parsed for round-trip parity only: the
   *     reference counts ROWS per row group, Spark's `parquet.block.size`
   *     counts BYTES — there is no faithful direct mapping, so the knob is
@@ -64,7 +67,7 @@ final case class GraftConfig(
     * family); source/sink options are passed at their call sites. */
   def sparkConfs: Map[String, String] = Map(
     "spark.sql.parquet.compression.codec" -> parquetCompression,
-    "spark.io.compression.zstd.level" -> compressionLevel.toString)
+    "parquet.compression.codec.zstd.level" -> compressionLevel.toString)
 
   /** The `kafka.*` reader options `IngestPipeline.kafkaSource` applies to
     * `readStream.format("kafka")`. */

@@ -10,6 +10,33 @@ import graft.ingest.GraftConfig
   * exactly-once re-run, post-run validation, and the failure posture. */
 class CollectorMainSpec extends SparkSpec {
 
+  private val envSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("kafka_topic", StringType),
+      StructField("kafka_partition", LongType),
+      StructField("kafka_offset", LongType),
+      StructField("kafka_timestamp", TimestampType),
+      StructField("kafka_key", StringType),
+      StructField("value", BinaryType)))
+  }
+
+  /** 800 distinct envelope messages: 400 msgpack `ticks` over partitions
+    * 0 and 1 and 400 JSON `logs` on partition 0, offsets 0..399. */
+  private def envelopeRows: Seq[org.apache.spark.sql.Row] =
+    (0 until 400).flatMap { i =>
+      import org.apache.spark.sql.Row
+      val payload = s"""{"px": ${i * 1.5}, "qty": $i}"""
+      val ts = new java.sql.Timestamp(1709251200000L + i.toLong * 60000)
+      Seq(Row("ticks", (i % 2).toLong, i.toLong, ts, s"k$i",
+          graft.functions.Msgpack.encodeFlatJson(payload)),
+        Row("logs", 0L, i.toLong, ts, null, payload.getBytes("UTF-8")))
+    }
+
+  private def writeEnvelope(rows: Seq[org.apache.spark.sql.Row], path: String): Unit =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), envSchema)
+      .write.mode("overwrite").parquet(path)
+
   test("file-mode collector drains, lands flattened partitions, validates, resumes") {
     val work = Files.createTempDirectory("collector").toString
     val src = s"$work/src"
@@ -208,26 +235,9 @@ class CollectorMainSpec extends SparkSpec {
     // the pre-drain sampling and the post-drain audit/validation each do
     // their work once; a re-added count/collect round trip over the source
     // or the lake shows up here as extra jobs
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val work = Files.createTempDirectory("collector8").toString
     val src = s"$work/src"
-    val envSchema = StructType(Seq(
-      StructField("kafka_topic", StringType),
-      StructField("kafka_partition", LongType),
-      StructField("kafka_offset", LongType),
-      StructField("kafka_timestamp", TimestampType),
-      StructField("kafka_key", StringType),
-      StructField("value", BinaryType)))
-    val rows = (0 until 400).flatMap { i =>
-      val payload = s"""{"px": ${i * 1.5}, "qty": $i}"""
-      val ts = new java.sql.Timestamp(1709251200000L + i.toLong * 60000)
-      Seq(Row("ticks", (i % 2).toLong, i.toLong, ts, s"k$i",
-          graft.functions.Msgpack.encodeFlatJson(payload)),
-        Row("logs", 0L, i.toLong, ts, null, payload.getBytes("UTF-8")))
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), envSchema)
-      .write.parquet(src)
+    writeEnvelope(envelopeRows, src)
     val cfg = GraftConfig(outputDir = s"$work/out", skipValidation = false)
     val sc = spark.sparkContext
     def quiesce(): Unit = {
@@ -246,8 +256,45 @@ class CollectorMainSpec extends SparkSpec {
       quiesce()
     } finally sc.removeSparkListener(listener)
     assert(spark.read.parquet(s"$work/out/lake").count() == 800)
-    // 17 is what one such drain launches on this fixture
-    assert(jobs.get <= 17, s"${jobs.get} Spark jobs for one envelope drain")
+    // 12 is what one such drain launches on this fixture
+    assert(jobs.get <= 12, s"${jobs.get} Spark jobs for one envelope drain")
+  }
+
+  test("envelope duplicates and a null offset dedup to the distinct identities and validate") {
+    // 30 redelivered identities and two null-offset messages, which are
+    // ONE identity (the groupBy null semantics validation counts by)
+    import org.apache.spark.sql.Row
+    val work = Files.createTempDirectory("collector9").toString
+    val src = s"$work/src"
+    val base = envelopeRows
+    val later = new java.sql.Timestamp(1709251200000L + 3600000L)
+    val nullOffsets = Seq(0, 1).map(i =>
+      Row("logs", 0L, null, new java.sql.Timestamp(later.getTime + i), null,
+        s"""{"px": 0.5, "qty": $i}""".getBytes("UTF-8")))
+    writeEnvelope(base ++ base.take(60).filter(_.getString(0) == "logs") ++ nullOffsets, src)
+    val cfg = GraftConfig(outputDir = s"$work/out", skipValidation = false,
+      skipDeduplication = true)
+    CollectorMain.run(spark, cfg, "file", src) // throws on a validation mismatch
+    val lake = spark.read.parquet(s"$work/out/lake")
+    assert(lake.count() == 801)
+    assert(lake.select("kafka_topic", "kafka_partition", "kafka_offset").distinct().count() == 801)
+    // keep-first by broker timestamp: the earlier null-offset message
+    assert(lake.where(col("kafka_offset").isNull).select("qty").collect().map(_.getLong(0))
+      .toSeq == Seq(0L))
+  }
+
+  test("envelope validation fails loudly when the lake disagrees with the source") {
+    val work = Files.createTempDirectory("collector10").toString
+    val src = s"$work/src"
+    writeEnvelope(envelopeRows, src)
+    val cfg = GraftConfig(outputDir = s"$work/out", skipValidation = false)
+    CollectorMain.run(spark, cfg, "file", src)
+    // shrink the source after the drain: landed > source now
+    writeEnvelope(envelopeRows.take(10), src)
+    val e = intercept[IllegalStateException] {
+      CollectorMain.run(spark, cfg, "file", src)
+    }
+    assert(e.getMessage.contains("count validation failed"))
   }
 
   test("kafka mode refuses without a broker; bad mode refuses") {
