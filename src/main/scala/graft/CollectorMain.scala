@@ -30,8 +30,8 @@ import graft.streaming.IngestPipeline
   * compression confs land on the session; `SKIP_VALIDATION` gates the
   * count check; `SKIP_EXISTING_CHECK=false` mines the lake's offset
   * ledger first and reports what a resume would skip;
-  * `KAFKA_CLEANUP_ENABLED` is file-mode inert (documented — the KafkaTrim
-  * binding needs a broker).
+  * `KAFKA_CLEANUP_ENABLED=true` is rejected before any work (no drain
+  * calls `KafkaTrim` yet).
   *
   * Each table is counted once. An envelope source's one
   * [[identityStats]] aggregation, before the drain, gives both the
@@ -56,10 +56,8 @@ object CollectorMain {
     val srcMode = sys.env.getOrElse("GRAFT_SOURCE", "file")
     val srcDir = sys.env.getOrElse("GRAFT_SOURCE_DIR", "")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", cfg.maxWorkers.toString)
-    val builder = Sessions.builder(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus)
-    // after the shared defaults, so PARQUET_COMPRESSION overrides zstd
-    cfg.sparkConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = Sessions.builder(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"), cpus)
+      .config(cfg.sparkConfs).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, cfg, srcMode, srcDir)
     finally spark.stop()
@@ -257,6 +255,8 @@ object CollectorMain {
   def run(spark: SparkSession, cfg: GraftConfig, srcMode: String, srcDir: String): Unit = {
     require(srcMode == "file" || srcMode == "kafka", s"GRAFT_SOURCE=$srcMode (file|kafka)")
     require(srcMode == "kafka" || srcDir.nonEmpty, "file mode needs GRAFT_SOURCE_DIR")
+    require(!cfg.kafkaCleanupEnabled,
+      "KAFKA_CLEANUP_ENABLED=true: no drain calls KafkaTrim yet; unset KAFKA_CLEANUP_ENABLED")
     val dest = s"${cfg.outputDir}/lake"
     val checkpoint = s"${cfg.outputDir}/_checkpoint"
 

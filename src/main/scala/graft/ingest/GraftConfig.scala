@@ -23,7 +23,8 @@ package graft.ingest
   *  - `SKIP_VALIDATION`              → skip the post-run count validation
   *     (`q_count_validation` shape)
   *  - `KAFKA_CLEANUP_ENABLED`        → `KafkaTrim` (broker-side trim after a
-  *     validated drain); parsed, but no drain calls the trim yet
+  *     validated drain); no drain calls the trim yet, so `CollectorMain.run`
+  *     rejects `true` up front rather than silently skipping the trim
   *  - `KAFKA_CLEANUP_MODE` / `STAGING_RETENTION_DAYS` → not parsed: `KafkaTrim`
   *     has one mode (after the drain validates), and the staging GC the
   *     retention horizon fed is dead code in the reference itself (SURVEY S15)
@@ -63,9 +64,11 @@ final case class GraftConfig(
     progressUpdateInterval: Long = 250000L,
     memoryBatchSize: Long = 1000000L) {
 
-  /** The session-level Spark confs this config implies (compression
-    * family); source/sink options are passed at their call sites. */
-  def sparkConfs: Map[String, String] = Map(
+  /** The session-level Spark confs a drain under this config runs with:
+    * the shared [[graft.Sessions.confs]] policy, then the compression
+    * family (so `PARQUET_COMPRESSION` overrides its codec). Source/sink
+    * options are passed at their call sites. */
+  def sparkConfs: Map[String, String] = graft.Sessions.confs ++ Map(
     "spark.sql.parquet.compression.codec" -> parquetCompression,
     "parquet.compression.codec.zstd.level" -> compressionLevel.toString)
 

@@ -44,6 +44,15 @@ class GraftConfigSpec extends SparkSpec {
       "kafka.max.partition.fetch.bytes" -> "52428800"))
   }
 
+  test("sparkConfs carries the Sessions policy, and PARQUET_COMPRESSION still overrides the codec") {
+    // a caller-built drain session gets the policy only through the config
+    val policy = GraftConfig().sparkConfs
+    for ((k, v) <- Sessions.confs) assert(policy.get(k).contains(v), k)
+    val snappy = GraftConfig.fromEnv(Map("PARQUET_COMPRESSION" -> "snappy")).sparkConfs
+    assert(snappy("spark.sql.parquet.compression.codec") == "snappy")
+    assert(snappy("spark.sql.artifact.isolation.enabled") == "false")
+  }
+
   test("COMPRESSION_LEVEL reaches the zstd parquet writer: level 19 files are smaller than level 1") {
     import org.apache.spark.sql.functions._
     // compressible text with too many distinct values for a dictionary page

@@ -19,6 +19,8 @@ class PlanSpec extends SparkSpec {
     // codec changes every parquet write a spec makes
     assert(spark.conf.get("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
     assert(spark.conf.get("spark.sql.parquet.compression.codec") == "zstd")
+    // per-session artifact isolation would recompile every drain's classes
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("q_filter_project pushes predicates and prunes columns at the scan") {
