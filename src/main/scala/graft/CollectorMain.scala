@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
+import graft.functions.Msgpack
 import graft.ingest.{GraftConfig, JsonDecode, OffsetLedger}
 import graft.streaming.IngestPipeline
 
@@ -17,21 +19,24 @@ import graft.streaming.IngestPipeline
   *    parquet directory at `GRAFT_SOURCE_DIR` stands in for the broker —
   *    the same downstream the reference's consumer feeds. The payload
   *    schema is SAMPLED once per run (the reference's one-shot per-topic
-  *    detection `:172-220`): a Kafka-envelope source is scanned once into
-  *    a persisted stride + per-(topic, partition) edge sample that both
-  *    codec detection and [[JsonDecode.inferSchemaOver]] read; a props
-  *    source goes through [[JsonDecode.inferSchemaSpread]]. Then the full
-  *    stream decodes through codegen'd `from_json`.
-  *  - `kafka`: `IngestPipeline.kafkaSource(spark, cfg, …)`, which applies
-  *    the config's brokers and fetch tuning (`GraftConfig.kafkaOptions`);
-  *    identical downstream. Needs a live broker.
+  *    detection `:172-220`): a Kafka-envelope source gives up a bounded
+  *    per-(topic, partition) stride + edge sample in one collected job
+  *    ([[envelopeSample]]), and the driver detects each topic's codec,
+  *    decodes and infers over it ([[samplePayload]]); a props source goes
+  *    through [[JsonDecode.inferSchemaSpread]]. Then the full stream
+  *    decodes through codegen'd `from_json`.
+  *  - `kafka`: not wired. `run` throws for it, because this build
+  *    carries no Kafka connector. `IngestPipeline.kafkaSource`
+  *    (brokers and fetch tuning from `GraftConfig.kafkaOptions`) is the
+  *    source such a drain would read; KafkaIntegrationSpec drives it
+  *    against a live broker.
   *
   * Knob wiring (see GraftConfig's scaladoc for the full table):
   * compression confs land on the session; `SKIP_VALIDATION` gates the
   * count check; `SKIP_EXISTING_CHECK=false` mines the lake's offset
   * ledger first and reports what a resume would skip;
-  * `KAFKA_CLEANUP_ENABLED=true` is rejected before any work (no drain
-  * calls `KafkaTrim` yet).
+  * `KAFKA_CLEANUP_ENABLED=true` and `MAX_MESSAGES` are rejected before
+  * any work (no drain calls `KafkaTrim` or caps its input yet).
   *
   * Each table is counted once. An envelope source's one
   * [[identityStats]] aggregation, before the drain, gives both the
@@ -82,15 +87,17 @@ object CollectorMain {
   private val envKeys = Seq("kafka_topic", "kafka_partition", "kafka_offset")
 
   /** [[KeyStats]] over [[envKeys]] plus the per-(topic, partition) offset
-    * bounds `(kafka_topic, kafka_partition, _min_off, _max_off)`, from ONE
-    * single-level aggregation, collected. It groups by (topic, partition,
-    * `bitmap_bucket_number(offset)`) and counts each group's distinct
-    * offsets with `bitmap_count(bitmap_construct_agg(bitmap_bit_position))`:
-    * bucket and bit position map every long to a unique pair, so the sum
-    * is exact, with no second shuffle of the keys as in [[keyStats]].
-    * Null offsets form one identity per (topic, partition) (their bucket
-    * is null and their bitmap empty), which is `keyStats`' `groupBy` null
-    * semantics; null topics and partitions group as in `groupBy`.
+    * bounds, rows `(kafka_topic, kafka_partition, min offset, max offset)`,
+    * from ONE single-level aggregation, collected. It groups by (topic,
+    * partition, `bitmap_bucket_number(offset)`) and counts each group's
+    * distinct offsets with
+    * `bitmap_count(bitmap_construct_agg(bitmap_bit_position))`: bucket and
+    * bit position map every long to a unique pair, so the sum is exact,
+    * with no second shuffle of the keys as in [[keyStats]]. Null offsets
+    * form one identity per (topic, partition) (their bucket is null and
+    * their bitmap empty), which is `keyStats`' `groupBy` null semantics;
+    * null topics and partitions group as in `groupBy`, and a (topic,
+    * partition) holding only null offsets has null bounds.
     *
     * The collected result has one row per (topic, partition, 32768-offset
     * bucket) holding a 4 KB bitmap. Broker offsets are dense per
@@ -99,27 +106,102 @@ object CollectorMain {
     * each ≥ 32768 apart: one row (and one 4 KB buffer) per message. This
     * is why payload keys (`event_id`, arbitrary longs or strings) keep
     * [[keyStats]]. */
-  private[graft] def identityStats(df: DataFrame): (KeyStats, DataFrame) = {
+  private[graft] def identityStats(df: DataFrame): (KeyStats, Seq[Row]) = {
     val off = col("kafka_offset").cast("long")
-    val agg = df
+    val buckets = df
       .groupBy(col("kafka_topic"), col("kafka_partition"),
         bitmap_bucket_number(off).as("_bucket"))
-      .agg(min(off).as("_min_off"), max(off).as("_max_off"), count(lit(1)).as("_rows"),
-        bitmap_count(bitmap_construct_agg(bitmap_bit_position(off))).as("_ids"))
-    val buckets = agg.collect()
+      .agg(min(off), max(off), count(lit(1)),
+        bitmap_count(bitmap_construct_agg(bitmap_bit_position(off))))
+      .collect()
     val stats = KeyStats(buckets.map(_.getLong(5)).sum,
       buckets.map(r => if (r.isNullAt(2)) 1L else r.getLong(6)).sum)
     // min/max over a (topic, partition)'s buckets skip the null-offset
     // bucket, as min()/max() skip null offsets
     val bounds = buckets.groupBy(r => (r.get(0), r.get(1))).toSeq.map { case ((t, p), rs) =>
       val offs = rs.filterNot(_.isNullAt(3))
-      org.apache.spark.sql.Row(t, p,
+      Row(t, p,
         if (offs.isEmpty) null else offs.map(_.getLong(3)).min,
         if (offs.isEmpty) null else offs.map(_.getLong(4)).max)
     }
-    val boundsSchema = org.apache.spark.sql.types.StructType(
-      agg.schema.fields.take(2) ++ agg.schema.fields.slice(3, 5))
-    (stats, df.sparkSession.createDataFrame(java.util.Arrays.asList(bounds: _*), boundsSchema))
+    (stats, bounds)
+  }
+
+  /** Stride rows the pre-drain sample aims at per (topic, partition). */
+  private[graft] val SampleStrides = 64L
+
+  /** Rows the pre-drain sample takes at each end of a (topic,
+    * partition)'s offset range. */
+  private[graft] val SampleEdge = 64L
+
+  /** The envelope drain's pre-drain sample: the `(kafka_topic, value)`
+    * rows of `df` on their (topic, partition)'s offset stride or within
+    * [[SampleEdge]] offsets of its head or tail, collected in ONE job.
+    *
+    * Each (topic, partition) gets its own stride, `max(101, range /`
+    * [[SampleStrides]]`)`, from its [[identityStats]] `bounds`, so the
+    * sample holds O(partitions × (SampleStrides + 2 × SampleEdge)) rows
+    * at any source size. Stride and edges enter the plan as one literal
+    * map keyed by `concat_ws` of topic and partition, so no bounds join
+    * or broadcast job runs. `concat_ws` skips a null topic or partition:
+    * a null-keyed group can then share its key with a topic named like
+    * a partition number, which changes what is sampled, never what
+    * lands. A row whose key has no bounds keeps the 101 stride and takes
+    * no edge; null offsets are never sampled. The map lookup compares
+    * keys one by one, so its per-row cost grows with the partition count.
+    *
+    * Why edges as well as the stride: the stride alone misses a
+    * retention-trimmed partition whose live range holds no multiple of
+    * it, which would mis-classify a msgpack topic as JSON, and the tail
+    * holds the NEWEST rows, where an evolved payload's new field first
+    * appears. Why 64 rows per edge, not 1: msgpack renders the integral
+    * double 0.0 as "0", so a lone head row could infer a fractional field
+    * as long and degrade every fractional row after it to raw_value. */
+  private[graft] def envelopeSample(df: DataFrame, bounds: Seq[Row]): Array[Row] = {
+    val sep = "\u0000"
+    // (stride, head rows below, tail rows above); the edges saturate
+    // instead of overflowing at the long extremes
+    val plan = bounds.filterNot(_.isNullAt(2)).map { r =>
+      val (lo, hi) = (r.getLong(2), r.getLong(3))
+      Seq(r.get(0), r.get(1)).filter(_ != null).mkString(sep) ->
+        ((math.max(101L, hi / SampleStrides - lo / SampleStrides),
+          if (lo > Long.MaxValue - SampleEdge) Long.MaxValue else lo + SampleEdge,
+          if (hi < Long.MinValue + SampleEdge) Long.MinValue else hi - SampleEdge))
+    }.toMap
+    val at = element_at(typedLit(plan),
+      concat_ws(sep, col("kafka_topic"), col("kafka_partition").cast("string")))
+    val off = col("kafka_offset").cast("long")
+    df.where(pmod(off, coalesce(at("_1"), lit(101L))) === 0 ||
+        off < at("_2") || off > at("_3"))
+      .select(col("kafka_topic"), col("value")).collect()
+  }
+
+  /** Each topic's payload codec, classified on the driver from its
+    * sampled `(kafka_topic, value)` rows by [[Msgpack.detectFormat]] at
+    * the shared [[Msgpack.FormatThreshold]] (the reference's one-shot
+    * per-topic detection, `:172-220`). Rows with a null topic decode as
+    * JSON, the default for a topic the map lacks. */
+  private[graft] def topicFormats(sample: Seq[Row]): Map[String, String] =
+    sample.filterNot(_.isNullAt(0)).groupBy(_.getString(0)).map { case (t, rs) =>
+      t -> Msgpack.detectFormat(rs.map(_.getAs[Array[Byte]](1)))
+    }
+
+  /** The codecs and the inferred payload schema of an envelope source,
+    * from its [[envelopeSample]]: each payload decodes on the driver
+    * through its topic's codec ([[Msgpack.toJson]], the kernel behind
+    * `msgpack_to_json`, or UTF-8), and [[JsonDecode.inferSchemaOver]]
+    * reads those texts. */
+  private[graft] def samplePayload(spark: SparkSession, df: DataFrame,
+                                   bounds: Seq[Row]): (Map[String, String], StructType) = {
+    val sample = envelopeSample(df, bounds)
+    val formats = topicFormats(sample)
+    val texts = sample.toSeq.map { r =>
+      val v = r.getAs[Array[Byte]](1)
+      if (v == null) null
+      else if (!r.isNullAt(0) && formats.get(r.getString(0)).contains("msgpack")) Msgpack.toJson(v)
+      else new String(v, java.nio.charset.StandardCharsets.UTF_8)
+    }
+    (formats, JsonDecode.inferSchemaOver(spark, texts))
   }
 
   /** An envelope lake's [[KeyStats]]: read by the source's three key
@@ -131,8 +213,10 @@ object CollectorMain {
 
   /** Deferred (post-drain) dedup: one merge pass over the landed lake,
     * keep-first by (event_id, ts), stage-and-swap preserving the date
-    * partitioning — the reference's staging+merge step; at scale this is
-    * one key-partitioned shuffle of the NEW drain's partitions.
+    * partitioning — the reference's staging+merge step. It is
+    * O(lake), not O(drain): the audit reads the WHOLE lake's keys (an
+    * envelope lake's three key columns, a props lake in full), and when
+    * it finds a duplicate the rewrite reads and rewrites the whole lake.
     *
     * Returns the lake's [[KeyStats]] when the lake was already clean and
     * left untouched (validation reuses them instead of counting the
@@ -257,6 +341,8 @@ object CollectorMain {
     require(srcMode == "kafka" || srcDir.nonEmpty, "file mode needs GRAFT_SOURCE_DIR")
     require(!cfg.kafkaCleanupEnabled,
       "KAFKA_CLEANUP_ENABLED=true: no drain calls KafkaTrim yet; unset KAFKA_CLEANUP_ENABLED")
+    require(cfg.maxMessages.isEmpty,
+      s"MAX_MESSAGES=${cfg.maxMessages.getOrElse("")}: no drain caps its input yet; unset MAX_MESSAGES")
     val dest = s"${cfg.outputDir}/lake"
     val checkpoint = s"${cfg.outputDir}/_checkpoint"
 
@@ -302,69 +388,19 @@ object CollectorMain {
         // KAFKA-ENVELOPE source: binary payloads under the 5-column
         // metadata envelope (the shape IngestPipeline.kafkaSource emits —
         // this file twin exercises the broker downstream byte-for-byte).
-        // Per-topic codec detection runs ONCE over a deterministic
-        // bounded sample, then the payload JSON schema is inferred from
-        // the SAME sample, decoded — the reference's one-shot per-topic
-        // detection (:172-220) at Spark scale: bounded jobs before the
-        // drain, zero per-row python-style try/except during it.
-        //
-        // The sample is ONE scan of the source, persisted: every row on
-        // the offset stride (every 101st) or within 64 offsets of its
-        // (topic, partition)'s head or tail, tagged with which side(s) it
-        // is on. A message on both sides is one sample row (codec
-        // detection counts it once). Both consumers read the persisted
-        // rows, never the source again.
-        //
-        // Coverage is GUARANTEED per (topic, partition): the stride alone
-        // misses topics whose live offset range contains no multiple of
-        // 101 — e.g. a retention-trimmed topic holding offsets
-        // 10050-10099 — which would mis-classify msgpack topics as JSON
-        // (full degrade to raw_value) and, on an empty global sample,
-        // crash the decode. 64 rows per edge, not 1: a single-row sample
-        // under-types the payload (msgpack renders the integral double
-        // 0.0 as "0", so a lone head row would infer a fractional field
-        // as long and every fractional row after it would degrade to
-        // raw_value). Heads serve trimmed topics; tails see the NEWEST
-        // rows, where an evolved payload's new field first appears — a
-        // small incremental append can sit entirely between stride
-        // multiples. The offset bounds come from the source's one
-        // identityStats aggregation, collected, so the sample plan joins
-        // a local relation instead of re-running the aggregate; the same
-        // pass gives validation its source counts.
+        // Per-topic codec detection and payload schema inference run ONCE
+        // per drain, the reference's one-shot per-topic detection
+        // (:172-220), with zero per-row python-style try/except during
+        // the drain. The source's one identityStats aggregation gives the
+        // per-(topic, partition) offset bounds (and validation its source
+        // counts); the bounds shape a bounded stride + edge sample that
+        // one job collects to the driver (envelopeSample), and the driver
+        // classifies, decodes and infers over it (samplePayload). No
+        // persist, broadcast, detection shuffle or `limit` stage.
         val batch = srcBatch.get
         val (srcStats, bounds) = identityStats(batch)
-        val sample = batch.join(broadcast(bounds),
-            Seq("kafka_topic", "kafka_partition"), "left")
-          .select(col("kafka_topic"), col("value"),
-            (pmod(col("kafka_offset"), lit(101L)) === 0).as("_stride"),
-            (col("kafka_offset") < col("_min_off") + 64 ||
-              col("kafka_offset") > col("_max_off") - 64).as("_edge"))
-          .where(col("_stride") || col("_edge"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (formats, inferred) = try {
-          // codec detection sees the whole sample (one distributed
-          // aggregation; more evidence never hurts it) and materializes
-          // the persisted rows
-          val formats = IngestPipeline.detectTopicFormats(sample)
-          println(s"[collector] detected topic formats: $formats")
-          // Inference bounds the STRIDE side BEFORE the union (the
-          // inferSchemaSpread shape): a post-union limit fills from the
-          // union's first partitions — the stride — so on sources with
-          // ≥1000 stride hits the per-(topic, partition) head/tail rows
-          // would be starved out and a field first appearing in a recent
-          // high-offset append silently dropped forever. The edge side is
-          // already bounded by the topic-partition count. The limit
-          // applies to DECODED non-null payload texts, not raw envelope
-          // rows: a topic whose stride is mostly undecodable binary would
-          // otherwise spend the whole budget on rows inference's na.drop
-          // discards, shrinking the effective sample to the edges.
-          val strideTexts = IngestPipeline.envelopeJsonText(
-            sample.where(col("_stride")), formats).na.drop.limit(1000)
-          val edgeTexts = IngestPipeline.envelopeJsonText(
-            sample.where(col("_edge")), formats)
-          (formats, JsonDecode.inferSchemaOver(spark,
-            strideTexts.unionByName(edgeTexts), "_json"))
-        } finally sample.unpersist()
+        val (formats, inferred) = samplePayload(spark, batch, bounds)
+        println(s"[collector] detected topic formats: $formats")
         // never-narrowing across incremental drains: widen this run's
         // inferred schema with every payload field the lake already
         // landed (the envelope/derived columns are not payload)

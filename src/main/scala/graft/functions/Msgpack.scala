@@ -214,12 +214,13 @@ object Msgpack {
   }
 
   /** Decode-success fraction above which a topic is classified msgpack
-    * (reference `:172-220`) — shared by the driver-sample and distributed
-    * detectors so they can never diverge. */
+    * (reference `:172-220`). */
   val FormatThreshold = 0.9
 
   /** Format detection (reference `:172-220`): fraction of sampled payloads
-    * that msgpack-decode cleanly decides the topic codec. */
+    * that msgpack-decode cleanly decides the topic codec; a null payload
+    * counts as a failed decode. The collector classifies each envelope
+    * topic with it over the drain's pre-drain sample. */
   def detectFormat(sample: Seq[Array[Byte]], threshold: Double = FormatThreshold): String = {
     if (sample.isEmpty) "json"
     else {
@@ -227,31 +228,4 @@ object Msgpack {
       if (ok.toDouble / sample.size > threshold) "msgpack" else "json"
     }
   }
-
-  /** The same detection as a DISTRIBUTED typed aggregate
-    * (`Aggregator[IN, BUF, OUT]` — the custom-UDAF surface from SURVEY
-    * §2.9): counts decode successes with map-side partial aggregation, so
-    * a whole 100 TB topic can be classified in one pass with a two-long
-    * shuffle payload instead of collecting a sample to the driver. Use as
-    * `df.select(Msgpack.detectFormatAgg(col("value")))` or register with
-    * `spark.udf.register("detect_format", udaf(FormatDetectAggregator))`. */
-  object FormatDetectAggregator
-      extends org.apache.spark.sql.expressions.Aggregator[Array[Byte], (Long, Long), String] {
-    override def zero: (Long, Long) = (0L, 0L)
-    override def reduce(b: (Long, Long), a: Array[Byte]): (Long, Long) =
-      (b._1 + (if (a != null && toJson(a) != null) 1L else 0L), b._2 + 1L)
-    override def merge(x: (Long, Long), y: (Long, Long)): (Long, Long) =
-      (x._1 + y._1, x._2 + y._2)
-    override def finish(b: (Long, Long)): String =
-      if (b._2 > 0 && b._1.toDouble / b._2 > FormatThreshold) "msgpack" else "json"
-    override def bufferEncoder: org.apache.spark.sql.Encoder[(Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    override def outputEncoder: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-  }
-
-  /** Column form of [[FormatDetectAggregator]]. */
-  def detectFormatAgg(c: Column): Column =
-    org.apache.spark.sql.functions.udaf(FormatDetectAggregator).apply(c)
 }

@@ -11,7 +11,10 @@ package graft.ingest
   * Knob → Spark mapping:
   *  - `BOOTSTRAP_SERVERS`            → `kafka.bootstrap.servers` in [[kafkaOptions]]
   *  - `OUTPUT_DIR`                   → lake root passed to `LakeWriter` sinks
-  *  - `MAX_MESSAGES`                 → `maxOffsetsPerTrigger`-style cap; None = drain
+  *  - `MAX_MESSAGES`                 → meant as a `maxOffsetsPerTrigger`-style cap;
+  *     None = drain everything. No drain caps its input yet, so
+  *     `CollectorMain.run` rejects any value up front rather than
+  *     silently draining everything
   *  - `BATCH_SIZE` / `MEMORY_BATCH_SIZE` → subsumed by Spark microbatching:
   *     AvailableNow plans its own batches; no user knob needed (kept for
   *     parity so configs round-trip)

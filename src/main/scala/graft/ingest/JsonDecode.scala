@@ -29,14 +29,11 @@ object JsonDecode {
       df.select(col(column)).na.drop.limit(sampleSize), column)
 
   /** [[inferSchema]] over an ALREADY-BOUNDED sample frame — no internal
-    * limit. For callers that compose their own sample from a bounded
-    * stride plus guaranteed per-(topic, partition) edge rows: a post-union
-    * `limit` fills from the union's FIRST partitions (the stride), so on
-    * a source with more stride hits than the limit the edge rows would be
-    * starved out of inference entirely and a payload field that first
-    * appears in a recent high-offset append would be silently dropped by
-    * `from_json` — permanently, since the limit always fills from the
-    * oldest files. Bound each sample component BEFORE the union instead
+    * limit. For callers that compose their own sample from bounded
+    * parts: a post-union `limit` fills from the union's FIRST partitions,
+    * so the later parts could be starved out of inference entirely and a
+    * payload field only they carry would be silently dropped by
+    * `from_json`. Bound each sample component BEFORE the union instead
     * (the [[inferSchemaSpread]] shape).
     *
     * The bounded sample is collected once and inferred over as a local
@@ -44,12 +41,15 @@ object JsonDecode {
     * and AGAIN to build the DataFrame it returns (under AQE that re-runs
     * every shuffle stage of the sample plan), though only `.schema` is
     * used here. */
-  def inferSchemaOver(spark: SparkSession, df: DataFrame, column: String): StructType = {
-    val texts = df.select(col(column).cast(StringType)).na.drop
-      .as[String](Encoders.STRING).collect()
-    StructType(spark.read.json(spark.createDataset(texts.toSeq)(Encoders.STRING)).schema
-      .fields.filterNot(_.name == "_corrupt_record"))
-  }
+  def inferSchemaOver(spark: SparkSession, df: DataFrame, column: String): StructType =
+    inferSchemaOver(spark, df.select(col(column).cast(StringType)).na.drop
+      .as[String](Encoders.STRING).collect().toSeq)
+
+  /** [[inferSchemaOver]] over payload texts already on the driver (nulls
+    * skipped), for a caller that decoded its bounded sample locally. */
+  def inferSchemaOver(spark: SparkSession, texts: Seq[String]): StructType =
+    StructType(spark.read.json(spark.createDataset(texts.filter(_ != null))(Encoders.STRING))
+      .schema.fields.filterNot(_.name == "_corrupt_record"))
 
   /** [[inferSchema]] with a SPREAD sample: a plain `limit(n)` reads only
     * the first files Spark lists, so on an incrementally-appended source

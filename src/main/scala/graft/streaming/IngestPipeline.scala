@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.ingest.GraftConfig
@@ -297,23 +297,6 @@ object IngestPipeline {
         graft.plans.GraftExtensions.msgpackToJsonColumn(col("value")))
       .otherwise(col("value").cast("string"))
   }
-
-  /** Detect each topic's payload codec over a (bounded) sample — the
-    * reference's once-per-topic detection (collector `:172-220`) as ONE
-    * distributed aggregation: groupBy(topic) with the
-    * [[graft.functions.Msgpack.FormatDetectAggregator]] UDAF, map-side
-    * combined, two longs of shuffle payload per (task, topic). The
-    * collected map is O(topics). */
-  def detectTopicFormats(sample: DataFrame): Map[String, String] =
-    sample.groupBy(col("kafka_topic"))
-      .agg(graft.functions.Msgpack.detectFormatAgg(col("value")).as("fmt"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-
-  /** The envelope frame's decoded payload text as a one-column `_json`
-    * frame — the schema-inference input ([[graft.ingest.JsonDecode
-    * .inferSchema]] runs `spark.read.json` over it). */
-  def envelopeJsonText(df: DataFrame, formats: Map[String, String]): DataFrame =
-    df.select(payloadJsonText(formats).as("_json"))
 
   /** Kafka-envelope decode — the downstream [[kafkaSource]]'s projection
     * actually feeds (collector `:324-411`): binary `value` under the
@@ -636,63 +619,5 @@ object IngestPipeline {
     if (!fs.exists(p)) None
     else """"id"\s*:\s*"([^"]+)"""".r
       .findFirstMatchIn(IdBloom.readSmall(fs, p)).map(_.group(1))
-  }
-
-  /** Per-user gap sessionization, the streaming twin of
-    * `q_session_window`: a custom stateful operator via
-    * flatMapGroupsWithState that emits a session row whenever a user is
-    * idle past `gapMinutes`. State per key is O(1); the shuffle is on
-    * user_id. An event-time timeout closes a key's final session once
-    * the watermark passes its idle deadline. Runs on the default state
-    * store provider. */
-  case class Evt(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  case class SessionState(start: Long, last: Long, n: Long, sum: Double)
-  case class SessionOut(user_id: Long, start_ms: Long, end_ms: Long, n_events: Long, sum_value: Double)
-
-  def sessionize(events: Dataset[Evt], gapMinutes: Int = 30): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Evt], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // the watermark passed the idle deadline with no new rows:
-            // close and emit — without this branch (and the timer arm
-            // below) a key's FINAL session would sit in state forever
-            val s = state.get
-            state.remove()
-            Iterator.single(SessionOut(userId, s.start, s.last, s.n, s.sum))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var cur = state.getOption
-            val out = Seq.newBuilder[SessionOut]
-            sorted.foreach { e =>
-              val t = e.ts.getTime
-              cur match {
-                case Some(s) if t - s.last <= gapMs =>
-                  // min/max merge: a late-but-in-watermark row from an
-                  // earlier micro-batch must never move the session END
-                  // backwards (or the start forwards)
-                  cur = Some(s.copy(start = math.min(s.start, t),
-                    last = math.max(s.last, t), n = s.n + 1, sum = s.sum + e.value))
-                case Some(s) =>
-                  out += SessionOut(userId, s.start, s.last, s.n, s.sum)
-                  cur = Some(SessionState(t, t, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(t, t, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // arm the close timer at the idle deadline (must stay above
-              // the current watermark or the API rejects it)
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs, state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
-      }
   }
 }

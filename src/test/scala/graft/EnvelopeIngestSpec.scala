@@ -8,7 +8,6 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Msgpack
 import graft.ingest.GraftConfig
-import graft.streaming.IngestPipeline
 
 /** The Kafka-envelope ingest path: binary payloads under the 5-column
   * metadata envelope (the shape `kafkaSource` emits), per-topic codec
@@ -267,11 +266,38 @@ class EnvelopeIngestSpec extends SparkSpec {
       assert(lake.columns.contains(c), s"missing $c")
   }
 
-  test("detectTopicFormats classifies per topic at the reference threshold") {
+  test("driver-side detection classifies per topic at the reference threshold") {
     val work = Files.createTempDirectory("envelope2").toString
     writeEnvelopeSource(s"$work/src", 20)
-    val formats = IngestPipeline.detectTopicFormats(
-      spark.read.parquet(s"$work/src"))
-    assert(formats == Map("ticks" -> "msgpack", "logs" -> "json"))
+    val sample = spark.read.parquet(s"$work/src").select("kafka_topic", "value").collect()
+    assert(CollectorMain.topicFormats(sample) ==
+      Map("ticks" -> "msgpack", "logs" -> "json"))
+    // the threshold is strict: 9 clean decodes of 10 (a null payload
+    // counts as a failure) is not above 0.9, 19 of 20 is; a null topic
+    // gets no entry and decodes as JSON
+    def topic(name: String, clean: Int, bad: Seq[Array[Byte]]): Seq[Row] =
+      Seq.fill(clean)(Row(name, Msgpack.encode(Map("k" -> 1L)))) ++ bad.map(Row(name, _))
+    val json = "{}".getBytes("UTF-8")
+    assert(CollectorMain.topicFormats(topic("a", 9, Seq(json)) ++ topic("b", 19, Seq(json)) ++
+        topic("c", 9, Seq(null)) ++ topic(null, 5, Nil)) ==
+      Map("a" -> "json", "b" -> "msgpack", "c" -> "json"))
+  }
+
+  test("the pre-drain sample stays O(partitions x (K + 128)) rows on a 10^7-offset range") {
+    // partition 0 spans 10^7 offsets, partition 1 spans 1000; the stride
+    // is max(101, range / 64) per partition. The old fixed 101 stride
+    // would have sampled 99,010 rows of partition 0 alone
+    def part(p: Long, n: Long) = spark.range(0, n).select(lit("ticks").as("kafka_topic"),
+      lit(p).as("kafka_partition"), col("id").as("kafka_offset"),
+      lit(Array[Byte](1)).as("value"))
+    val df = part(0L, 10000000L).unionByName(part(1L, 1000L))
+    val bounds = Seq(Row("ticks", 0L, 0L, 9999999L), Row("ticks", 1L, 0L, 999L))
+    val n = CollectorMain.envelopeSample(df, bounds).length
+    // partition 0: stride 156249 → 65 rows; head 0-63; tail 9999936-9999999;
+    // offsets 0 and 9999936 sit on both sides: 65 + 64 + 64 - 2 = 191.
+    // partition 1: stride 101 → 10 rows; head 0-63; tail 936-999; offset
+    // 0 on both: 10 + 64 + 64 - 1 = 137
+    assert(n == 191 + 137, s"$n sample rows")
+    assert(n <= 2 * (CollectorMain.SampleStrides + 1 + 2 * CollectorMain.SampleEdge))
   }
 }

@@ -169,31 +169,4 @@ class HardeningSpec extends SparkSpec {
     assert(dirs.nonEmpty && dirs.forall(d => d.startsWith("date_path=") && !d.contains("%")),
       s"escaped or unexpected partition dirs: ${dirs.mkString(",")}")
   }
-
-  test("fMGWS sessionize closes an idle session by event-time timer") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.streaming.OutputMode
-    import graft.streaming.IngestPipeline
-    import IngestPipeline.{Evt, SessionOut}
-    implicit val sqlCtx = spark.sqlContext
-    val base = 3600000L
-    def ts(ms: Long) = new java.sql.Timestamp(base + ms)
-    val mem = MemoryStream[Evt]
-    val out = IngestPipeline.sessionize(
-      mem.toDS().withWatermark("ts", "0 seconds").as[Evt], gapMinutes = 30)
-    val q = out.writeStream.format("memory").queryName("hard_sess")
-      .outputMode(OutputMode.Append()).start()
-    // user 1 goes silent; user 2 advances the watermark past 1's idle
-    // deadline, and one more batch lets the timeout fire
-    mem.addData(Evt(1, ts(0), 1.0), Evt(1, ts(60000), 2.0))
-    q.processAllAvailable()
-    mem.addData(Evt(2, ts(10 * 60 * 60000), 9.0))
-    q.processAllAvailable()
-    mem.addData(Evt(2, ts(11 * 60 * 60000), 1.0))
-    q.processAllAvailable()
-    val sessions = spark.table("hard_sess").as[SessionOut].collect().toSet
-    q.stop()
-    assert(sessions.contains(SessionOut(1, base, base + 60000, 2, 3.0)),
-      s"idle session was never closed by the timer: $sessions")
-  }
 }

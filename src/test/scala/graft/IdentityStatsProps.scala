@@ -61,9 +61,8 @@ object IdentityStatsProps extends Properties("graft.identitystats") {
           val wantBounds = df.groupBy("kafka_topic", "kafka_partition")
             .agg(min("kafka_offset"), max("kafka_offset")).collect().toSet
           ((stats == want) :| s"identityStats $stats, keyStats $want") &&
-            ((bounds.collect().toSet == wantBounds) :| "offset bounds") &&
-            ((bounds.columns.toSeq == Seq("kafka_topic", "kafka_partition", "_min_off",
-              "_max_off")) :| s"bounds columns ${bounds.columns.toSeq}")
+            ((bounds.toSet == wantBounds) :| "offset bounds") &&
+            ((bounds.size == wantBounds.size) :| "one bounds row per (topic, partition)")
         } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
 }

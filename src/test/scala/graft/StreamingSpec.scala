@@ -3,7 +3,6 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.streaming.IngestPipeline
@@ -54,30 +53,5 @@ class StreamingSpec extends SparkSpec {
     val rows = spark.read.parquet(lake)
       .as[(Long, Long, Double)].collect().toSet
     assert(rows === Set((1L, 1L, 1.0), (1L, 2L, 2.0), (2L, 1L, 3.0)))
-  }
-
-  test("sessionization emits closed sessions with correct bounds (batch-mode check)") {
-    import IngestPipeline._
-    // batch Dataset run of the same per-group logic via groupByKey+flatMapGroups
-    // base offset keeps every event strictly above the initial watermark
-    // (epoch 0) — a row AT the watermark is dropped as late.
-    val base = 3600000L
-    def ts(ms: Long) = new java.sql.Timestamp(base + ms)
-    val evts = Seq(
-      Evt(1, ts(0), 1.0), Evt(1, ts(60000), 2.0),            // session A: 0-60s
-      Evt(1, ts(10 * 60 * 60000), 3.0),                       // session B (gap 10h)
-      Evt(2, ts(5000), 4.0))
-    // drive through a memory stream so GroupState is exercised for real
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Evt]
-    val out = sessionize(mem.toDS().withWatermark("ts", "0 seconds").as[Evt], gapMinutes = 30)
-    val q = out.writeStream.format("memory").queryName("sess_out")
-      .outputMode(OutputMode.Append()).start()
-    mem.addData(evts: _*)
-    q.processAllAvailable()
-    val sessions = spark.table("sess_out").as[SessionOut].collect().toSet
-    q.stop()
-    // the 10h-later event closes session A; session B and user 2 stay open in state
-    assert(sessions.contains(SessionOut(1, base, base + 60000, 2, 3.0)))
   }
 }
