@@ -5,14 +5,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Msgpack
-import graft.ingest.{GraftConfig, JsonDecode, OffsetLedger}
+import graft.ingest.{GraftConfig, JsonDecode}
 import graft.streaming.IngestPipeline
 
 /** The runnable collector — the Spark equivalent of the reference's
   * `python redpanda_to_parquet_collector.py` entry point: read
   * [[graft.ingest.GraftConfig]] from the environment, drain the source
-  * once (AvailableNow), land decoded/flattened date-partitioned zstd
-  * parquet, and run the post-drain count validation.
+  * once (AvailableNow), land decoded date-partitioned zstd parquet (the
+  * payload's top-level fields become columns; nested structs stay
+  * structs), and run the post-drain count validation.
   *
   * Source selection via `GRAFT_SOURCE`:
   *  - `file` (default, and the only mode this container can run): a
@@ -33,10 +34,11 @@ import graft.streaming.IngestPipeline
   *
   * Knob wiring (see GraftConfig's scaladoc for the full table):
   * compression confs land on the session; `SKIP_VALIDATION` gates the
-  * count check; `SKIP_EXISTING_CHECK=false` mines the lake's offset
-  * ledger first and reports what a resume would skip;
-  * `KAFKA_CLEANUP_ENABLED=true` and `MAX_MESSAGES` are rejected before
-  * any work (no drain calls `KafkaTrim` or caps its input yet).
+  * count check; `SKIP_EXISTING_CHECK=false` first prints an envelope
+  * lake's landed offset per (topic, partition) by [[identityStats]], or
+  * a props lake's row count; `KAFKA_CLEANUP_ENABLED=true` and
+  * `MAX_MESSAGES` are rejected before any work (no drain trims the
+  * broker or caps its input yet).
   *
   * Each table is counted once. An envelope source's one
   * [[identityStats]] aggregation, before the drain, gives both the
@@ -204,12 +206,15 @@ object CollectorMain {
     (formats, JsonDecode.inferSchemaOver(spark, texts))
   }
 
-  /** An envelope lake's [[KeyStats]]: read by the source's three key
-    * fields alone, which skips the footer-inference job, and counted by
-    * [[identityStats]]. */
+  /** An envelope lake's three key columns, read with the source's key
+    * fields as the schema, which skips the footer-inference job. */
+  private def envelopeLakeKeys(spark: SparkSession, dest: String, src: DataFrame): DataFrame =
+    spark.read.schema(StructType(envKeys.map(src.schema(_)))).parquet(dest)
+
+  /** An envelope lake's [[KeyStats]], counted by [[identityStats]] over
+    * [[envelopeLakeKeys]]. */
   private def envelopeLakeStats(spark: SparkSession, dest: String, src: DataFrame): KeyStats =
-    identityStats(spark.read.schema(
-      org.apache.spark.sql.types.StructType(envKeys.map(src.schema(_)))).parquet(dest))._1
+    identityStats(envelopeLakeKeys(spark, dest, src))._1
 
   /** Deferred (post-drain) dedup: one merge pass over the landed lake,
     * keep-first by (event_id, ts), stage-and-swap preserving the date
@@ -340,35 +345,20 @@ object CollectorMain {
     require(srcMode == "file" || srcMode == "kafka", s"GRAFT_SOURCE=$srcMode (file|kafka)")
     require(srcMode == "kafka" || srcDir.nonEmpty, "file mode needs GRAFT_SOURCE_DIR")
     require(!cfg.kafkaCleanupEnabled,
-      "KAFKA_CLEANUP_ENABLED=true: no drain calls KafkaTrim yet; unset KAFKA_CLEANUP_ENABLED")
+      "KAFKA_CLEANUP_ENABLED=true: no drain trims the broker yet; unset KAFKA_CLEANUP_ENABLED")
     require(cfg.maxMessages.isEmpty,
       s"MAX_MESSAGES=${cfg.maxMessages.getOrElse("")}: no drain caps its input yet; unset MAX_MESSAGES")
     val dest = s"${cfg.outputDir}/lake"
     val checkpoint = s"${cfg.outputDir}/_checkpoint"
-
-    if (!cfg.skipExistingCheck) {
-      // lake-mined resume parity: report what a ledger-based resume would
-      // start from (informational in the Spark engine — the checkpoint
-      // owns resume offsets)
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(new org.apache.hadoop.fs.Path(dest))) {
-        val lake = spark.read.parquet(dest)
-        if (lake.columns.contains("kafka_partition") && lake.columns.contains("kafka_offset")) {
-          val ledger = OffsetLedger.collectLedger(lake)
-          println(s"[collector] existing lake: resume watermarks $ledger")
-        } else
-          println(s"[collector] existing lake: ${lake.count()} rows (checkpoint governs resume)")
-      } else println("[collector] no existing lake")
-    }
 
     // one source read for guard + branches (the footer/listing work is
     // not free on large sources); envelope routing needs the full
     // 5-column envelope SHAPE, not just any binary `value` column — a
     // generic source with a raw-bytes column must keep draining through
     // the props path it always used
-    val srcBatch: Option[org.apache.spark.sql.DataFrame] =
+    val srcBatch: Option[DataFrame] =
       if (srcMode == "file") Some(spark.read.parquet(srcDir)) else None
-    def isEnvelope(df: org.apache.spark.sql.DataFrame): Boolean = {
+    val envelope: Option[DataFrame] = srcBatch.filter { df =>
       val cols = df.schema.fields.map(f => f.name -> f.dataType).toMap
       // ALL FIVE envelope columns, kafka_key included: decodeEnvelope
       // selects kafka_key unconditionally, so a near-envelope source
@@ -378,13 +368,31 @@ object CollectorMain {
         Seq("kafka_topic", "kafka_partition", "kafka_offset", "kafka_timestamp",
           "kafka_key").forall(cols.contains)
     }
+
+    if (!cfg.skipExistingCheck) {
+      // what a lake-mined resume (the reference's `:468-530`) would start
+      // from, per (topic, partition): offsets are scoped per topic.
+      // Informational — the checkpoint owns resume offsets
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(new org.apache.hadoop.fs.Path(dest))) println("[collector] no existing lake")
+      else envelope match {
+        case Some(src) =>
+          val marks = identityStats(envelopeLakeKeys(spark, dest, src))._2
+            .map(r => s"${r.get(0)}/${r.get(1)} -> ${r.get(3)}").sorted
+          println(s"[collector] existing lake: resume watermarks ${marks.mkString(", ")}")
+        case None =>
+          println(s"[collector] existing lake: ${spark.read.parquet(dest).count()} rows " +
+            "(checkpoint governs resume)")
+      }
+    }
+
     // (payload schema, the deferred audit's key stats when it left the
     // lake as it found it — the audit groups on the same keys validation
     // uses, so validation reuses them instead of counting the unchanged
     // lake again, the source's key stats when the pre-drain pass counted
     // them)
     val (usedPayloadSchema, audited, srcCounted) = srcMode match {
-      case "file" if isEnvelope(srcBatch.get) =>
+      case "file" if envelope.nonEmpty =>
         // KAFKA-ENVELOPE source: binary payloads under the 5-column
         // metadata envelope (the shape IngestPipeline.kafkaSource emits —
         // this file twin exercises the broker downstream byte-for-byte).
@@ -474,11 +482,10 @@ object CollectorMain {
             None)
         }
       case "kafka" =>
-        // the source swap is IngestPipeline.kafkaSource(spark, cfg,
+        // the source would be IngestPipeline.kafkaSource(spark, cfg,
         // GRAFT_TOPICS), which applies cfg.kafkaOptions (brokers + fetch
-        // tuning), with value.cast("string") as the payload column;
-        // downstream (decode → flatten → partitioned sink) is identical —
-        // KafkaIntegrationSpec carries the live-broker recipe
+        // tuning) and emits the 5-column envelope the file twin above
+        // decodes; KafkaIntegrationSpec carries the live-broker recipe
         throw new IllegalStateException(
           "kafka mode needs a live broker — this environment runs file mode")
     }
@@ -513,7 +520,6 @@ object CollectorMain {
       // field, which lands hoisted in the lake but does not exist as a
       // source column), on event_id for payload-keyed sources (an
       // audited lake was grouped on event_id, so it has the column)
-      val envelope = srcBatch.filter(isEnvelope)
       val keyCols: Seq[String] =
         if (envelope.nonEmpty) envKeys
         else if (src.columns.contains("event_id") &&

@@ -113,12 +113,6 @@ object KMeans {
       .agg(array((1 to dim).map(i => sum(element_at(col("q"), i))): _*).as("s"),
         count(lit(1)).as("cn"))
 
-  /** Cluster sums under an explicit assignment (vec_id, cl). */
-  def clusterSums(emb: DataFrame, asg: DataFrame): DataFrame =
-    labelSums(emb
-      .join(asg.toDF("a_vec_id", "a_cl"), col("vec_id") === col("a_vec_id"))
-      .select(col("a_cl").as("label"), col("q")))
-
   /** Exact nearest-cluster assignment: (vec_id, cl, d2n) where d2n is
     * the winning scaled squared distance d2/cn² as a double (exact
     * comparisons happen BEFORE this one presentational division — d2n

@@ -55,17 +55,4 @@ object Flatten {
     df.schema.fields.foreach(f => walk("", f.name, f.dataType, col(f.name)))
     df.select(out.values.toSeq: _*)
   }
-
-  /** Flatten only the given struct column (the decoded Kafka payload),
-    * keeping every other column as-is — the collector's record assembly
-    * (5 kafka metadata fields + flattened payload, `:388-404`). */
-  def flattenPayload(df: DataFrame, payloadCol: String): DataFrame = {
-    // withColumnRenamed would happily create a SECOND 'data' column and
-    // every later col("data") reference turns AMBIGUOUS at plan time —
-    // refuse up front with a message that names the conflict
-    require(payloadCol == "data" || !df.columns.contains("data"),
-      s"cannot hoist '$payloadCol' as 'data': the frame already has a 'data' column")
-    val renamed = df.withColumnRenamed(payloadCol, "data")
-    flatten(renamed)
-  }
 }

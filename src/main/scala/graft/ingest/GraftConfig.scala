@@ -20,17 +20,19 @@ package graft.ingest
   *     parity so configs round-trip)
   *  - `MAX_WORKERS`                  → executor parallelism (`local[N]` / cluster cores);
   *     per-topic threads are Spark tasks here
-  *  - `SKIP_EXISTING_CHECK`          → skip `OffsetLedger` lake mining (fresh export)
+  *  - `SKIP_EXISTING_CHECK`          → `false` prints the lake's landed offset
+  *     per (topic, partition), or a props lake's row count; the checkpoint owns resume
   *  - `SKIP_DEDUPLICATION`           → deferred (staging + merge) vs inline anti-join —
   *     WHEN dedup happens, not IF (reference `:87` comment)
   *  - `SKIP_VALIDATION`              → skip the post-run count validation
   *     (`q_count_validation` shape)
-  *  - `KAFKA_CLEANUP_ENABLED`        → `KafkaTrim` (broker-side trim after a
-  *     validated drain); no drain calls the trim yet, so `CollectorMain.run`
+  *  - `KAFKA_CLEANUP_ENABLED`        → meant as the reference's broker-side
+  *     trim after a validated drain (`:1098-1151`); no drain trims the
+  *     broker (this build has no Kafka admin client), so `CollectorMain.run`
   *     rejects `true` up front rather than silently skipping the trim
-  *  - `KAFKA_CLEANUP_MODE` / `STAGING_RETENTION_DAYS` → not parsed: `KafkaTrim`
-  *     has one mode (after the drain validates), and the staging GC the
-  *     retention horizon fed is dead code in the reference itself (SURVEY S15)
+  *  - `KAFKA_CLEANUP_MODE` / `STAGING_RETENTION_DAYS` → not parsed: no trim
+  *     runs, and the staging GC the retention horizon fed is dead code in
+  *     the reference itself (SURVEY S15)
   *  - `PARQUET_COMPRESSION` / `COMPRESSION_LEVEL` →
   *     `spark.sql.parquet.compression.codec` and parquet-mr's
   *     `parquet.compression.codec.zstd.level` (the session conf reaches

@@ -81,7 +81,7 @@ object JsonDecode {
     * wins schema resolution. Type conflicts resolve to THIS run's
     * inferred type (new data wins, matching the reference's
     * version-on-change posture — the old files keep their own footers
-    * and `mergeSchema`/`readAllVersions` reads reconcile). */
+    * and `mergeSchema` reads reconcile). */
   def unionPayloadSchema(inferred: StructType, landed: Option[StructType],
                          nonPayload: Set[String]): StructType = {
     val have = inferred.fieldNames.toSet
@@ -160,8 +160,11 @@ object JsonDecode {
     }
   }
 
-  /** decode + flatten in one step: the collector's per-record pipeline
-    * (decode_message → flatten_dict, `:385-399`). */
+  /** decode + flatten in one step: the reference's per-record pipeline
+    * (decode_message → flatten_dict, `:385-399`), which `q_ingest_e2e`
+    * and `q_json_flatten` run. The collector's drain does NOT call it:
+    * it expands only the payload's top level (`data.*`), so nested
+    * structs land as structs, not as `parent_child` columns. */
   def decodeFlat(spark: SparkSession, df: DataFrame, column: String,
                  sampleSize: Int = 1000): DataFrame =
     Flatten.flatten(decode(spark, df, column, sampleSize = sampleSize).drop(column))

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental-resume offset ledger.
@@ -17,6 +17,9 @@ import org.apache.spark.sql.functions._
   * the offset/partition columns' pages; the idiomatic alternative (noted in
   * SURVEY §2.8) is a Structured Streaming checkpoint, implemented in
   * `graft.streaming.IngestPipeline`.
+  *
+  * [[maxOffsets]] backs `q_offset_ledger`; the collector keys its lake
+  * watermarks by (topic, partition) instead (`CollectorMain.identityStats`).
   */
 object OffsetLedger {
 
@@ -27,29 +30,4 @@ object OffsetLedger {
     lake.select(col(partCol), col(offCol)) // projection → parquet column pruning
       .groupBy(col(partCol))
       .agg(max(col(offCol)).as("max_offset"))
-
-  /** Kafka `startingOffsets` JSON for a resume run: next offset = max + 1;
-    * partitions never seen start at -2 (= "earliest"). */
-  def startingOffsetsJson(topic: String, ledger: Map[Int, Long],
-                          allPartitions: Seq[Int]): String = {
-    val entries = allPartitions.sorted.map { p =>
-      val next = ledger.get(p).map(_ + 1).getOrElse(-2L)
-      s""""$p":$next"""
-    }
-    s"""{"$topic":{${entries.mkString(",")}}}"""
-  }
-
-  /** Driver-side collect of the (small) ledger. */
-  def collectLedger(lake: DataFrame, partCol: String = "kafka_partition",
-                    offCol: String = "kafka_offset"): Map[Int, Long] =
-    maxOffsets(lake, partCol, offCol).collect().map { r: Row =>
-      r.getAs[Number](0).intValue() -> r.getAs[Number](1).longValue()
-    }.toMap
-
-  /** Messages still to drain: Σ max(0, highWatermark − (current+1))
-    * (reference `:1181-1184`; watermark is the NEXT offset to be produced). */
-  def remaining(watermarks: Map[Int, Long], ledger: Map[Int, Long]): Long =
-    watermarks.map { case (p, hw) =>
-      math.max(0L, hw - (ledger.getOrElse(p, -1L) + 1))
-    }.sum
 }

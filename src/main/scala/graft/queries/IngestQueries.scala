@@ -156,7 +156,7 @@ object IngestQueries {
     // low 16 bits (graft.plans.ZOrder2, native codegen) — sorting the
     // lake by this key clusters rows close in EITHER dimension into the
     // same files, so parquet min/max stats prune scans filtered on either
-    // column (LakeWriter.writeZOrdered is the sink side). The oracle
+    // column (a sink range-partitions and sorts on it). The oracle
     // replays the interleave with shift/mask arithmetic.
     entry("q_zorder",
       """SELECT event_id, user_id,

@@ -2,13 +2,15 @@ package graft.sources
 
 import java.security.MessageDigest
 
-import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Lake sink family (SURVEY §2.1 S9-S13): date-partitioned zstd parquet
-  * with schema-versioned sibling outputs.
+/** The collector's lake helpers: the payload-schema lineage registry,
+  * the `date_path` partition key, the data-file listing and the
+  * streaming sink-log rebuild the drain runs, plus the bucketed table
+  * write behind `q_edge_table`.
   *
   * Spark-first notes:
   *  - Atomic writes (reference S9, temp + rename `:697-708`) come free from
@@ -17,15 +19,12 @@ import org.apache.spark.sql.types.StructType
   *  - Parallel per-date writes (reference S12's ThreadPool ≤ 4, `:844-928`)
   *    are a single `partitionBy("date_path")` job — the cluster scheduler
   *    parallelizes across ALL partitions and executors, not 4 threads.
-  *  - Sort-clustering before write (reference W1 `:859-860`) is
-  *    `sortWithinPartitions`, which keeps the global shuffle out of the
-  *    write path while preserving read locality within each file.
   *  - zstd + 1M row groups (reference `:97-99`) are reader/writer options.
   *
-  * Schema versioning (S11, reference `:435-465`, `:795-819`): on a write
-  * whose schema hash differs from the existing lake table's, write to a
-  * `<table>_vN` sibling directory instead of merging or failing. Readers
-  * can union versions back with `mergeSchema=true`.
+  * Schema versioning (S11, reference `:435-465`, `:795-819`): the
+  * streaming sink appends into one directory, so a schema change is
+  * recorded in the `_schema` lineage registry ([[recordSchemaVersion]])
+  * and readers reconcile the versions with `mergeSchema=true`.
   */
 object LakeWriter {
 
@@ -60,9 +59,9 @@ object LakeWriter {
     * schema observed at drain time — the reference's md5 versioning
     * (`:414-432`, `:435-465`) in registry form for the STREAMING sink,
     * which appends into one directory and cannot fork `_vN` sibling
-    * files the way [[writeVersioned]] does for batch tables. Returns the
-    * version number assigned to this hash (existing or newly minted);
-    * idempotent per hash, so crash-replayed drains never double-mint. */
+    * tables. Returns the version number assigned to this hash (existing
+    * or newly minted); idempotent per hash, so crash-replayed drains
+    * never double-mint. */
   def recordSchemaVersion(spark: SparkSession, dest: String,
                           schema: StructType): Int = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
@@ -117,112 +116,6 @@ object LakeWriter {
     * since they are values, not paths. */
   def withDatePath(df: DataFrame, tsCol: String = "ts"): DataFrame =
     df.withColumn("date_path", date_format(col(tsCol), "yyyy-MM-dd"))
-
-  /** Parquet bloom-filter sink: zstd write with a split-block bloom
-    * filter per requested column (`parquet.bloom.filter.enabled#col`),
-    * sized by that column's OWN expected NDV — sizing is per column
-    * because one shared figure would leave a high-cardinality key with a
-    * saturated filter (false-positive rate → 1, skipping silently dead)
-    * while over-paying footer bytes on the low-cardinality ones. The
-    * 100 TB role: point lookups on UNSORTED high-cardinality keys
-    * (content hashes, doc ids, offsets) skip row groups via the footer
-    * bloom without paying the global sort that min/max pruning
-    * (writePartitioned's clustering, writeZOrdered) needs. Readers use
-    * it whenever `spark.sql.parquet.filterPushdown` is on (default) and
-    * parquet-mr's `parquet.filter.bloom.enabled` is not disabled, for
-    * eq/IN predicates. */
-  def writeBloom(df: DataFrame, dest: String, bloomNdv: Map[String, Long]): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite).option("compression", "zstd")
-    bloomNdv.foldLeft(w) { case (acc, (c, ndv)) =>
-      acc.option(s"parquet.bloom.filter.enabled#$c", "true")
-        .option(s"parquet.bloom.filter.expected.ndv#$c", ndv.toString)
-    }.parquet(dest)
-  }
-
-  /** S9+S12+W1: sort-clustered, date-partitioned, zstd atomic write. */
-  def writePartitioned(df: DataFrame, dest: String,
-                       clusterBy: Seq[String] = Seq("user_id", "event_id")): Unit =
-    df.sortWithinPartitions(clusterBy.map(col): _*)
-      .write.mode(SaveMode.Append)
-      .option("compression", "zstd")
-      .partitionBy("date_path")
-      .parquet(dest)
-
-  /** S11: write to `dest/<table>` if schema matches (or first write), else
-    * to the next free `dest/<table>_vN`. Returns the chosen path. */
-  def writeVersioned(df: DataFrame, dest: String, table: String): String = {
-    val spark = df.sparkSession
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val base = new Path(s"$dest/$table")
-    val target =
-      if (!fs.exists(base)) base
-      else {
-        val existing = spark.read.parquet(base.toString).schema
-        if (schemaHash(existing) == schemaHash(df.schema)) base
-        else {
-          var n = 2
-          while (fs.exists(new Path(s"$dest/${table}_v$n")) &&
-            schemaHash(spark.read.parquet(s"$dest/${table}_v$n").schema) != schemaHash(df.schema)) n += 1
-          new Path(s"$dest/${table}_v$n")
-        }
-      }
-    df.write.mode(SaveMode.Append).option("compression", "zstd").parquet(target.toString)
-    target.toString
-  }
-
-  /** Read a table back across ALL its schema versions (base + _vN),
-    * union-by-name with missing columns nulled — the read-side complement
-    * of writeVersioned (reference readers enumerate version files
-    * `parquet_to_polars.py:544-574`). */
-  def readAllVersions(spark: SparkSession, dest: String, table: String): DataFrame = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dirs = Seq(s"$dest/$table") ++
-      Iterator.from(2).map(n => s"$dest/${table}_v$n")
-        .takeWhile(p => fs.exists(new Path(p)))
-    dirs.filter(p => fs.exists(new Path(p)))
-      .map(spark.read.parquet(_))
-      .reduceLeft(_.unionByName(_, allowMissingColumns = true))
-  }
-
-  /** S13: backup a lake path before a destructive rewrite (`R:620-651`). */
-  def backup(spark: SparkSession, src: String, backupRoot: String, stamp: String): String = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(s"$backupRoot/$stamp/${new Path(src).getName}")
-    fs.mkdirs(dst.getParent)
-    FileUtil.copy(fs, new Path(src), fs, dst, false, spark.sparkContext.hadoopConfiguration)
-    dst.toString
-  }
-
-  /** Z-ordered layout: range-partition AND sort by the Morton interleave
-    * of two keys ([[graft.plans.ZOrder2]], native codegen), so rows close
-    * in EITHER dimension land in the same files and parquet min/max stats
-    * prune scans filtered on either column — multi-dimensional clustering
-    * a single-column sort cannot give. `nFiles` sets the output file
-    * count. */
-  def writeZOrdered(df: DataFrame, dest: String, keyA: String, keyB: String,
-                    nFiles: Int): Unit = {
-    import org.apache.spark.sql.functions.col
-    val z = graft.plans.VectorExpressions.zorder2(col(keyA), col(keyB)).as("_z")
-    df.withColumn("_z", z)
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(dest)
-  }
-
-  /** Safe in-place rewrite: Spark cannot overwrite a path it is reading, so
-    * stage to `<path>.rewrite`, then swap via rename (reader-dedup E3's
-    * backup+overwrite, `R:653-710`). */
-  def rewriteInPlace(spark: SparkSession, path: String)(transform: DataFrame => DataFrame): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".rewrite")
-    val old = new Path(path + ".old")
-    transform(spark.read.parquet(path))
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd").parquet(tmp.toString)
-    fs.rename(new Path(path), old)
-    fs.rename(tmp, new Path(path))
-    fs.delete(old, true)
-  }
 
   /** Committed data files under a lake directory, recursively — skipping
     * metadata (`_spark_metadata`, `_batches`, `_idbloom`, `_temporary`)

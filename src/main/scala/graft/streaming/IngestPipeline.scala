@@ -15,9 +15,7 @@ import graft.ingest.GraftConfig
   * Spark the same run-once-until-caught-up contract is
   * `Trigger.AvailableNow` + a checkpoint: offsets live in the checkpoint,
   * the file sink is exactly-once, and a crashed run resumes where it
-  * stopped — the whole ledger/anti-join machinery becomes unnecessary
-  * (we keep it in `graft.ingest` for semantic parity and for lakes written
-  * by other tools).
+  * stopped, so the drain needs no lake-mined offset ledger.
   *
   * Source here is a file stream over the testdata shape (no broker in the
   * container); the Kafka variant swaps in `readStream.format("kafka")` with
@@ -54,19 +52,13 @@ object IngestPipeline {
         col("key").cast("string").as("kafka_key"),
         col("value"))
 
-  /** File-source → decode/flatten → date-partitioned parquet sink, run-once.
-    * Blocks until caught up (AvailableNow), then returns.
-    *
-    * `dedupKeys` non-empty = INLINE source-borne dedup during the drain
-    * (`dropDuplicates` without a watermark — state grows with distinct
-    * keys, which is bounded for a run-once drain the way the reference's
-    * in-memory ledger is; a forever-running stream should bound its state
-    * with a watermark and Spark's `dropDuplicatesWithinWatermark`
-    * instead). */
+  /** File-source → decode → date-partitioned parquet sink, run-once.
+    * Blocks until caught up (AvailableNow), then returns. The drain
+    * itself does not dedup: the collector runs this in deferred mode,
+    * with one merge pass over the lake after the drain. */
   def runFileIngest(spark: SparkSession, srcDir: String, schema: StructType,
                     payloadSchema: StructType, dest: String, checkpoint: String,
                     compression: String = "zstd",
-                    dedupKeys: Seq[String] = Nil,
                     decode: Option[DataFrame => DataFrame] = None): StreamingQuery = {
     // MIXED-MODE GUARD: a FileStreamSink resolves reads through its
     // `_spark_metadata` log, so data files the log does not list (the
@@ -196,8 +188,7 @@ object IngestPipeline {
     // always safe (the next keeper drain re-adopts the lake exactly), a
     // stale bloom never is
     IdBloom.invalidate(fs, dest)
-    val raw = spark.readStream.schema(schema).parquet(srcDir)
-    val stream = if (dedupKeys.isEmpty) raw else raw.dropDuplicates(dedupKeys)
+    val stream = spark.readStream.schema(schema).parquet(srcDir)
     val decoded = decode.getOrElse(decodeAndDatePartition(_: DataFrame, payloadSchema))(stream)
     val q = decoded.writeStream
       .format("parquet")
@@ -234,7 +225,8 @@ object IngestPipeline {
     * doubling pays a full column-pruned lake scan and each generation a
     * per-executor torrent push, and past saturation the guard degrades
     * into exact confirms, never incorrectness — lakes beyond ~16M keys
-    * should drain through runFileIngest's state-store dedup. */
+    * should drain in deferred mode, whose one post-drain merge pass
+    * holds no per-key state. */
   private val keeperMaxBloomItems: Long = 1L << 24
 
   /** Last batch id with a commit marker under the checkpoint (the
@@ -261,9 +253,9 @@ object IngestPipeline {
       .reduceOption(_ max _)
   }
 
-  /** Shared decode/flatten + date partition column (dash format: a
-    * slashed partition VALUE percent-escapes in the directory name —
-    * see LakeWriter.withDatePath's rationale).
+  /** Shared decode (the payload's top level as columns) + date partition
+    * column (dash format: a slashed partition VALUE percent-escapes in the
+    * directory name — see LakeWriter.withDatePath's rationale).
     *
     * Decode runs through [[graft.ingest.JsonDecode.parseWithDegrade]] —
     * the SAME corrupt-record body as [[decodeEnvelope]] and
@@ -279,9 +271,9 @@ object IngestPipeline {
     val fields = payloadSchema.fields.filterNot(_.name == "_corrupt_record")
     val parsed = graft.ingest.JsonDecode.parseWithDegrade(
       stream, col("props").cast("string"), "data", payloadSchema)
-    (if (fields.isEmpty) parsed else parsed.select(col("*"), col("data.*")))
-      .drop("data", "props")
-      .withColumn("date_path", date_format(col("ts"), "yyyy-MM-dd"))
+    graft.sources.LakeWriter.withDatePath(
+      (if (fields.isEmpty) parsed else parsed.select(col("*"), col("data.*")))
+        .drop("data", "props"))
   }
 
   /** Per-topic payload→JSON-text expression: each topic's binary `value`
@@ -301,7 +293,7 @@ object IngestPipeline {
   /** Kafka-envelope decode — the downstream [[kafkaSource]]'s projection
     * actually feeds (collector `:324-411`): binary `value` under the
     * 5-column metadata envelope, decoded per the topic's detected codec,
-    * flattened, and date-partitioned off the BROKER timestamp
+    * its top level expanded, and date-partitioned off the BROKER timestamp
     * (`:863-867` — the envelope has no payload `ts` contract).
     * Undecodable payloads degrade to `raw_value` with a NULL payload
     * struct (`:240-241, 256, 400-402`): msgpack garbage returns NULL from
@@ -326,9 +318,9 @@ object IngestPipeline {
       nullTextRaw = Some(when(col("value").isNotNull, col("value").cast("string"))))
     val metaAndRaw = Seq(col("kafka_topic"), col("kafka_partition"),
       col("kafka_offset"), col("kafka_timestamp"), col("kafka_key"), col("raw_value"))
-    parsed
-      .select(metaAndRaw ++ (if (payloadFields.isEmpty) Nil else Seq(col("data.*"))): _*)
-      .withColumn("date_path", date_format(col("kafka_timestamp"), "yyyy-MM-dd"))
+    graft.sources.LakeWriter.withDatePath(
+      parsed.select(metaAndRaw ++ (if (payloadFields.isEmpty) Nil else Seq(col("data.*"))): _*),
+      "kafka_timestamp")
   }
 
   /** File-drain ingest with the DEFERRED KEEPER AUTHORITY applied
@@ -337,8 +329,8 @@ object IngestPipeline {
     * post-drain rewrite's choice), guarded by a persisted first-write-
     * wins id bloom, and appended as plain partitioned parquet.
     *
-    * Why not `dropDuplicates` + the exactly-once file sink
-    * ([[runFileIngest]]'s inline path): streaming `dropDuplicates`
+    * Why not streaming `dropDuplicates` + the exactly-once file sink
+    * ([[runFileIngest]]): streaming `dropDuplicates`
     * keeps an ARBITRARY first-seen row within a batch, and the min-ts
     * choice cannot be expressed upstream of an append-mode sink (a
     * `min_by` aggregation would hold back every group until the
@@ -566,8 +558,8 @@ object IngestPipeline {
           // clamped monolith rebuild. At the clamp the bloom saturates and
           // fpp degrades gracefully: more bloom hits, each paying the
           // exact column-pruned anti-join — performance, never
-          // correctness. Lakes past ~16M keys should drain through
-          // runFileIngest's state-store dedup instead.
+          // correctness. Lakes past ~16M keys should drain in deferred
+          // mode instead.
           // exact-count BACKFILL: sizing.count is maintained incrementally
           // between rebuilds and can drift low (crash replays recompute it,
           // but a pre-fix mixed-mode lake may carry an undercount) — the

@@ -322,6 +322,25 @@ class CollectorMainSpec extends SparkSpec {
     assert(e.getMessage.contains("count validation failed"))
   }
 
+  test("SKIP_EXISTING_CHECK=false reports resume watermarks per (topic, partition)") {
+    // offsets are scoped per topic: a ledger keyed by partition alone
+    // merges ticks/0 with logs/0 and prints two entries for three
+    val work = Files.createTempDirectory("collector14").toString
+    val src = s"$work/src"
+    writeEnvelope(envelopeRows, src)
+    val cfg = GraftConfig(outputDir = s"$work/out",
+      skipValidation = false, skipExistingCheck = false)
+    CollectorMain.run(spark, cfg, "file", src)
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out)(CollectorMain.run(spark, cfg, "file", src))
+    val line = out.toString("UTF-8").linesIterator
+      .find(_.contains("[collector] existing lake: resume watermarks")).getOrElse(fail(out.toString))
+    val marks = """(\w+)/(\d+) -> (\d+)""".r.findAllMatchIn(line)
+      .map(m => (m.group(1), m.group(2).toLong) -> m.group(3).toLong).toSeq
+    assert(marks.toMap == Map(("ticks", 0L) -> 398L, ("ticks", 1L) -> 399L,
+      ("logs", 0L) -> 399L) && marks.size == 3, line)
+  }
+
   test("kafka mode refuses without a broker; bad mode refuses") {
     val cfg = GraftConfig()
     assert(intercept[IllegalStateException] {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{Dedup, OffsetLedger}
+import graft.ingest.Dedup
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -30,20 +30,6 @@ class DedupSpec extends SparkSpec {
       ev.select("event_type", "event_id"), Seq($"event_type"), $"event_id")
     val expect = ev.groupBy("event_type").agg(min("event_id").as("event_id"))
     assert(deduped.join(expect, Seq("event_type", "event_id")).count() == expect.count())
-  }
-
-  test("offset ledger: resume-from-ledger ∪ lake == full read (SURVEY §5)") {
-    val lake = ev.filter($"event_id" <= 300)
-    val ledger = OffsetLedger.collectLedger(lake, "user_id", "event_id")
-    // a resumed consume = rows with event_id > per-user max in ledger
-    val resumed = ev.filter(r =>
-      r.getAs[Long]("event_id") > ledger.getOrElse(r.getAs[Long]("user_id").toInt, -1L))
-    assert(lake.count() + resumed.count() == ev.count())
-  }
-
-  test("startingOffsets JSON shape") {
-    val json = OffsetLedger.startingOffsetsJson("t", Map(0 -> 10L, 2 -> 5L), Seq(0, 1, 2))
-    assert(json == """{"t":{"0":11,"1":-2,"2":6}}""")
   }
 
   test("bloom-prefiltered anti-join equals the plain anti-join for any overlap shape") {

@@ -39,7 +39,7 @@ class HardeningSpec extends SparkSpec {
   test("salting refuses an input that already carries _salt") {
     val df = Seq((1L, "x")).toDF("k", "_salt")
     val e = intercept[IllegalArgumentException] {
-      SkewJoin.saltedSumCount(df.withColumn("v", lit(1.0)), "k", "v", 4)
+      SkewJoin.saltedEquiJoin(df, Seq((1L, "dim")).toDF("k", "name"), "k", 4)
     }
     assert(e.getMessage.contains("_salt"))
   }
@@ -153,18 +153,10 @@ class HardeningSpec extends SparkSpec {
       "null-position rows are distinct content and must both survive")
   }
 
-  test("flattenPayload refuses a frame that already carries a data column") {
-    val df = Seq((1L, "p", "d")).toDF("id", "props", "data")
-    val e = intercept[IllegalArgumentException] {
-      graft.ingest.Flatten.flattenPayload(df, "props")
-    }
-    assert(e.getMessage.contains("data"))
-  }
-
   test("partition date values contain no percent-escapes in directory names") {
     val dest = java.nio.file.Files.createTempDirectory("datedirs").toString + "/lake"
     val ev = graft.sources.LakeWriter.withDatePath(Tables(spark, sf001, "events"))
-    graft.sources.LakeWriter.writePartitioned(ev, dest)
+    ev.write.partitionBy("date_path").parquet(dest)
     val dirs = new java.io.File(dest).listFiles.filter(_.isDirectory).map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(d => d.startsWith("date_path=") && !d.contains("%")),
       s"escaped or unexpected partition dirs: ${dirs.mkString(",")}")

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Msgpack
-import graft.ingest.{Dedup, Flatten}
-import graft.sources.LakeWriter
+import graft.ingest.{Flatten, GraftConfig}
 
 /** End-to-end collector parity on reference-shaped data (FIXTURES.md §A):
   * Kafka envelope + nested market-data payload → decode (both codecs) →
-  * flatten → date partition → dedup → partitioned lake write, asserting the
-  * exact A2 output schema. */
+  * flatten → date partition, asserting the exact A2 output schema, and
+  * the collector's own drain over overlapping envelope deliveries. */
 class IngestE2ESpec extends SparkSpec {
 
   private val payloadJson =
@@ -73,28 +72,23 @@ class IngestE2ESpec extends SparkSpec {
   }
 
   test("full collector run: decode → dedup vs lake → partitioned write → count validation") {
+    // the drain CollectorMain.run runs: envelope detection, decode, the
+    // date-partitioned streaming sink, the deferred dedup pass and the
+    // count validation (which throws on a mismatch)
     val work = java.nio.file.Files.createTempDirectory("e2e").toString
-    val lake = s"$work/lake"
-    val batch1 = (1L to 50L).map(o => envelope(o, payloadJson.getBytes("UTF-8")))
-    val batch2 = (40L to 90L).map(o => envelope(o, payloadJson.getBytes("UTF-8")))
-    def ingest(rows: Seq[Row]): Unit = {
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), envSchema)
-      val flat = Flatten.flatten(
-        df.withColumn("data",
-          from_json(col("value").cast("string"), StructType(Seq(
-            StructField("event_type", StringType), StructField("source", StringType)))))
-          .drop("value"))
-        .withColumn("date_path",
-          date_format(timestamp_millis(col("kafka_timestamp")), "yyyy/MM/dd"))
-      val fresh =
-        if (!new java.io.File(lake).exists) flat
-        else Dedup.antiJoinNew(flat, spark.read.parquet(lake),
-          Seq("kafka_partition", "kafka_offset"), broadcastExisting = true)
-      LakeWriter.writePartitioned(fresh, lake, clusterBy = Seq("kafka_partition", "kafka_offset"))
-    }
-    ingest(batch1)
-    ingest(batch2) // overlaps 40-50; dedup must drop the overlap
-    val back = spark.read.parquet(lake)
+    val src = s"$work/src"
+    // a broker timestamp, as kafkaSource emits it
+    def append(offsets: Seq[Long]): Unit =
+      spark.createDataFrame(spark.sparkContext.parallelize(
+          offsets.map(o => envelope(o, payloadJson.getBytes("UTF-8"))), 1), envSchema)
+        .withColumn("kafka_timestamp", timestamp_millis(col("kafka_timestamp")))
+        .write.mode("append").parquet(src)
+    val cfg = GraftConfig(outputDir = s"$work/out", skipValidation = false)
+    append(1L to 50L)
+    CollectorMain.run(spark, cfg, "file", src)
+    append(40L to 90L) // overlaps 40-50; dedup must drop the overlap
+    CollectorMain.run(spark, cfg, "file", src)
+    val back = spark.read.parquet(s"$work/out/lake")
     assert(back.count() == 90)
     // count validation (A9): per-partition contiguity check
     val v = back.groupBy("kafka_partition")

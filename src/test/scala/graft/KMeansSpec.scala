@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{KMeans, VectorFunctions}
@@ -37,11 +38,18 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  /** Cluster sums under an explicit assignment (vec_id, cl): the fit's
+    * own per-label sums, re-derived from its reported assignments. */
+  private def clusterSums(emb: DataFrame, asg: DataFrame): DataFrame =
+    KMeans.labelSums(emb
+      .join(asg.toDF("a_vec_id", "a_cl"), col("vec_id") === col("a_vec_id"))
+      .select(col("a_cl").as("label"), col("q")))
+
   test("the reported fixpoint re-assigns to itself") {
     val fit = KMeans.fit(emb, maxIter = 20)
     assert(fit.converged, s"did not converge in 20 iterations (${fit.iterations} run)")
     val asg = fit.assignments.select(col("vec_id"), col("cl"))
-    val cs = KMeans.clusterSums(emb, asg)
+    val cs = clusterSums(emb, asg)
     val again = KMeans.assign(emb, cs)
       .select(col("vec_id").as("r_vec"), col("cl").as("r_cl"))
     val moved = asg.join(again, col("vec_id") === col("r_vec"))

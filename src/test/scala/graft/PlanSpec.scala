@@ -107,7 +107,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val dest = java.nio.file.Files.createTempDirectory("prune").toString + "/lake"
     val ev = graft.sources.LakeWriter.withDatePath(Tables(spark, sf001, "events"))
-    graft.sources.LakeWriter.writePartitioned(ev, dest)
+    ev.write.partitionBy("date_path").parquet(dest)
     val firstDate = ev.select(min("date_path")).collect().head.getString(0)
     val df = spark.read.parquet(dest).filter(col("date_path") === firstDate)
     val p = df.queryExecution.executedPlan.toString

@@ -18,18 +18,4 @@ class SkewJoinSpec extends SparkSpec {
       .select(salted.columns.map(col): _*).orderBy("k", "v")
     assert(salted.collect().toSeq == plain.collect().toSeq)
   }
-
-  test("salted two-phase aggregation equals direct aggregation") {
-    val df = (1 to 5000).map(i => (if (i % 10 == 0) i.toLong % 20 else 3L, i.toDouble))
-      .toDF("k", "v")
-    val salted = SkewJoin.saltedSumCount(df, "k", "v", saltBuckets = 8)
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    val direct = df.groupBy("k").agg(sum("v").as("s"), count(lit(1)).as("n"))
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
-    // sums of doubles may differ in ulps by grouping order; compare with tolerance
-    assert(salted.length == direct.length)
-    salted.zip(direct).foreach { case ((k1, s1, n1), (k2, s2, n2)) =>
-      assert(k1 == k2 && n1 == n2 && math.abs(s1 - s2) < 1e-6 * math.max(1.0, math.abs(s2)))
-    }
-  }
 }
