@@ -6,12 +6,15 @@ import org.apache.spark.sql.SparkSession
   * harness mains, the collector, Explain, ScaleGen and the test
   * `SparkSpec`) — ONE place, so a session-level fix cannot silently apply
   * to the bench but not the gate or the plan pins. `SessionsGuardSpec`
-  * fails when a file other than this one builds a session. The
-  * SQL-settable part of the policy is [[confs]], which
+  * fails when a file other than this one builds a session. The policy
+  * is [[confs]], applied when the session is built, which
   * `GraftConfig.sparkConfs` also carries, so a session a caller builds
-  * for a drain (perfbench's included) gets it through the config. These
-  * are also the settings a cluster deployment of this library should
-  * carry. */
+  * for a drain (perfbench's included) gets it through the config. Its
+  * SQL entries are session confs; its two `spark.hadoop.` entries act
+  * only when a context (the driver's or an executor's) first creates its
+  * `file:` filesystem, since Hadoop caches filesystems JVM-wide by
+  * scheme. These are also the settings a cluster deployment of this
+  * library should carry. */
 object Sessions {
 
   val confs: Map[String, String] = Map(
@@ -41,7 +44,13 @@ object Sessions {
     // halves) and the process wall change stayed inside the run-to-run
     // spread. Nothing here adds session artifacts: the app's classes
     // ship context-wide through `spark.jars`
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // Hadoop's local filesystem, without native IO, starts a `chmod` or
+    // `readlink` process per created file and per rename side, ~100 per
+    // drain on the checkpoint and sink commit path; these make the same
+    // calls in-process (graft.sources.NioRawLocalFileSystem)
+    "spark.hadoop.fs.file.impl" -> classOf[sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[sources.NioLocalFs].getName)
 
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()

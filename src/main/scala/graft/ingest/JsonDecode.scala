@@ -8,10 +8,14 @@ import org.apache.spark.sql.types.{StructType, StringType}
   *
   * Mirrors the reference's one-shot per-topic format detection
   * (`app/redpanda_to_parquet_collector.py:172-220`) rather than per-row
-  * try/except: we pay a bounded `limit(sampleSize)` scan once to learn the
-  * payload schema, then decode the full stream with the codegen'd
-  * `from_json` — on a 100 TB input the sampling job touches a handful of
-  * row groups, while the decode itself is a narrow map with no shuffle.
+  * try/except: we infer the payload schema once from a bounded sample,
+  * then decode the full stream with the codegen'd `from_json`, a narrow
+  * map with no shuffle. The sample's ROWS are bounded, not its scan: the
+  * envelope drain's sample (`CollectorMain.envelopeSample`) keeps
+  * O(partitions) rows through a filter parquet cannot push down, so its
+  * job reads and decompresses every source row's `value` once before the
+  * drain reads them again. Only the props drain's [[inferSchemaSpread]]
+  * ends its strided scan early, once its `limit` fills.
   *
   * Undecodable rows degrade to NULL struct + the raw string retained in a
   * `raw_value` column, mirroring `:240-241, 256, 400-402`.

@@ -285,6 +285,34 @@ class CollectorMainSpec extends SparkSpec {
     assert(fresh == 0, s"$fresh classes compiled by a repeated drain")
   }
 
+  test("an envelope drain on a local lake starts no chmod or readlink process") {
+    // Hadoop's stock local filesystem, without native IO, forks `chmod` per
+    // created file or directory and `readlink` per rename side: about 100
+    // per drain, serial on the checkpoint and sink-log commit path
+    val conf = spark.sessionState.newHadoopConf()
+    assert(org.apache.hadoop.fs.FileSystem.getFileSystemClass("file", conf) ==
+      classOf[graft.sources.NioLocalFileSystem])
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(java.net.URI.create("file:///"), conf)
+      .isInstanceOf[graft.sources.NioLocalFs])
+    val work = Files.createTempDirectory("collector12").toString
+    val src = s"$work/src"
+    writeEnvelope(envelopeRows, src)
+    val cfg = GraftConfig(outputDir = s"$work/out", skipValidation = false)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try CollectorMain.run(spark, cfg, "file", src) finally rec.stop()
+    val jfr = java.nio.file.Paths.get(work, "drain.jfr")
+    rec.dump(jfr)
+    rec.close()
+    import scala.jdk.CollectionConverters._
+    val commands = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala.toSeq
+      .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    val forks = commands.filter(c => c.contains("chmod") || c.contains("readlink"))
+    assert(spark.read.parquet(s"$work/out/lake").count() == 800)
+    assert(forks.size == 0, s"forks, e.g. ${forks.take(3).mkString("; ")}")
+  }
+
   test("envelope duplicates and a null offset dedup to the distinct identities and validate") {
     // 30 redelivered identities and two null-offset messages, which are
     // ONE identity (the groupBy null semantics validation counts by)

@@ -15,8 +15,10 @@ import graft.streaming.IdBloom
   * on a geometry mismatch — it rebuilds instead. */
 object IdBloomProps extends Properties("graft.idbloom") {
 
+  // an uncached instance: a cached one made from a bare Configuration
+  // would become every later `file:` user's filesystem in this JVM
   private lazy val fs =
-    FileSystem.get(new org.apache.hadoop.conf.Configuration())
+    FileSystem.newInstance(new org.apache.hadoop.conf.Configuration())
 
   property("sizing ledger round-trips, including count/width extremes") =
     Prop.forAll(
