@@ -24,8 +24,10 @@ import graft.streaming.IngestPipeline
   *    per-(topic, partition) stride + edge sample in one collected job
   *    ([[envelopeSample]]), and the driver detects each topic's codec,
   *    decodes and infers over it ([[samplePayload]]); a props source goes
-  *    through [[JsonDecode.inferSchemaSpread]]. Then the full stream
-  *    decodes through codegen'd `from_json`.
+  *    through [[JsonDecode.inferSchemaSpread]]. Then each payload of the
+  *    full stream decodes from its bytes into the payload struct
+  *    ([[graft.ingest.PayloadDecoder]]); only the rows that decoder does
+  *    not mirror go through `from_json`.
   *  - `kafka`: not wired. `run` throws for it, because this build
   *    carries no Kafka connector. `IngestPipeline.kafkaSource`
   *    (brokers and fetch tuning from `GraftConfig.kafkaOptions`) is the

@@ -13,7 +13,8 @@ import graft.ingest.GraftConfig
   * every other claim as a relative multiplier (one-shot vs incremental
   * mode, zstd size reduction, msgpack parse gain). This harness runs OUR
   * full collector path — `CollectorMain.run`: source scan → sampled schema
-  * inference → codegen'd `from_json` decode → flatten → date-partitioned
+  * inference → payload decode straight from the bytes
+  * (`graft.ingest.PayloadDecoder`) → flatten → date-partitioned
   * zstd parquet sink under an exactly-once checkpoint — over a synthetic
   * market-data-shaped topic and reports msg/s for each drain mode the
   * reference distinguishes, plus the measurable relative claims:
@@ -188,7 +189,7 @@ object IngestBench {
     if (phases("envelope")) {
       // the reference's ACTUAL hot path end-to-end: binary msgpack
       // payloads under the Kafka metadata envelope — per-topic codec
-      // detection + native msgpack_to_json decode + flatten +
+      // detection + payload decode from the bytes + flatten +
       // date-partitioned sink, all inside the timed drain
       val srcEnv = s"$work/src_envelope"
       shapeRows(spark.range(n).toDF(), 0L)

@@ -11,11 +11,14 @@ import org.apache.spark.sql.functions.udf
   *
   * Mirrors the reference's `decode_message` msgpack path
   * (`app/redpanda_to_parquet_collector.py:223-256`): payload bytes → a JSON
-  * string, which then flows through the same `from_json` → flatten pipeline
-  * as native JSON topics, so both formats share one downstream plan. The
-  * decoder is a scalar UDF (one allocation-light pass per record, no
-  * shuffle); on malformed input it returns null and the caller degrades to
-  * `raw_value`, matching the reference's fallback chain.
+  * string; on malformed input it returns null and the caller degrades to
+  * `raw_value`, matching the reference's fallback chain. [[toJson]]'s
+  * rendering is the contract the drain's decode keeps: the drain reads
+  * most msgpack payloads straight into the row
+  * (`graft.ingest.PayloadDecoder`), with the values `from_json` would give
+  * for this text, and renders and parses only the rest. The JSON text
+  * itself serves format detection, schema inference over the drain's
+  * sample, the `msgpack_to_json` SQL function and this scalar UDF.
   *
   * Supported families (all the reference's payloads use): nil, bool,
   * fix/u/int 8-64, float 32/64, fixstr/str8-32, bin8-32, fixarray/array16-32,

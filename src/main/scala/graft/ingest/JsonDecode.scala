@@ -9,8 +9,10 @@ import org.apache.spark.sql.types.{StructType, StringType}
   * Mirrors the reference's one-shot per-topic format detection
   * (`app/redpanda_to_parquet_collector.py:172-220`) rather than per-row
   * try/except: we infer the payload schema once from a bounded sample,
-  * then decode the full stream with the codegen'd `from_json`, a narrow
-  * map with no shuffle. The sample's ROWS are bounded, not its scan: the
+  * then decode the full stream with [[PayloadDecoder]], a narrow map with
+  * no shuffle that fills each row's payload struct straight from its
+  * bytes and hands only the rows it does not mirror to `from_json`. The
+  * sample's ROWS are bounded, not its scan: the
   * envelope drain's sample (`CollectorMain.envelopeSample`) keeps
   * O(partitions) rows through a filter parquet cannot push down, so its
   * job reads and decompresses every source row's `value` once before the
@@ -23,7 +25,7 @@ import org.apache.spark.sql.types.{StructType, StringType}
 object JsonDecode {
 
   /** Infer the payload schema from a bounded sample of non-null values.
-    * `spark.read.json` adds a `_corrupt_record` artifact field when the
+    * JSON inference adds a `_corrupt_record` artifact field when the
     * sample contains malformed rows — stripped here, or it would leak
     * into decoded lakes and the schema-lineage registry as a phantom
     * payload field. */
@@ -40,20 +42,23 @@ object JsonDecode {
     * `from_json`. Bound each sample component BEFORE the union instead
     * (the [[inferSchemaSpread]] shape).
     *
-    * The bounded sample is collected once and inferred over as a local
-    * Dataset: `spark.read.json(Dataset)` runs its input plan once to infer
-    * and AGAIN to build the DataFrame it returns (under AQE that re-runs
-    * every shuffle stage of the sample plan), though only `.schema` is
-    * used here. */
+    * The bounded sample is collected once and inferred over on the
+    * driver: `spark.read.json` over the sample frame would run its plan
+    * once to infer and AGAIN to build the DataFrame it returns (under AQE
+    * that re-runs every shuffle stage of the sample plan), though only
+    * `.schema` is used here. */
   def inferSchemaOver(spark: SparkSession, df: DataFrame, column: String): StructType =
     inferSchemaOver(spark, df.select(col(column).cast(StringType)).na.drop
       .as[String](Encoders.STRING).collect().toSeq)
 
   /** [[inferSchemaOver]] over payload texts already on the driver (nulls
-    * skipped), for a caller that decoded its bounded sample locally. */
+    * skipped), for a caller that decoded its bounded sample locally. The
+    * texts are inferred on the driver with no Spark job: the schema is
+    * `spark.read.json`'s over the same texts (its per-text inference, root
+    * merge and canonicalization, `GraftJsonBridge.inferJsonSchema`). */
   def inferSchemaOver(spark: SparkSession, texts: Seq[String]): StructType =
-    StructType(spark.read.json(spark.createDataset(texts.filter(_ != null))(Encoders.STRING))
-      .schema.fields.filterNot(_.name == "_corrupt_record"))
+    StructType(org.apache.spark.sql.catalyst.json.GraftJsonBridge.inferJsonSchema(spark, texts)
+      .fields.filterNot(_.name == "_corrupt_record"))
 
   /** [[inferSchema]] with a SPREAD sample: a plain `limit(n)` reads only
     * the first files Spark lists, so on an incrementally-appended source
@@ -95,73 +100,53 @@ object JsonDecode {
   }
 
   /** Decode `column` (JSON string) into a struct column named `as`,
-    * with raw_value fallback for rows that fail to parse.
-    *
-    * Malformed-row detection goes through an explicit corrupt-record
-    * field: in PERMISSIVE mode `from_json` returns a NON-NULL struct of
-    * nulls for unparseable input (its FailureSafeParser maps the error,
-    * it never nulls the struct), so a `col(as).isNull` test can never
-    * fire and the degrade-to-raw_value contract (collector `:240-241`)
-    * would silently lose the payload. With `columnNameOfCorruptRecord`
-    * in the parse schema the raw text lands in that field exactly when
-    * parsing failed; we hoist it to `raw_value`, null out the struct,
-    * and drop the marker field from the decoded shape. */
+    * with raw_value fallback for rows that fail to parse, under the
+    * schema inferred from a sample of the column ([[parseWithDegrade]]). */
   def decode(spark: SparkSession, df: DataFrame, column: String,
              as: String = "data", sampleSize: Int = 1000): DataFrame =
     parseWithDegrade(df, col(column).cast(StringType), as,
       inferSchema(spark, df, column, sampleSize))
 
   /** The PERMISSIVE/corrupt-record degrade protocol itself — the ONE body
-    * behind [[decode]] (JSON-string sources) and
+    * behind [[decode]] (JSON-string sources), the props drain and
     * `IngestPipeline.decodeEnvelope` (per-codec Kafka envelopes), so the
-    * degrade contract cannot drift between them: parse `textCol` into a
-    * struct column `as` under `payloadSchema`, hoist parse failures into
-    * `raw_value`, and null the struct on those rows — a row is NEVER
-    * dropped (collector `:240-241, 256, 400-402`).
+    * degrade contract cannot drift between them: decode `payload` into a
+    * struct column `as` under `payloadSchema`, put the payload text of
+    * every row that does not decode into `raw_value`, and null the struct
+    * on those rows — a row is NEVER dropped (collector `:240-241, 256,
+    * 400-402`).
     *
-    * `nullTextRaw` supplies `raw_value` when `textCol` itself is NULL —
-    * the msgpack-garbage branch, where the native decoder returns NULL
-    * and the raw bytes surface utf-8-cast. None (the plain-JSON case)
-    * leaves those rows with a NULL raw_value AND a null struct, matching
-    * `from_json`'s null-in/null-out.
+    * `payload` is a JSON text column or a binary one; `msgpack` (a boolean
+    * column, false by default) marks the rows whose bytes are msgpack. One
+    * [[PayloadDecoder]] call per row gives both columns. Its answer is the
+    * text path's: the row's JSON text (msgpack rendered by
+    * `Msgpack.toJson`, JSON as its own UTF-8 text) parsed by `from_json`
+    * under `payloadSchema` plus a corrupt-record field. A parse error puts
+    * the text in `raw_value` (PERMISSIVE `from_json` maps the error to a
+    * NON-null struct of nulls, so a null test on the struct alone would
+    * lose the payload); blank text, which `from_json` maps to a NULL
+    * struct with no corrupt record, does too; msgpack that does not
+    * render puts the raw bytes, read as UTF-8, there. A null payload gives
+    * a null struct and a null `raw_value`, `from_json`'s null-in/null-out.
     *
     * An EMPTY payload schema (nothing in the inference sample parsed as
     * JSON — e.g. the first drain of a topic whose payloads are all
-    * binary garbage) cannot go through `from_json`: Spark refuses to
-    * drop ALL fields of a struct, so the nonempty path would crash the
-    * drain instead of degrading. Every row then lands with
-    * `raw_value` = its payload text and a NULL (empty) struct. */
-  def parseWithDegrade(df: DataFrame, textCol: Column, as: String,
+    * binary garbage) parses nothing: every row lands with `raw_value` =
+    * its payload text and a NULL (empty) struct. */
+  def parseWithDegrade(df: DataFrame, payload: Column, as: String,
                        payloadSchema: StructType,
-                       nullTextRaw: Option[Column] = None): DataFrame = {
-    val corrupt = "_graft_corrupt"
-    // spark.read.json adds a "_corrupt_record" field when the INFERENCE
+                       msgpack: Column = lit(false)): DataFrame = {
+    // JSON inference adds a "_corrupt_record" field when the INFERENCE
     // sample contains malformed rows — strip it, or the decoded struct
-    // would carry a duplicate of our marker as a payload field
-    val fields = payloadSchema.fields.filterNot(_.name == "_corrupt_record")
-    require(!fields.exists(_.name == corrupt),
-      s"payload schema collides with the internal corrupt-record field $corrupt")
-    def withNullText(parsed: Column): Column = nullTextRaw match {
-      case Some(fb) => when(textCol.isNull, fb).otherwise(parsed)
-      case None     => parsed
-    }
-    if (fields.isEmpty)
-      df.withColumn("raw_value", withNullText(textCol))
-        .withColumn(as, lit(null).cast(StructType(Nil)))
-    else {
-      val parseSchema = StructType(fields).add(corrupt, StringType)
-      df.withColumn(as, from_json(textCol, parseSchema,
-          Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> corrupt)))
-        // two failure surfaces: parse errors land in the corrupt field
-        // (the struct is NON-null — FailureSafeParser maps the error),
-        // but EMPTY/BLANK text returns a NULL struct with NO corrupt
-        // record at all — without the second branch a blank payload
-        // would silently lose its text instead of degrading
-        .withColumn("raw_value", withNullText(
-          coalesce(col(s"$as.$corrupt"), when(col(as).isNull, textCol))))
-        .withColumn(as,
-          when(col("raw_value").isNotNull, lit(null)).otherwise(col(as).dropFields(corrupt)))
-    }
+    // would carry it as a payload field
+    val fields = StructType(payloadSchema.fields.filterNot(_.name == "_corrupt_record"))
+    require(!fields.exists(_.name == PayloadDecoder.CorruptField),
+      s"payload schema collides with the internal corrupt-record field ${PayloadDecoder.CorruptField}")
+    val decoded = "_graft_decoded"
+    df.withColumn(decoded, PayloadDecoder.column(df.sparkSession, fields, payload, msgpack))
+      .withColumn(as, col(s"$decoded.data"))
+      .withColumn("raw_value", col(s"$decoded.raw_value"))
+      .drop(decoded)
   }
 
   /** decode + flatten in one step: the reference's per-record pipeline

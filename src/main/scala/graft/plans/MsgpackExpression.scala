@@ -121,12 +121,4 @@ object GraftExtensions {
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
-
-  /** Column form of [[MsgpackToJsonExpr]] with no per-session registry
-    * round-trip — the decode callers (envelope ingest) shouldn't require
-    * extension registration just to build a plan. */
-  def msgpackToJsonColumn(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.classic.{GraftExpressionBridge => B}
-    B.column(MsgpackToJsonExpr(B.expression(c)))
-  }
 }

@@ -18,11 +18,12 @@ import graft.ingest.GraftConfig
   * stopped, so the drain needs no lake-mined offset ledger.
   *
   * Source here is a file stream over the testdata shape (no broker in the
-  * container); the Kafka variant swaps in `readStream.format("kafka")` with
-  * the config's fetch tuning ([[GraftConfig.kafkaOptions]], defaulting to
-  * the reference's collector `:332-337` values) — everything downstream is
-  * identical because both sources produce the same (metadata + payload)
-  * columns.
+  * container). [[kafkaSource]] builds the broker read with the config's
+  * fetch tuning ([[GraftConfig.kafkaOptions]], defaulting to the
+  * reference's collector `:332-337` values) and emits the same 5-column
+  * envelope the file source carries, but no drain reads it:
+  * `CollectorMain.run` throws for kafka mode, so the file-source drains
+  * below are the only ones that run.
   */
 object IngestPipeline {
 
@@ -34,8 +35,8 @@ object IngestPipeline {
     * is a runtime string lookup, so this compiles with NO connector on the
     * classpath; actually running it needs the `spark-sql-kafka-0-10`
     * connector jars (not present in the Spark distribution's jars) AND a
-    * live broker — the file-source twin below exercises the identical
-    * downstream pipeline without either. */
+    * live broker. No drain is wired to it (`CollectorMain.run` throws for
+    * kafka mode); KafkaIntegrationSpec reads it against a live broker. */
   def kafkaSource(spark: SparkSession, cfg: GraftConfig, topics: String,
                   startingOffsets: String = "earliest"): DataFrame =
     spark.readStream
@@ -261,11 +262,9 @@ object IngestPipeline {
     * the SAME corrupt-record body as [[decodeEnvelope]] and
     * `JsonDecode.decode` — so a malformed props row lands with its raw
     * text in `raw_value` and a null payload struct (collector
-    * `:240-241`): a bare PERMISSIVE `from_json` returns a NON-null
-    * struct of nulls for garbage and the subsequent `drop("props")`
-    * would destroy the only copy of the payload text silently. An
-    * empty payload schema likewise degrades every row instead of
-    * crashing. */
+    * `:240-241`) instead of losing its only copy to the `drop("props")`
+    * below. An empty payload schema likewise degrades every row instead
+    * of crashing. */
   private def decodeAndDatePartition(stream: DataFrame,
                                      payloadSchema: StructType): DataFrame = {
     val fields = payloadSchema.fields.filterNot(_.name == "_corrupt_record")
@@ -276,46 +275,38 @@ object IngestPipeline {
         .drop("data", "props"))
   }
 
-  /** Per-topic payload→JSON-text expression: each topic's binary `value`
-    * decodes through its DETECTED codec — `msgpack_to_json` (native
-    * codegen expression) for msgpack topics, a utf-8 cast for JSON
-    * topics; topics absent from the map default to JSON. The map is a
-    * plan literal (topic count is small), so the branch folds into the
-    * scan's codegen stage — no join, no UDF. */
-  private def payloadJsonText(formats: Map[String, String]): org.apache.spark.sql.Column = {
-    val fmt = coalesce(
-      element_at(typedLit(formats), col("kafka_topic")), lit("json"))
-    when(fmt === "msgpack",
-        graft.plans.GraftExtensions.msgpackToJsonColumn(col("value")))
-      .otherwise(col("value").cast("string"))
-  }
+  /** Per-topic codec flag: true on the rows of the topics detected as
+    * msgpack, false on JSON topics and on topics absent from the map. The
+    * map is a plan literal (topic count is small), so the branch folds
+    * into the scan's codegen stage — no join, no UDF. */
+  private def msgpackTopic(formats: Map[String, String]): org.apache.spark.sql.Column =
+    coalesce(element_at(typedLit(formats), col("kafka_topic")), lit("json")) === "msgpack"
 
-  /** Kafka-envelope decode — the downstream [[kafkaSource]]'s projection
-    * actually feeds (collector `:324-411`): binary `value` under the
-    * 5-column metadata envelope, decoded per the topic's detected codec,
-    * its top level expanded, and date-partitioned off the BROKER timestamp
-    * (`:863-867` — the envelope has no payload `ts` contract).
-    * Undecodable payloads degrade to `raw_value` with a NULL payload
-    * struct (`:240-241, 256, 400-402`): msgpack garbage returns NULL from
-    * the native decoder (raw bytes surface utf-8-cast), JSON garbage
-    * lands in the corrupt-record field — either way the row SURVIVES
-    * with its metadata, it is never dropped. The degrade branch itself is
+  /** Kafka-envelope decode (collector `:324-411`): binary `value` under
+    * the 5-column metadata envelope — the shape [[kafkaSource]] would
+    * emit, and the file source the collector drains carries — decoded per
+    * the topic's detected codec, its top level expanded, and
+    * date-partitioned off the BROKER timestamp (`:863-867` — the envelope
+    * has no payload `ts` contract). Each payload goes from its bytes
+    * straight into the payload struct ([[graft.ingest.PayloadDecoder]]);
+    * only the rows that kernel does not mirror are rendered as JSON text
+    * and parsed by `from_json`. Undecodable payloads degrade to
+    * `raw_value` with a NULL payload struct (`:240-241, 256, 400-402`):
+    * msgpack garbage keeps its raw bytes read as UTF-8, JSON garbage its
+    * text — either way the row SURVIVES with its metadata, it is never
+    * dropped. The degrade branch itself is
     * [[graft.ingest.JsonDecode.parseWithDegrade]] — the SAME body
-    * [[graft.ingest.JsonDecode.decode]] runs on, so the contract cannot
-    * drift between the props and envelope paths; the msgpack-null case
-    * rides in through its `nullTextRaw` hook. An EMPTY inferred payload
+    * [[graft.ingest.JsonDecode.decode]] and the props drain run on, so
+    * the contract cannot drift between them. An EMPTY inferred payload
     * schema (first drain of a topic where nothing decodes as JSON)
-    * degrades every row to raw_value instead of crashing the drain —
-    * the shared body skips `from_json` entirely and this select skips
-    * the (nonexistent) payload columns. */
+    * degrades every row to raw_value instead of crashing the drain, and
+    * this select skips the (nonexistent) payload columns. */
   def decodeEnvelope(stream: DataFrame, formats: Map[String, String],
                      payloadSchema: StructType): DataFrame = {
     val payloadFields =
       payloadSchema.fields.filterNot(_.name == "_corrupt_record")
     val parsed = graft.ingest.JsonDecode.parseWithDegrade(
-      stream.withColumn("_json", payloadJsonText(formats)),
-      col("_json"), "data", payloadSchema,
-      nullTextRaw = Some(when(col("value").isNotNull, col("value").cast("string"))))
+      stream, col("value"), "data", payloadSchema, msgpack = msgpackTopic(formats))
     val metaAndRaw = Seq(col("kafka_topic"), col("kafka_partition"),
       col("kafka_offset"), col("kafka_timestamp"), col("kafka_key"), col("raw_value"))
     graft.sources.LakeWriter.withDatePath(

@@ -259,8 +259,9 @@ class CollectorMainSpec extends SparkSpec {
       quiesce()
     } finally sc.removeSparkListener(listener)
     assert(spark.read.parquet(s"$work/out/lake").count() == 800)
-    // 8 is what one such drain launches on this fixture
-    assert(jobs.get <= 8, s"${jobs.get} Spark jobs for one envelope drain")
+    // 7 is what one such drain launches on this fixture: the payload
+    // schema is inferred on the driver, with no job
+    assert(jobs.get <= 7, s"${jobs.get} Spark jobs for one envelope drain")
   }
 
   test("a second envelope drain reuses the first drain's generated classes") {

@@ -83,6 +83,47 @@ class EnvelopeIngestSpec extends SparkSpec {
     assert(spark.read.parquet(s"$work/out/lake").count() == 48L * 2 + 2)
   }
 
+  test("the drain's lake equals the text path's on the mixed fixture: rows and schema hash") {
+    // the text path the decode kernel replaced: the sample's payloads
+    // rendered as JSON text (msgpack_to_json or a UTF-8 cast) inferred by
+    // spark.read.json, and every payload parsed from that text by from_json
+    val work = Files.createTempDirectory("envelope_text_path").toString
+    val src = s"$work/src"
+    writeEnvelopeSource(src, 48)
+    CollectorMain.run(spark, GraftConfig(outputDir = s"$work/out", skipValidation = false),
+      "file", src)
+    val dest = s"$work/out/lake"
+    val batch = spark.read.parquet(src)
+    val sample = CollectorMain.envelopeSample(batch, CollectorMain.identityStats(batch)._2)
+    val formats = CollectorMain.topicFormats(sample)
+    val texts = sample.toSeq.map { r =>
+      val v = r.getAs[Array[Byte]](1)
+      if (formats.get(r.getString(0)).contains("msgpack")) Msgpack.toJson(v)
+      else new String(v, "UTF-8")
+    }.filter(_ != null)
+    val textSchema = StructType(spark.read.json(spark.createDataset(texts)(
+      org.apache.spark.sql.Encoders.STRING)).schema.fields.filterNot(_.name == "_corrupt_record"))
+    assert(graft.sources.LakeWriter.schemaLineage(spark, dest).map(_._2) ==
+      Seq(graft.sources.LakeWriter.schemaHash(textSchema)))
+
+    val mp = coalesce(element_at(typedLit(formats), col("kafka_topic")), lit("json")) === "msgpack"
+    val text = when(mp, Msgpack.msgpackToJson(col("value"))).otherwise(col("value").cast("string"))
+    val viaText = graft.sources.LakeWriter.withDatePath(
+      PayloadDecodeProps.textPath(batch, text, "data", textSchema,
+          when(col("value").isNotNull, col("value").cast("string")))
+        .select(Seq("kafka_topic", "kafka_partition", "kafka_offset", "kafka_timestamp",
+          "kafka_key", "raw_value").map(col) :+ col("data.*"): _*),
+      "kafka_timestamp")
+    val lake = spark.read.parquet(dest)
+    assert(lake.columns.toSet == viaText.columns.toSet)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(lake.columns.map(c => if (c == "date_path") col(c).cast("string") else col(c)): _*)
+        .collect().toSeq.map(PayloadDecodeProps.canon).sorted
+    val landed = rows(lake)
+    assert(landed.length == 48 * 2 + 2)
+    assert(landed == rows(viaText))
+  }
+
   test("envelope redeliveries dedup on (partition, offset) in both modes") {
     // broker redelivery: the SAME (topic, partition, offset) messages
     // appear twice in the source — the reference's dedup key is the

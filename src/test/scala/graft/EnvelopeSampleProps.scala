@@ -86,7 +86,7 @@ object EnvelopeSampleProps extends Properties("graft.envelopesample") {
         (col("kafka_offset") < col("_min_off") + 64 ||
           col("kafka_offset") > col("_max_off") - 64).as("_edge"))
       .where(col("_stride") || col("_edge"))
-    val decoded = graft.plans.GraftExtensions.msgpackToJsonColumn(col("value"))
+    val decoded = Msgpack.msgpackToJson(col("value"))
     val formats = sample.groupBy("kafka_topic")
       .agg(avg(when(decoded.isNotNull, 1.0).otherwise(0.0)).as("ok"))
       .where(col("kafka_topic").isNotNull).collect()

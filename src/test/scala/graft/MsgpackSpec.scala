@@ -34,6 +34,34 @@ class MsgpackSpec extends AnyFunSuite {
     assert(Msgpack.toJson("not msgpack json".getBytes) == null)    // trailing junk
   }
 
+  test("rendering contract the payload decode kernel mirrors") {
+    def f64(d: Double) = Array(0xcb.toByte) ++
+      (7 to 0 by -1).map(i => (java.lang.Double.doubleToRawLongBits(d) >> (8 * i)).toByte)
+    def f32(f: Float) = Array(0xca.toByte) ++
+      (3 to 0 by -1).map(i => (java.lang.Float.floatToRawIntBits(f) >> (8 * i)).toByte)
+    // an integral double below 1e15 in magnitude renders as an integer,
+    // so -0.0 loses its sign; from 1e15 on it renders as float text
+    assert(Msgpack.toJson(f64(-0.0)) == "0")
+    assert(Msgpack.toJson(f64(999999999999999.0)) == "999999999999999")
+    assert(Msgpack.toJson(f64(-999999999999999.0)) == "-999999999999999")
+    assert(Msgpack.toJson(f64(1e15)) == "1.0E15")
+    assert(Msgpack.toJson(f64(1.5)) == "1.5")
+    // float32 widens to double before rendering
+    assert(Msgpack.toJson(f32(0.1f)) == 0.1f.toDouble.toString)
+    assert(Msgpack.toJson(f32(0.1f)) != "0.1")
+    assert(Msgpack.toJson(f32(-2.0f)) == "-2")
+    // uint64 above Long.MaxValue renders as unsigned text
+    assert(Msgpack.toJson(Array(0xcf.toByte) ++ Array.fill(8)(0xff.toByte)) ==
+      "18446744073709551615")
+    // no JSON text for NaN, ±Inf, trailing bytes or a non-string map key
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).foreach { d =>
+      assert(Msgpack.toJson(f64(d)) == null, s"for $d")
+      assert(Msgpack.toJson(f32(d.toFloat)) == null, s"for float32 $d")
+    }
+    assert(Msgpack.toJson(Msgpack.encode(Map("a" -> 1)) :+ 0.toByte) == null)
+    assert(Msgpack.toJson(Array(0x81, 0x01, 0x01).map(_.toByte)) == null)
+  }
+
   test("format detection") {
     val mp = (1 to 20).map(i => Msgpack.encode(Map("k" -> i)))
     val js = (1 to 20).map(i => s"""{"k": $i}""".getBytes("UTF-8"))
